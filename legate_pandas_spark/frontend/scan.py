@@ -475,7 +475,7 @@ def bucket_of(bounds: list, key):
     over a primitive literal array and beats the codegen-able alternative:
     a balanced CASE WHEN binary-search tree (6 comparisons per row instead
     of 63) measured 1.36-1.42x SLOWER across the scan family (r12
-    interleaved A/B, tools/ab_bucket_r12.py) — the ~127-node WHEN tree costs
+    interleaved A/B, OPTIMIZATION_r12.md negative result #6) — the ~127-node WHEN tree costs
     more per evaluation than the tight HOF loop, the same lesson as the
     unrolled-dot negative result. Kept as the HOF on that evidence."""
     if not bounds:

@@ -571,11 +571,11 @@ def pagerank(
     # is aggregated ONCE instead of three times (deg + nodes distinct +
     # count distinct — guide §2.4, remove repeated passes outright). deg is
     # node-sized, so the extra persist is bounded.
-    import os as _os
-
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    if "nodeg" not in _os.environ.get("SPARK_GRAFT_AB_PERSIST", ""):  # r13 A/B
-        deg = deg.persist(StorageLevel.MEMORY_AND_DISK)
+    deg = (
+        edges.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # fold the out-degree into the edge table ONCE — each iteration then needs
     # a single rank join instead of rank + degree joins over the edges
     wedges = (
@@ -711,12 +711,12 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-runs the fact-scale lineitem ⋈ orders join — the before-plan showed
     # 40 parquet scans for triangle_count (guide §2.4/§5: this is the repo's
     # own pagerank/LSH persist discipline, it was just missing here)
-    import os as _os
-
-    _ab = _os.environ.get("SPARK_GRAFT_AB_PERSIST", "")  # r13 cold A/B gate
-    cp = li.join(od, "ok").select("p", "m", "c").distinct()
-    if "nocp" not in _ab:
-        cp = cp.persist(StorageLevel.MEMORY_AND_DISK)
+    cp = (
+        li.join(od, "ok")
+        .select("p", "m", "c")
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # basket cap (round-10, found by the Zipf-skew gate): a hot part bought
     # by k customers in a month contributes C(k,2) edges — 607 customers on
     # the skew corpus's hot key vs max 7 on uniform sf0.1, densifying the
@@ -751,9 +751,8 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the edge list feeds degree counting AND ranking in triangle_count
         # (2 consumers) / both union branches in LPA and its CacheManager
         # twin — persist so the bucket self-join above runs once per corpus
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if "noe0" not in _ab:
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
     return out
 
 

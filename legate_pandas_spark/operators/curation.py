@@ -439,22 +439,12 @@ def repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collision (expected at ~100 TB gram cardinalities) cannot merge two
     # grams' doc counts — the shuffle still routes by the 8-byte hash; raw
     # compares only happen on hash-equal runs inside each partition's sort.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_AB") == "0":  # r13 A/B: old hash-only key
-        exploded = outer_explode(grams, "gs", "g", "doc_id").select(
-            "doc_id", F.xxhash64("g").alias("gh")
-        )
-        windowed = exploded.withColumn(
-            "nd", F.count(F.lit(1)).over(Window.partitionBy("gh"))
-        )
-    else:
-        exploded = outer_explode(grams, "gs", "g", "doc_id").select(
-            "doc_id", F.xxhash64("g").alias("gh"), "g"
-        )
-        windowed = exploded.withColumn(
-            "nd", F.count(F.lit(1)).over(Window.partitionBy("gh", "g"))
-        )
+    exploded = outer_explode(grams, "gs", "g", "doc_id").select(
+        "doc_id", F.xxhash64("g").alias("gh"), "g"
+    )
+    windowed = exploded.withColumn(
+        "nd", F.count(F.lit(1)).over(Window.partitionBy("gh", "g"))
+    )
     per_doc = windowed.groupBy("doc_id").agg(
         F.sum((F.col("nd") >= 2).cast("int")).cast("bigint").alias("dup_ngrams"),
         F.count(F.lit(1)).cast("bigint").alias("total_ngrams"),
@@ -1590,19 +1580,6 @@ def decontaminate_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame
     corp = wins.filter(~is_bench).select(
         "doc_id", "pos", F.xxhash64("w").alias("wh"), "w"
     )
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_AB") == "0":  # r13 A/B: old hash-only
-        return (
-            corp.drop("w")
-            .join(F.broadcast(bench.drop("bw")), "wh")
-            .groupBy("doc_id", "bench_id")
-            .agg(
-                F.count(F.lit(1)).alias("matched_windows"),
-                F.min("pos").alias("span_start"),
-                (F.max("pos") + (_SUB_W - 1)).alias("span_end"),
-            )
-        )
     return (
         corp.join(F.broadcast(bench), "wh")
         .filter(F.col("w") == F.col("bw"))
@@ -1688,13 +1665,7 @@ def boilerplate_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
     ).select("doc_id", "source", F.xxhash64("g").alias("gh"), "g")
-    import os as _os
-
-    _keys = (
-        ["source", "gh"]
-        if _os.environ.get("SPARK_GRAFT_AB") == "0"  # r13 A/B: old hash-only
-        else ["source", "gh", "g"]
-    )
+    _keys = ["source", "gh", "g"]
     src = docs.groupBy("source").agg(F.count(F.lit(1)).alias("nd"))
     df = grams.groupBy(*_keys).agg(F.count(F.lit(1)).alias("c"))
     bp = (

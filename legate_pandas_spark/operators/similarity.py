@@ -90,21 +90,9 @@ def _make_seq_dot_pd():
 _seq_dot_pd = None
 
 
-def _use_kernel() -> bool:
-    """Arrow-kernel kill switch (measurement A/B + per-deploy tuning): the
-    expression HOF fold and the numpy kernel are value-identical, so either
-    path satisfies every oracle; SPARK_GRAFT_VEC_KERNEL=0 selects the
-    expression form at query-build time."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_VEC_KERNEL", "1") != "0"
-
-
 def _seq_dot(a: Column, b: Column) -> Column:
     """Arrow/numpy exact-order dot (lazily-built pandas_udf singleton)."""
     global _seq_dot_pd
-    if not _use_kernel():
-        return _dot(a, b)
     if _seq_dot_pd is None:
         _seq_dot_pd = _make_seq_dot_pd()
     return _seq_dot_pd(a, b)
@@ -136,8 +124,6 @@ _seq_cos_pd = None
 def _seq_cos(a: Column, b: Column) -> Column:
     """Fused exact-order cosine — one Arrow pass for dot + both norms."""
     global _seq_cos_pd
-    if not _use_kernel():
-        return cosine(a, b)
     if _seq_cos_pd is None:
         _seq_cos_pd = _make_seq_cos_pd()
     return _seq_cos_pd(a, b)
@@ -169,12 +155,6 @@ _seq_sqdist_pd = None
 def _seq_sqdist(a: Column, b: Column) -> Column:
     """Exact-order squared L2 distance ((x-z)*(x-z) left-fold)."""
     global _seq_sqdist_pd
-    if not _use_kernel():
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, z: (x - z) * (x - z)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
     if _seq_sqdist_pd is None:
         _seq_sqdist_pd = _make_seq_sqdist_pd()
     return _seq_sqdist_pd(a, b)
@@ -203,19 +183,9 @@ def _proj_pd(mat):
     return proj
 
 
-def _proj(mat, col: Column) -> Column:
-    """K projection dots of ``col`` against the rows of ``mat`` — Arrow
-    kernel, or the literal-matrix expression fold under the kill switch
-    (identical left-fold float sequence either way)."""
-    if _use_kernel():
-        return _proj_pd(mat)(col)
-    rows = [F.array(*[F.lit(float(w)) for w in r]) for r in mat]
-    return F.array(*[_dot(col, r) for r in rows])
-
-
 def _plane_matrix(j0: int, j1: int):
-    """(64, j1-j0) float64 hyperplane matrix — same literals the expression
-    path builds with F.lit(float(w))."""
+    """(64, j1-j0) float64 hyperplane matrix — same literals as the oracle's
+    ``_bucket_sql`` planes."""
     import numpy as np
 
     return np.array(
@@ -250,24 +220,6 @@ def _lsh_tables_pd(n_tables: int):
         return pd.Series(out)
 
     return tables
-
-
-def _lsh_tables(n_tables: int, col: Column) -> Column:
-    """array of ``n_tables`` 8-bit bucket signatures for ``col`` — Arrow
-    kernel, or the per-plane sign-test expressions under the kill switch
-    (same sign tests on the same exact-order dots)."""
-    if _use_kernel():
-        return _lsh_tables_pd(n_tables)(col)
-    tables = []
-    for t in range(n_tables):
-        bits = []
-        for j in range(t * N_HYPERPLANES, (t + 1) * N_HYPERPLANES):
-            plane = F.array(*[F.lit(float(w)) for w in _hyperplane(j)])
-            bits.append(
-                F.when(_dot(col, plane) > 0, F.lit("1")).otherwise(F.lit("0"))
-            )
-        tables.append(F.concat(*bits))
-    return F.array(*tables)
 
 
 def _norm(a: Column) -> Column:
@@ -401,7 +353,7 @@ def ann_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed = emb.select(
         "vec_id",
         "label",
-        F.element_at(_lsh_tables(1, F.col("embedding")), 1).alias("bucket"),
+        F.element_at(_lsh_tables_pd(1)(F.col("embedding")), 1).alias("bucket"),
     )
     return bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_vectors"),
@@ -1389,7 +1341,7 @@ def _cosine_lsh_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         "embedding",
         F.sqrt(_seq_dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-        _lsh_tables(_LSH_TABLES, F.col("embedding")).alias("_bkts"),
+        _lsh_tables_pd(_LSH_TABLES)(F.col("embedding")).alias("_bkts"),
     ).persist()
     bucketed = sig.select(
         "vec_id",
@@ -1719,7 +1671,7 @@ def jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 16 projection dots and both squared distances run through the
     # exact-order Arrow kernels (round 12; same left-fold float sequence as
     # the retired expression folds — see _seq_dot_pd)
-    y = _proj([_jl_row(j) for j in range(_JL_K)], F.col("embedding"))
+    y = _proj_pd([_jl_row(j) for j in range(_JL_K)])(F.col("embedding"))
     proj = emb.select("vec_id", v.alias("v"), y.alias("y")).persist()
     anchors = proj.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("anchor_id"),

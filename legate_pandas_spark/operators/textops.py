@@ -1003,36 +1003,25 @@ def bm25_bench_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     #       longer merge postings or match a query term it doesn't equal
     #       (at ~100 TB, ≳2^32 distinct terms, a 64-bit birthday collision
     #       is expected — hash-only keys silently corrupt there).
-    import os as _os
-
-    _ab_old = _os.environ.get("SPARK_GRAFT_AB") == "0"  # r13 A/B: r12 form
     qterms = (
         base.filter(is_q)
         .select(
             F.col("doc_id").alias("query_id"),
             F.xxhash64("term").alias("th"),
-            *([] if _ab_old else ["term"]),
+            "term",
         )
         .distinct()
         .persist()
     )
     qvocab = qterms.select("th").distinct()
-    if _ab_old:
-        tf = (
-            base.filter(~is_q)
-            .groupBy("doc_id", "dl", F.xxhash64("term").alias("th"))
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .persist()
-        )
-    else:
-        tf = (
-            base.filter(~is_q)
-            .withColumn("th", F.xxhash64("term"))
-            .join(F.broadcast(qvocab), "th", "left_semi")
-            .groupBy("doc_id", "dl", "th", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .persist()
-        )
+    tf = (
+        base.filter(~is_q)
+        .withColumn("th", F.xxhash64("term"))
+        .join(F.broadcast(qvocab), "th", "left_semi")
+        .groupBy("doc_id", "dl", "th", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .persist()
+    )
     # corpus stats straight from the un-exploded token table (r12, guide
     # §2.4): n_docs/avgdl were a full groupBy(doc_id) of the tf table — a
     # corpus-scale exchange — but every doc with a non-null token array
@@ -1048,11 +1037,7 @@ def bm25_bench_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the term), so grouping the filtered tf by (th, term) is exact; rows a
     # collision admitted form their own (th, term) group and never match a
     # query term below.
-    if _ab_old:
-        tfq = tf.join(F.broadcast(qvocab), "th", "left_semi")
-        df = tfq.groupBy("th").agg(F.count(F.lit(1)).alias("df"))
-    else:
-        df = tf.groupBy("th", "term").agg(F.count(F.lit(1)).alias("df"))
+    df = tf.groupBy("th", "term").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(
         F.lit(1.0)
         + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
@@ -1067,9 +1052,9 @@ def bm25_bench_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.lit(1.0 - _BM25_B) + F.lit(_BM25_B) * F.col("dl") / F.col("avgdl"))
         )
     )
-    _jk = ["th"] if _ab_old else ["th", "term"]
+    _jk = ["th", "term"]
     scored = (
-        (tfq if _ab_old else tf).join(F.broadcast(qterms), _jk)
+        tf.join(F.broadcast(qterms), _jk)
         .join(F.broadcast(df), _jk)
         .crossJoin(F.broadcast(stats))
         .groupBy("query_id", "doc_id")

@@ -1,16 +1,23 @@
 """SparkSession bootstrap tuned for the engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same config
-block is what we would ship as ``spark-defaults`` on a real cluster:
+``_CONF`` is the one conf table; it is what we would ship as
+``spark-defaults`` on a real cluster:
 
 * AQE on (runtime re-plan, partition coalescing, skew-join splitting) — replaces the
   reference's weighted-partition rebalancing (core/runtime.py:1001-1008).
 * Arrow on for any pandas interchange (Pandas UDFs, toPandas).
-* Shuffle partitions sized for the local core count; on a 1000-executor cluster this
-  would be ~2-3x total cores, and AQE coalesces down.
 * ``nanosAsLong`` so parquet TIMESTAMP(NANOS) columns (events.ts) are readable;
   sources.tables converts them to microsecond timestamps (documented ns→µs
   truncation, SURVEY §1.2).
+
+Shuffle partitions are one per core (AQE coalesces below that when stages are
+tiny; on a cluster this should be 2-3x total cores).
+
+``get_spark`` builds a local session on ``local[$SPARK_GRAFT_CPUS]`` (default
+32) with the whole table. ``ensure_runtime_conf`` brings a session someone else
+built (the correctness driver passes its own to ``queries()``) to the same
+SQL conf: every key of the table that is runtime-modifiable (the
+``spark.sql.*`` keys), plus one shuffle partition per core of that session.
 """
 
 from __future__ import annotations
@@ -19,7 +26,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-_TUNED_CONF = {
+_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -34,13 +41,9 @@ _TUNED_CONF = {
     # at runtime when every post-shuffle partition is under the local-map
     # threshold (sized = advisory partition size, the guide's pairing), so
     # partitions that outgrow the threshold at cluster scale keep the
-    # sort-merge spill path. Overridable via env for A/B.
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "SPARK_GRAFT_PREFER_SMJ", "false"
-    ),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "SPARK_GRAFT_SHJ_LOCALMAP", "64m"
-    ),
+    # sort-merge spill path.
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     # let a join reuse children already hash-partitioned on a SUBSET of its
     # keys (e.g. the mortgage combine merge on (loan, year, month) over two
@@ -68,52 +71,23 @@ def get_spark(app_name: str = "legate_pandas_spark", cpus: int | None = None) ->
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
-    for k, v in _TUNED_CONF.items():
+    for k, v in _CONF.items():
         builder = builder.config(k, v)
-    # scale-adaptive, not a local[32] constant (guide §2.2): one shuffle
-    # partition per core (AQE coalesces below that when stages are tiny); on
-    # a cluster this should be 2-3x total cores — override via
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS. Resolved HERE from the same ``cpus``
-    # that sizes the master string (ADVICE r12: an explicit get_spark(cpus=N)
-    # caller gets N partitions, not the env default), env override winning.
-    # At the default 32-core bench this resolves to the same 32 the driver
-    # has always measured.
-    builder = builder.config(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)),
-    )
+    # sized from the same ``cpus`` as the master string (ADVICE r12: an
+    # explicit get_spark(cpus=N) caller gets N partitions)
+    builder = builder.config("spark.sql.shuffle.partitions", str(cpus))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
 
 
 def ensure_runtime_conf(spark: SparkSession) -> None:
-    """Best-effort apply runtime-settable confs to an externally created session
-    (the correctness driver passes its own SparkSession to ``queries()``)."""
-    settings = {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # local[k] test scale: 200 default shuffle partitions is pure
-        # overhead; one per core, env-overridable (see _TUNED_CONF)
-        "spark.sql.shuffle.partitions": os.environ.get(
-            "SPARK_GRAFT_SHUFFLE_PARTITIONS",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": "64m",
-        "spark.sql.join.preferSortMergeJoin": os.environ.get(
-            "SPARK_GRAFT_PREFER_SMJ", "false"
-        ),
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-            "SPARK_GRAFT_SHJ_LOCALMAP", "64m"
-        ),
-        "spark.sql.requireAllClusterKeysForCoPartition": "false",
-        "spark.sql.session.timeZone": "UTC",
-    }
-    for k, v in settings.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this build — sources.tables has a fallback
+    """Apply the runtime-modifiable part of ``_CONF`` to an externally created
+    session, plus one shuffle partition per core of that session."""
+    conf = spark.conf
+    for k, v in _CONF.items():
+        if conf.isModifiable(k):
+            conf.set(k, v)
+    conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )

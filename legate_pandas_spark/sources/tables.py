@@ -33,31 +33,15 @@ TABLES = (
 BROADCAST_DIMS = {"region", "nation", "supplier"}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing the events ns-timestamp column."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
-        return _read_parquet(spark, path)
+        return spark.read.parquet(path)
 
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    try:
-        df = _read_parquet(spark, path)
-    except Exception:
-        # Session refused the legacy conf at runtime: fall back to an Arrow-side
-        # cast. Only acceptable because `events` is read-once; flagged for scale.
-        import pyarrow.parquet as pq
-
-        tbl = pq.read_table(path)
-        pdf = tbl.to_pandas()
-        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-        return spark.createDataFrame(pdf)
+    # runtime-modifiable SQL conf: also holds on a driver-supplied session
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
     if dict(df.dtypes).get("ts") == "bigint":
         # integer div, NOT float division: epoch-ns (~1.7e18) exceeds double's
         # 53-bit mantissa, so ts/1000.0 would drift by up to ~1µs
