@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from legate_pandas_spark.operators import outer_explode, query
-from legate_pandas_spark.sources.tables import load_table
+from legate_pandas_spark.sources.tables import load_table, memo
 
 _N = 5  # contamination n-gram width
 _BENCH_MOD = 97  # doc_id % _BENCH_MOD == 0 -> held-out "benchmark" membership
@@ -2397,41 +2397,31 @@ def _sql_ingest_tag() -> str:
     """
 
 
-# Session memo for the ingest-tag stores (VERDICT r9 Next #2): the digest +
-# signature stores are the NIGHTLY BATCH JOB's persisted artifacts — at 100 TB
-# they live as parquet tables and the ingest tagging pass only ever JOINS
-# them. Rebuilding them inside every invocation made the catalog row measure
-# the store build, not the tagging pass. Memoized per (session, sf_dir) with
-# the corpus snapshot token (round-9 ADVICE precedent: a rewritten corpus
-# invalidates; replacement unpersists the stale stores, bounding the memo to
-# one live pair per sf_dir).
-_INGEST_STORE_CACHE: dict = {}
-
-
 def _ingest_stores(spark: SparkSession, sf_dir: str):
-    from legate_pandas_spark.operators.dedup import _corpus_snapshot_token
+    """The digest + signature stores, session-memoized: they are the nightly
+    batch job's persisted artifacts (at 100 TB, parquet tables the ingest
+    tagging pass only joins), so the catalog row measures the tagging pass,
+    not the store build. ``persist()`` is idempotent and re-registers the
+    stores if a blanket clearCache() dropped their blocks mid-session."""
     from legate_pandas_spark.streaming.documents import build_signature_store
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    token = _corpus_snapshot_token(sf_dir)
-    hit = _INGEST_STORE_CACHE.get(key)
-    if hit is not None and hit[0] == token:
-        # persist() is idempotent; it also re-registers the cache if a
-        # blanket clearCache() dropped the blocks mid-session
-        return hit[1].persist(), hit[2].persist()
-    if hit is not None:
-        hit[1].unpersist()
-        hit[2].unpersist()
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    digest_store = (
-        corpus.select(F.md5("text").alias("h")).distinct().persist()
+    def build():
+        docs = load_table(spark, sf_dir, "documents")
+        corpus = docs.filter(F.col("doc_id") % 4 != 0)
+        digest_store = corpus.select(F.md5("text").alias("h")).distinct().persist()
+        sig_store = build_signature_store(corpus).persist()
+        digest_store.count()
+        sig_store.count()
+        return digest_store, sig_store
+
+    def release(stores) -> None:
+        for store in stores:
+            store.unpersist()
+
+    digest_store, sig_store = memo(
+        spark, "ingest_stores", sf_dir, "documents", build, release=release
     )
-    sig_store = build_signature_store(corpus).persist()
-    digest_store.count()
-    sig_store.count()
-    _INGEST_STORE_CACHE[key] = (token, digest_store, sig_store)
-    return digest_store, sig_store
+    return digest_store.persist(), sig_store.persist()
 
 
 @query("ingest_tag_report", oracle=_sql_ingest_tag())

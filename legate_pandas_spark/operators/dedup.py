@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from legate_pandas_spark.operators import outer_explode, query
-from legate_pandas_spark.sources.tables import load_table
+from legate_pandas_spark.sources.tables import load_table, memo
 
 N_MINHASH = 8  # 2 md5 digests x 4 slices
 N_BANDS = 4  # bands of 2 minhashes each
@@ -448,40 +448,7 @@ def _verified_rep_pairs(sh: DataFrame, reps: DataFrame) -> DataFrame:
     )
 
 
-# The clone-mass verdict is a CORPUS statistic (like AQE's table stats), so
-# it is memoized per (session, sf_dir): the first dedup query in a session
-# pays the probe action, later ones reuse the boolean. Heavy compute is
-# never memoized across queries (see lsh_verified_pairs refresh semantics) —
-# only this scalar. Entries carry a data snapshot token (round-9 ADVICE):
-# rewriting the corpus under sf_dir mid-session invalidates the verdict, and
-# replacement (not accumulation) bounds the memo to one entry per sf_dir.
-_PROBE_CACHE: dict = {}
-
-
-def _corpus_snapshot_token(sf_dir: str, table: str = "documents") -> tuple:
-    """Snapshot token of a corpus table: (name, mtime_ns, size) of every
-    file under <table>.parquet. Cheap driver-side stat calls — folded into
-    the session memos so a rewritten corpus never reuses a stale clone-mass
-    verdict, pair list, or routing decision."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    entries = []
-    try:
-        if os.path.isdir(path):
-            for root, _, files in os.walk(path):
-                for fn in sorted(files):
-                    st = os.stat(os.path.join(root, fn))
-                    entries.append((fn, st.st_mtime_ns, st.st_size))
-        elif os.path.exists(path):
-            st = os.stat(path)
-            entries.append((os.path.basename(path), st.st_mtime_ns, st.st_size))
-    except OSError:  # racing rewrite: treat as always-stale
-        return ("unstattable",)
-    return tuple(entries)
-
-
-def _clone_mass_probe(gstats: DataFrame, cache_key=None, token=None) -> bool:
+def _clone_mass_probe(spark: SparkSession, sf_dir: str, gstats: DataFrame) -> bool:
     """EXACT duplicate-mass probe on the persisted identity-group table —
     one tiny aggregate action. Returns True when the rep indirection should
     run. The direct (unguarded) pipeline is exact on ANY corpus — identical
@@ -491,31 +458,29 @@ def _clone_mass_probe(gstats: DataFrame, cache_key=None, token=None) -> bool:
     Σ C(gsize,2) ≤ max_gsize·clone_mass/2, so requiring clone_mass ≤
     max(16, 1% of docs) AND max_gsize ≤ 8 keeps it linear in corpus size.
     Being exact (not an approx-distinct estimate), the probe can never
-    underestimate clone mass and fall into the k² blowup."""
-    if cache_key is not None:
-        hit = _PROBE_CACHE.get(cache_key)
-        if hit is not None and hit[0] == token:
-            return hit[1]
-    row = gstats.agg(
-        F.max("gsize").alias("mx"),
-        F.count(F.lit(1)).alias("groups"),
-        F.sum("gsize").alias("docs"),
-    ).first()
-    mx, groups, docs = row["mx"] or 1, row["groups"] or 0, row["docs"] or 0
-    clone_mass = docs - groups
-    verdict = clone_mass > max(16, 0.01 * docs) or mx > 8
-    if cache_key is not None:
-        _PROBE_CACHE[cache_key] = (token, verdict)
-    return verdict
+    underestimate clone mass and fall into the k² blowup.
+
+    The verdict is a corpus statistic (like AQE's table stats), so it is
+    session-memoized: the first dedup query pays the probe action, later ones
+    (all three callers share the entry) reuse the boolean."""
+
+    def probe() -> bool:
+        row = gstats.agg(
+            F.max("gsize").alias("mx"),
+            F.count(F.lit(1)).alias("groups"),
+            F.sum("gsize").alias("docs"),
+        ).first()
+        mx, groups, docs = row["mx"] or 1, row["groups"] or 0, row["docs"] or 0
+        return docs - groups > max(16, 0.01 * docs) or mx > 8
+
+    return memo(spark, "clone_mass", sf_dir, "documents", probe)
 
 
 def _lsh_pairs_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _doc_shingles(spark, sf_dir, persist=True)
     full, gstats = _identity_group_stats(sh)
     mh_cols = [f"mh{i}" for i in range(N_MINHASH)]
-    probe_key = (spark.sparkContext.applicationId, sf_dir)
-    token = _corpus_snapshot_token(sf_dir)
-    if not _clone_mass_probe(gstats, cache_key=probe_key, token=token):
+    if not _clone_mass_probe(spark, sf_dir, gstats):
         # pay-as-you-go (round-8): negligible clone mass ⇒ run the plain
         # unguarded pipeline over ALL docs — no gid stamping, no expansion
         # or within-group joins; within-group pairs surface naturally via
@@ -558,36 +523,28 @@ def _lsh_pairs_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross.unionByName(within)
 
 
-# Session-memoized verified-pair stage: dedup_minhash_lsh,
-# dedup_connected_components and cross_split_leakage all consume the SAME
-# (doc_a, doc_b, jaccard) list; composed audits in one session reuse the
-# persisted frame instead of re-deriving the whole LSH pipeline from raw
-# shingles (round-7 verdict Next #4 — same lazy-persist discipline as
-# pack_training_sequences). Keyed by (Spark applicationId, sf_dir); the
-# cached frames are pair-sized (hundreds of rows at test scale, and always
-# O(near-dup pairs) — the smallest frame in the pipeline).
-_PAIR_STAGE_CACHE: dict = {}
-
-
 def lsh_verified_pairs(
     spark: SparkSession, sf_dir: str, refresh: bool = False
 ) -> DataFrame:
-    """``refresh=True`` (the dedup_minhash_lsh entry point) always recomputes
+    """The session-memoized verified-pair stage: dedup_minhash_lsh,
+    dedup_connected_components and cross_split_leakage all consume the SAME
+    (doc_a, doc_b, jaccard) list, so composed audits reuse the persisted
+    frame instead of re-deriving the LSH pipeline from raw shingles. The
+    frame is pair-sized, O(near-dup pairs) — the smallest in the pipeline.
+
+    ``refresh=True`` (the dedup_minhash_lsh entry point) always recomputes
     and replaces the memo — so repeated invocations of the producer query
     measure real work, while consumers (connected components, leakage audit)
     pick up whatever the session already computed."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    token = _corpus_snapshot_token(sf_dir)
-    if not refresh:
-        hit = _PAIR_STAGE_CACHE.get(key)
-        if hit is not None and hit[0] == token:
-            return hit[1]
-    old = _PAIR_STAGE_CACHE.pop(key, None)
-    if old is not None:
-        old[1].unpersist()
-    pairs = _lsh_pairs_guarded(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _PAIR_STAGE_CACHE[key] = (token, pairs)
-    return pairs
+    return memo(
+        spark,
+        "lsh_pairs",
+        sf_dir,
+        "documents",
+        lambda: _lsh_pairs_guarded(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK),
+        refresh=refresh,
+        release=lambda df: df.unpersist(),
+    )
 
 
 _SQL_CONNECTED = f"""
@@ -749,9 +706,7 @@ def _lsh_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sh/full/gstats) are persisted by the pair pipeline, so no recompute."""
     sh = _doc_shingles(spark, sf_dir, persist=True)
     full, gstats = _identity_group_stats(sh)
-    probe_key = (spark.sparkContext.applicationId, sf_dir)
-    token = _corpus_snapshot_token(sf_dir)
-    if not _clone_mass_probe(gstats, cache_key=probe_key, token=token):
+    if not _clone_mass_probe(spark, sf_dir, gstats):
         return lsh_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
     mh_cols = [f"mh{i}" for i in range(N_MINHASH)]
     reps = gstats.select(F.col("gid").alias("doc_id"), "n", *mh_cols)
@@ -967,11 +922,7 @@ def dedup_incremental_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max-group-size probe on it skips the member-expansion join entirely on
     # clone-free corpora — the unguarded plan comes back for free.
     full, gstats = _identity_group_stats(sh, incr_flags=True)
-    guard_on = _clone_mass_probe(
-        gstats,
-        cache_key=(spark.sparkContext.applicationId, sf_dir),
-        token=_corpus_snapshot_token(sf_dir),
-    )
+    guard_on = _clone_mass_probe(spark, sf_dir, gstats)
     mh_cols = [f"mh{i}" for i in range(N_MINHASH)]
     if guard_on:
         band_src = gstats.select(

@@ -575,32 +575,17 @@ _AC_CHR = (
     ],
 )
 
-_DCT_M = None
-
-
 def _dct_matrix() -> np.ndarray:
     """Orthonormal 8×8 DCT-II matrix C: 2-D FDCT is C·X·Cᵀ, IDCT is Cᵀ·S·C.
     With this scaling the DC term of a constant block c is exactly 8c."""
-    global _DCT_M
-    if _DCT_M is None:
-        x = np.arange(8)
-        m = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2.0
-        m[0, :] = 1.0 / (2.0 * np.sqrt(2.0))
-        _DCT_M = m
-    return _DCT_M
-
-
-_HUFF_CODE_CACHE: dict = {}
+    x = np.arange(8)
+    m = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2.0
+    m[0, :] = 1.0 / (2.0 * np.sqrt(2.0))
+    return m
 
 
 def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-    """Canonical Huffman assignment (T.81 C.2): symbol → (code, length).
-    Memoized — the Annex K tables are rebuilt for every encode call
-    otherwise (the catalog row encodes one image per document)."""
-    key = (tuple(bits), tuple(vals))
-    hit = _HUFF_CODE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """Canonical Huffman assignment (T.81 C.2): symbol → (code, length)."""
     out: dict[int, tuple[int, int]] = {}
     code = 0
     k = 0
@@ -610,8 +595,15 @@ def _huff_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
             code += 1
             k += 1
         code <<= 1
-    _HUFF_CODE_CACHE[key] = out
     return out
+
+
+# Built once at import: both are pure functions of the constants above.
+_DCT = _dct_matrix()
+_DC_LUM_CODES = _huff_codes(*_DC_LUM)
+_DC_CHR_CODES = _huff_codes(*_DC_CHR)
+_AC_LUM_CODES = _huff_codes(*_AC_LUM)
+_AC_CHR_CODES = _huff_codes(*_AC_CHR)
 
 
 class _BitWriter:
@@ -681,7 +673,7 @@ def _fdct_quant(plane: np.ndarray, qt: np.ndarray) -> list[np.ndarray]:
     h, w = plane.shape
     ph, pw = -(-h // 8) * 8, -(-w // 8) * 8
     padded = np.pad(plane.astype(np.float64) - 128.0, ((0, ph - h), (0, pw - w)), mode="edge")
-    m = _dct_matrix()
+    m = _DCT
     blocks = []
     for by in range(0, ph, 8):
         for bx in range(0, pw, 8):
@@ -740,8 +732,8 @@ def encode_jpeg(pixels: np.ndarray, quant: np.ndarray | None = None) -> bytes:
     out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
 
     comp_blocks = [_fdct_quant(p, qt) for p in planes]
-    dc_tabs = [_huff_codes(*_DC_LUM)] + [_huff_codes(*_DC_CHR)] * (ncomp - 1)
-    ac_tabs = [_huff_codes(*_AC_LUM)] + [_huff_codes(*_AC_CHR)] * (ncomp - 1)
+    dc_tabs = [_DC_LUM_CODES] + [_DC_CHR_CODES] * (ncomp - 1)
+    ac_tabs = [_AC_LUM_CODES] + [_AC_CHR_CODES] * (ncomp - 1)
     bw = _BitWriter()
     dc_prev = [0] * ncomp
     for i in range(len(comp_blocks[0])):  # interleaved MCU order (= raster at 4:4:4)
@@ -888,7 +880,7 @@ def _decode_jpeg(payload: bytes) -> dict:
         raise NotImplementedError("JPEG decode: interleaved single-scan only")
 
     br = _BitReader(payload, pos)
-    m = _dct_matrix()
+    m = _DCT
     bx, by = -(-w // 8), -(-h // 8)
     planes = [np.zeros((by * 8, bx * 8), dtype=np.float64) for _ in comps]
     dc_prev = {cid: 0 for cid, _ in comps}

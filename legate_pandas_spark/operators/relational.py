@@ -23,10 +23,6 @@ from legate_pandas_spark.operators import query
 from legate_pandas_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # TPC-H-shaped analytics (scan → filter → join → groupBy → sort → limit)
 # ---------------------------------------------------------------------------
@@ -80,7 +76,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.61s vs 0.37s for the drifting double form and 1.2s for all-decimal —
     the integer-scaled hybrid keeps whole-stage-codegen long arithmetic in
     the hot path."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q100 = F.round(F.col("l_quantity") * 100).cast("long")
     p100 = F.round(F.col("l_extendedprice") * 100).cast("long")
     d100 = F.round(F.col("l_discount") * 100).cast("long")
@@ -129,11 +125,11 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way join, agg, top-k (TakeOrderedAndProject)."""
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("2000-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
     )
     return (
@@ -169,12 +165,12 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 6-way join with broadcast dims (region/nation/supplier)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey)
         .join(li, li.l_orderkey == orders.o_orderkey)
@@ -219,10 +215,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the rounding quantum. Scaled magnitude ≈ 6.7e13 at this corpus; int64
     holds to ~1e5× more before DECIMAL would be needed (the q1 charge
     precedent)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    nation = _t(spark, sf_dir, "nation")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    nation = load_table(spark, sf_dir, "nation")
     p100 = F.round(F.col("l_extendedprice") * 100).cast("long")
     d100 = F.round(F.col("l_discount") * 100).cast("long")
     return (
@@ -258,8 +254,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def having_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: groupBy + HAVING filter + join back to the fact table."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_raw_qty"))
@@ -285,8 +281,8 @@ def having_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_inner_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inner equi-join (reference merge how='inner': frontend/merge.py:20-130)."""
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
     return orders.join(cust, orders.o_custkey == cust.c_custkey).select(
         "o_orderkey", "o_custkey", "c_name", "c_mktsegment",
         F.round("o_totalprice", 2).alias("totalprice"),
@@ -304,8 +300,8 @@ def join_inner_basic(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_with_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left join producing unmatched-side NULLs (reference how='left')."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left").select(
         "c_custkey", "c_name", "o_orderkey", F.round("o_totalprice", 2).alias("totalprice")
     )
@@ -327,11 +323,11 @@ def join_left_with_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_outer_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join with pandas-merge key coalescing (reference
     src/merge/merge.cu:144-152 fills the common key from both sides)."""
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 2 == 0).select(
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_orderkey") % 3 == 0)
         .groupBy("l_orderkey")
         .agg(F.sum("l_extendedprice").alias("revenue"))
@@ -358,9 +354,9 @@ def join_outer_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast join of small dims (reference method='broadcast',
     core/merge.py:639-643) — explicit F.broadcast hints; no shuffle of lineitem."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -385,7 +381,7 @@ def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite-key equi-join (reference multicolumn merge,
     tests/pandas/df_merge_multicolumn.py)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     mx = li.groupBy("l_partkey", "l_suppkey").agg(F.max("l_extendedprice").alias("max_price"))
     return (
         li.alias("l")
@@ -419,7 +415,7 @@ def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filter_project_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean-mask filter + column projection (reference COMPACT task,
     core/table.py:1033-1101). Predicates and 3-column pruning reach the scan."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         F.col("l_discount").between(0.05, 0.07) & (F.col("l_quantity") < 25)
     ).select("l_orderkey", "l_linenumber", F.round("l_extendedprice", 2).alias("price"))
@@ -436,8 +432,8 @@ def filter_project_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 def isin_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """isin-style row selection (reference boolean select with null care,
     tests/pandas/df_select_with_null.py)."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region")
     return (
         nation.filter(F.col("n_name").isin("NATION_1", "NATION_5", "NATION_13", "NATION_21"))
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
@@ -460,7 +456,7 @@ def isin_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def where_mask_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """where/mask conditional replace (reference copy_if_else task,
     src/copy/tasks/copy_if_else.cc; frontend/frame.py:218-277)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         "o_orderkey",
         F.round(
@@ -486,7 +482,7 @@ def where_mask_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 def slice_loc_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """loc-style label-range slice on the index column (reference FIND_BOUNDS +
     slice_by_range, core/index.py:385-417) → a pushed-down range filter."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return orders.filter(F.col("o_orderkey").between(100, 299)).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("totalprice")
     )
@@ -540,7 +536,7 @@ def global_agg_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums with identical IEEE expressions on both engines (multiply/divide/
     sqrt are correctly rounded, so identical inputs give identical bits),
     rounding via floor(x·10^d + 0.5)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q100 = F.round(F.col("l_quantity") * 100).cast("long")
     p100 = F.round(F.col("l_extendedprice") * 100).cast("long")
     d100 = F.round(F.col("l_discount") * 100).cast("long")
@@ -585,7 +581,7 @@ def groupby_multi_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-agg dict per column incl. string/timestamp min-max and nunique
     (reference frontend/groupby.py:142-270; MinMax string specializations
     src/groupby/groupby_reduce.cc:298-399)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
         F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
@@ -627,7 +623,7 @@ def groupby_any_all_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     per element at these magnitudes — 10^6 under the 8dp quantum even at
     1000x). Consumers exponentiate locally for the raw product; the
     facade's pandas-exact prod (frontend/groupby.py) is unaffected."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     log_factor = F.log(F.lit(1.0) + F.col("o_totalprice") * 1e-10)
     return orders.groupBy("o_orderstatus").agg(
         F.bool_or(F.col("o_totalprice") > 400000).alias("any_big"),
@@ -648,7 +644,7 @@ def groupby_any_all_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def groupby_size_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """groupby.size() / value_counts (reference SIZE agg, frontend/groupby.py)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("size"))
 
 
@@ -666,7 +662,7 @@ def groupby_size_value_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_extension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup — absent in the reference (SURVEY §2.4 'absent' row);
     free Spark extension surface."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
         F.count(F.lit(1)).alias("n"),
@@ -695,7 +691,7 @@ def sort_topk_nlargest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nlargest/top-k: orderBy+limit compiles to TakeOrderedAndProject — no global
     sort materialization (reference runs a full distributed sample sort,
     core/sort.py:24-236; top-k is strictly cheaper)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(100)
@@ -711,7 +707,7 @@ def sort_topk_nlargest(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def distinct_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """drop_duplicates full-row (reference core/drop_duplicates.py:24-103)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_returnflag", "l_linestatus").distinct()
 
 
@@ -732,7 +728,7 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     order key is explicit (l_linenumber) via a row_number window."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_orderkey").orderBy(
         "l_linenumber", "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
     )
@@ -754,7 +750,7 @@ def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_keep_none(spark: SparkSession, sf_dir: str) -> DataFrame:
     """drop_duplicates(keep=False): retain only keys appearing exactly once."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("n")).filter(F.col("n") == 1)
 
 
@@ -771,7 +767,7 @@ def dedup_keep_none(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_concat_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """concat(axis=0) = unionByName (reference CONCATENATE task,
     core/table.py:365-476; union-of-frames contract per README.md:194-196)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     cols = ["o_orderkey", "o_orderstatus"]
     a = orders.filter(F.col("o_orderstatus") == "F").select(
         *cols, F.round("o_totalprice", 2).alias("totalprice")
@@ -792,7 +788,7 @@ def union_concat_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def except_intersect_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intersect — absent in the reference (SURVEY §2.7), free Spark extension."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     b = orders.filter(F.col("o_totalprice") > 250000).select("o_custkey")
     return a.intersect(b)
@@ -816,7 +812,7 @@ def except_intersect_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
 def melt_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long unpivot (pandas melt / SQL UNPIVOT) via a stack expression —
     row count triples but stays a narrow, pipelined transform."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100)
     stacked = F.expr(
         "stack(3, 'quantity', l_quantity, 'discount', l_discount, 'tax', l_tax) "
         "as (measure, val)"
@@ -857,8 +853,8 @@ def skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). AQE skew-join handles moderate skew automatically; explicit salting
     is the heavy-artillery variant for extreme single-key skew at 100 TB."""
     N_SALT = 8
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
     skew_key = lambda c: F.when(c % 10 < 7, F.lit(0)).otherwise(c % 100)  # noqa: E731
     left = orders.select(
         skew_key(F.col("o_orderkey")).alias("k"),
@@ -910,7 +906,7 @@ def arith_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary arithmetic with pandas promotion: int/int division yields float
     (reference op table core/runtime.py:122-141; promotion via empty-Series probe,
     common/types.py:432-442). mod/pow/floordiv/abs/neg per src/binaryop, src/unaryop."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     q = F.col("l_quantity")
     return li.select(
         "l_orderkey",
@@ -956,7 +952,7 @@ def astype_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """astype conversions: float→int (truncating, pandas semantics — NOT SQL
     rounding), int→string, string→int, string→timestamp round-trip (reference
     core/column.py:334-388, src/transform/tasks/astype.cc)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     date_str = F.date_format("o_orderdate", "yyyy-MM-dd")
     return orders.select(
         "o_orderkey",
@@ -992,7 +988,7 @@ def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """str accessor surface: lower/upper/swapcase/contains/pad/strip/zfill
     (reference frontend/accessors.py:80-114, src/string/tasks/).
     swapcase = translate over the ASCII alphabet (pure Catalyst, no UDF)."""
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     lo = "abcdefghijklmnopqrstuvwxyz"
     hi = lo.upper()
     return part.select(
@@ -1028,7 +1024,7 @@ def datetime_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dt accessor: year/month/day/hour/minute/second/weekday with pandas
     Monday=0 convention (reference EXTRACT_FIELD task,
     src/datetime/tasks/extract_field.cc; weekday shift per SURVEY §2.8)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.year("ts").alias("y"),
@@ -1056,7 +1052,7 @@ def null_handling_fillna(spark: SparkSession, sf_dir: str) -> DataFrame:
     """isna/fillna/dropna (reference src/transform isna/notna/broadcast_fillna,
     src/copy/tasks/dropna.cc). Testdata has no NULLs, so they are synthesized
     with nullif-style CASE, then filled/dropped."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     v_null = F.when(F.col("value") < 50, F.lit(None).cast("double")).otherwise(F.col("value"))
     t_null = F.when(F.col("event_type") == "error", F.lit(None).cast("string")).otherwise(
         F.col("event_type")
@@ -1086,7 +1082,7 @@ def query_expr_translation(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontend/query.py)."""
     from legate_pandas_spark.frontend.query import translate_query_expr
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     cond = translate_query_expr("l_quantity > 30 and (l_returnflag == 'R' or l_discount < 0.02)")
     return li.filter(cond).select(
         "l_orderkey", "l_linenumber", F.round("l_extendedprice", 2).alias("price")
@@ -1122,12 +1118,12 @@ def merge_micro_padded_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's hardest-published case (string gather + hash); here it is one
     Spark shuffle join whose key is a computed column — Catalyst pushes the
     projection into the scan and AQE sizes the shuffle."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         F.lpad((F.col("l_orderkey") % 100000).cast("string"), 10, "0").alias("k"),
         "l_quantity",
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderkey") % 3 == 0)
         .select(
             F.lpad((F.col("o_orderkey") % 100000).cast("string"), 10, "0").alias(
@@ -1178,7 +1174,7 @@ def sort_micro_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-partition window; the oracle uses DuckDB's native global sort."""
     from legate_pandas_spark.frontend.scan import ordered_row_number
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
     ranked = ordered_row_number(

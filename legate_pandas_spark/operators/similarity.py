@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from legate_pandas_spark.operators import query
-from legate_pandas_spark.sources.tables import load_table
+from legate_pandas_spark.sources.tables import load_table, memo
 
 DIM = 64
 N_HYPERPLANES = 8
@@ -517,30 +517,23 @@ def ivf_topk(
 # driver/distributed cutover: a cheap memoized corpus statistic picks the
 # plan, never the semantics below threshold.
 _COSINE_EXACT_MAX_REPS = 8192
-_COSINE_ROUTE_CACHE: dict = {}
 
 
 def _cosine_route_lsh(spark: SparkSession, sf_dir: str) -> bool:
     """True when the largest label block's distinct-vector count exceeds
-    _COSINE_EXACT_MAX_REPS — one tiny memoized aggregate action (snapshot-
-    token invalidated, round-9 ADVICE precedent)."""
-    from legate_pandas_spark.operators.dedup import _corpus_snapshot_token
+    _COSINE_EXACT_MAX_REPS — one tiny session-memoized aggregate action."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    token = _corpus_snapshot_token(sf_dir, table="embeddings")
-    hit = _COSINE_ROUTE_CACHE.get(key)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    emb = load_table(spark, sf_dir, "embeddings")
-    mx = (
-        emb.groupBy("label")
-        .agg(F.count_distinct("embedding").alias("d"))
-        .agg(F.max("d").alias("mx"))
-        .first()["mx"]
-    ) or 0
-    verdict = mx > _COSINE_EXACT_MAX_REPS
-    _COSINE_ROUTE_CACHE[key] = (token, verdict)
-    return verdict
+    def route() -> bool:
+        emb = load_table(spark, sf_dir, "embeddings")
+        mx = (
+            emb.groupBy("label")
+            .agg(F.count_distinct("embedding").alias("d"))
+            .agg(F.max("d").alias("mx"))
+            .first()["mx"]
+        ) or 0
+        return mx > _COSINE_EXACT_MAX_REPS
+
+    return memo(spark, "cosine_route", sf_dir, "embeddings", route)
 
 
 @query(

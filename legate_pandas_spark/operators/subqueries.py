@@ -15,10 +15,6 @@ from legate_pandas_spark.operators import query
 from legate_pandas_spark.sources.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "q4_priority_exists",
     oracle="""
@@ -35,10 +31,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS → left-semi join with a non-equi residual
     (l_shipdate > o_orderdate), then aggregate."""
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     semi = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
@@ -62,7 +58,7 @@ def q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape: pure filtered scan + scalar aggregate; every predicate is
     pushable to the parquet reader."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
@@ -89,8 +85,8 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q12_priority_case_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: join + conditional (CASE) aggregation."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp")
     )
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -118,11 +114,11 @@ def q12_priority_case_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: broadcast dim join + ratio of conditional aggregates."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1998-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-01-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part")
+    part = load_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
@@ -154,11 +150,11 @@ def q14_promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q16_notin_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: NOT IN → left-anti join + count distinct per group.
     (Testdata suppliers/acctbals have no NULLs, so NOT IN ≡ anti-join.)"""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(
         F.col("p_size").isin(1, 4, 7) & (F.col("p_brand") != "Brand#13")
     )
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 2000).select(
+    bad_supp = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 2000).select(
         "s_suppkey"
     )
     return (
@@ -188,7 +184,7 @@ def q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row subquery execution at scale."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     # per-part avg as a window over the fact table: ONE lineitem scan and one
     # shuffle on l_partkey (the grouped-subquery join would scan twice)
     half_avg = 0.5 * F.avg("l_quantity").over(Window.partitionBy("l_partkey"))
@@ -224,8 +220,8 @@ def q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape: OR-ed multi-column predicate blocks across the join."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), part.p_partkey == li.l_partkey)
     block = lambda brand, smax, qlo, qhi: (  # noqa: E731
         (F.col("p_brand") == brand)
@@ -253,8 +249,8 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS semi-join (merge how='semi' in the frontend extension)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderstatus") == "O") & (F.col("o_totalprice") > 200000)
     )
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_semi").select(
@@ -274,8 +270,8 @@ def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT EXISTS anti-join (merge how='anti' in the frontend extension)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
     return cust.join(orders, cust.c_custkey == orders.o_custkey, "left_anti").select(
         "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")
     )
@@ -300,7 +296,7 @@ def above_customer_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer's average) — grouped-subquery join, shuffle shared on o_custkey."""
     from pyspark.sql.window import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     # per-customer stats as windows: one orders scan, one shuffle on o_custkey
     w = Window.partitionBy("o_custkey")
     return (
@@ -343,7 +339,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the explicit l_suppkey IS NOT NULL matters: the supplier join infers it
     # on its branch only, which would de-canonicalize the two revenue subtrees
     # and defeat exchange reuse (two fact scans instead of one)
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1999-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("2000-01-01").cast("timestamp"))
         & F.col("l_suppkey").isNotNull()
@@ -359,7 +355,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = revenue.crossJoin(F.broadcast(mx)).filter(
         F.col("total_rev") == F.col("_m")
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = load_table(spark, sf_dir, "supplier")
     return (
         supp.join(F.broadcast(top), supp.s_suppkey == top.supplier_no)
         .select("s_suppkey", "s_name", F.round("total_rev", 4).alias("total_revenue"))
@@ -385,8 +381,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: scalar avg subquery (broadcast) + NOT EXISTS anti-join +
     substring group key."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("ab"))
     return (
         cust.crossJoin(F.broadcast(avg_bal))
@@ -424,8 +420,8 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the grouped view (ReusedExchange → one fact scan) — never an
     unpartitioned window over the supplier-cardinality aggregate, which grows
     with SF and becomes a shuffle-to-one at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
     sup_val = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey")
@@ -459,8 +455,8 @@ def q13_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     zero-order customers count), then the distribution of those counts. The
     second groupBy runs over customer-cardinality rows, the first is the only
     fact-sized shuffle."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     per_cust = (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -487,10 +483,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one nation's share of total revenue per order year —
     ratio of conditional aggregates over a multi-join (single pass; the CASE
     splits the numerator, no second scan)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -526,11 +522,11 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape: profit by supplier-nation and order year over a 5-way
     join with a substring predicate on the part dim (filter applied before the
     broadcast, so the build side shrinks first)."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
-    supp = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("widget"))
+    supp = load_table(spark, sf_dir, "supplier")
+    orders = load_table(spark, sf_dir, "orders")
+    nation = load_table(spark, sf_dir, "nation")
     profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
         "p_retailprice"
     ) * F.col("l_quantity") * 0.1
@@ -575,9 +571,9 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by suppliers-per-order (≤7), so collect_set state is tiny."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    supp = load_table(spark, sf_dir, "supplier")
     flagged = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         "l_orderkey",
         "l_suppkey",
@@ -621,11 +617,11 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape: nation-pair trade volume — two broadcast joins against the
     same dim table under different aliases."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     cn = nation.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
     )

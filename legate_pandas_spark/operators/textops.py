@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from legate_pandas_spark.operators import outer_explode, query
-from legate_pandas_spark.sources.tables import load_table
+from legate_pandas_spark.sources.tables import load_table, memo
 
 # Tiny per-language stopword lists for the n-gram/stopword language heuristic.
 STOPWORDS = {
@@ -246,14 +246,12 @@ def text_normalize_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_by_name_missing_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """concat of frames with mismatched columns (pandas fills missing with NULL)
     — unionByName(allowMissingColumns=True), the §2.7 concat contract extended."""
-    from legate_pandas_spark.operators.relational import _t
-
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 200).select(
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 200).select(
         F.col("o_orderkey").alias("key"),
         F.round("o_totalprice", 2).alias("totalprice"),
         F.lit("orders").alias("src"),
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100).select(
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100).select(
         F.col("l_orderkey").alias("key"),
         F.round("l_quantity", 2).alias("quantity"),
         F.lit("lineitem").alias("src"),
@@ -1328,36 +1326,27 @@ GROUP BY dw.doc_id
 _BPE_ENCODE_ORACLE = _bpe_encode_oracle(_BPE_ENCODE_K)
 
 
-# Session memo for the learned BPE symbol table (round-11, ADVICE r10): each
-# _bpe_learn_sym call leaves its final vocab-sized table persisted (the
-# caller's encode join needs it) plus the mid-loop localCheckpoint RDDs — with
-# no release path, every bpe_encode_corpus/bpe_encode_k16 invocation in a
-# session pinned another copy. The merge table is a pure function of
-# (corpus, k), exactly the _ingest_stores shape: a 100 TB pipeline trains the
-# vocabulary ONCE and every encode pass joins against the stored table.
-# Memoized per (applicationId, sf_dir, k) with the corpus snapshot token;
-# replacement unpersists the stale table, bounding the memo to one live table
-# per (sf_dir, k).
-_BPE_SYM_CACHE: dict = {}
-
-
 def _bpe_sym_for(spark: SparkSession, sf_dir: str, k: int, sym0: DataFrame) -> DataFrame:
-    from legate_pandas_spark.operators.dedup import _corpus_snapshot_token
+    """The learned symbol table, session-memoized per (sf_dir, k): it is a
+    pure function of (corpus, k), so a session trains the vocabulary once and
+    every encode joins against the stored table (without the memo, each
+    encode pinned another vocab-sized table plus its checkpoint RDDs). The
+    table is an eager localCheckpoint — materialized RDD blocks, not a
+    CacheManager entry — so it survives a blanket clearCache() as-is."""
 
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    token = _corpus_snapshot_token(sf_dir, table="documents")
-    hit = _BPE_SYM_CACHE.get(key)
-    if hit is not None and hit[0] == token:
-        # the memoized table is an eager localCheckpoint: its blocks are
-        # materialized RDD storage, not a CacheManager entry, so it needs no
-        # re-persist and survives a blanket clearCache() as-is
-        return hit[1]
-    if hit is not None:
-        hit[1].unpersist()
-        _release_local_checkpoint(hit[1])  # the learn loop ends checkpointed
-    sym = _bpe_learn_sym(sym0, k)
-    _BPE_SYM_CACHE[key] = (token, sym)
-    return sym
+    def release(sym: DataFrame) -> None:
+        sym.unpersist()
+        _release_local_checkpoint(sym)  # the learn loop ends checkpointed
+
+    return memo(
+        spark,
+        "bpe_sym",
+        sf_dir,
+        "documents",
+        lambda: _bpe_learn_sym(sym0, k),
+        key=(k,),
+        release=release,
+    )
 
 
 def _bpe_encode_with_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:

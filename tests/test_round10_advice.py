@@ -77,7 +77,7 @@ def test_ingest_store_memo_parity_and_invalidation(spark, tmp_path):
     bit-identical tag reports on repeat invocation (memo hit) and (b) rebuild
     when the corpus is rewritten under the same sf_dir (snapshot token)."""
     from legate_pandas_spark.operators import QUERIES, load_all
-    from legate_pandas_spark.operators.curation import _INGEST_STORE_CACHE
+    from legate_pandas_spark.sources.tables import memo_stats
 
     load_all()
     d = str(tmp_path / "ingest_memo")
@@ -91,12 +91,16 @@ def test_ingest_store_memo_parity_and_invalidation(spark, tmp_path):
         .sort_values("doc_id")
         .reset_index(drop=True)
     )
+
+    def counts():
+        s = memo_stats("ingest_stores")
+        return s["hits"], s["misses"]
+
+    h0, m0 = counts()
     first = run()
-    key = (spark.sparkContext.applicationId, d)
-    assert key in _INGEST_STORE_CACHE
-    tok0 = _INGEST_STORE_CACHE[key][0]
+    assert counts() == (h0, m0 + 1)  # stores built and memoized
     second = run()  # memo hit — token unchanged, same object reused
-    assert _INGEST_STORE_CACHE[key][0] == tok0
+    assert counts() == (h0 + 1, m0 + 1)
     pd.testing.assert_frame_equal(first, second)
     assert bool(first.loc[first.doc_id == 4, "is_exact_dup"].iloc[0])
 
@@ -106,5 +110,5 @@ def test_ingest_store_memo_parity_and_invalidation(spark, tmp_path):
     _t.sleep(0.05)
     _write_docs(d, [f"completely different text {i} here" for i in range(12)])
     third = run()
-    assert _INGEST_STORE_CACHE[key][0] != tok0  # rebuilt, not stale
+    assert counts() == (h0 + 1, m0 + 2)  # rebuilt, not stale
     assert not third.is_exact_dup.any()

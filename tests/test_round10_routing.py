@@ -6,14 +6,20 @@ multi-table LSH path, same machinery as dedup_cosine_blocked_lsh_approx."""
 import pandas as pd
 import pytest
 
+from legate_pandas_spark.sources.tables import clear_memos, memo_stats
+
 
 @pytest.fixture()
 def sim():
+    """The similarity module with the session memo emptied, and emptied again
+    after the test so a verdict taken under a patched threshold does not leak."""
     from legate_pandas_spark.operators import load_all
     from legate_pandas_spark.operators import similarity as sim
 
     load_all()
-    return sim
+    clear_memos()
+    yield sim
+    clear_memos()
 
 
 def _sorted(df):
@@ -23,12 +29,12 @@ def _sorted(df):
 
 def test_small_corpus_stays_on_exact_path(spark, sf_dir, sim):
     # gate corpora are far below the 8,192 threshold: no routing
-    sim._COSINE_ROUTE_CACHE.clear()
+    hits0 = memo_stats("cosine_route")["hits"]
     assert sim._cosine_route_lsh(spark, sf_dir) is False
+    assert memo_stats("cosine_route")["live"] == 1
     # memoized: second call hits the cache with the same verdict
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in sim._COSINE_ROUTE_CACHE
     assert sim._cosine_route_lsh(spark, sf_dir) is False
+    assert memo_stats("cosine_route")["hits"] == hits0 + 1
 
 
 def test_routed_output_is_the_lsh_path(spark, sf_dir, sim, monkeypatch):
@@ -37,7 +43,6 @@ def test_routed_output_is_the_lsh_path(spark, sf_dir, sim, monkeypatch):
     from legate_pandas_spark.operators import QUERIES
 
     monkeypatch.setattr(sim, "_COSINE_EXACT_MAX_REPS", 0)
-    monkeypatch.setattr(sim, "_COSINE_ROUTE_CACHE", {})
     assert sim._cosine_route_lsh(spark, sf_dir) is True
     routed = _sorted(QUERIES["dedup_embedding_cosine_blocked"](spark, sf_dir))
     twin = _sorted(QUERIES["dedup_cosine_blocked_lsh_approx"](spark, sf_dir))
@@ -65,7 +70,6 @@ def test_route_verdict_invalidates_on_corpus_rewrite(spark, tmp_path, sim):
         ).to_parquet(os.path.join(d, "embeddings.parquet"))
 
     write(4)
-    sim._COSINE_ROUTE_CACHE.clear()
     assert sim._cosine_route_lsh(spark, d) is False
     import time as _t
 
@@ -77,4 +81,3 @@ def test_route_verdict_invalidates_on_corpus_rewrite(spark, tmp_path, sim):
         assert sim._cosine_route_lsh(spark, d) is True  # not the stale False
     finally:
         sim._COSINE_EXACT_MAX_REPS = orig
-        sim._COSINE_ROUTE_CACHE.clear()

@@ -15,25 +15,30 @@ import time
 import pandas as pd
 import pytest
 
+from legate_pandas_spark.sources.tables import clear_memos, memo_stats
+
 
 @pytest.fixture()
 def sim():
+    """The similarity module with the session memo emptied, and emptied again
+    after the test so a verdict taken under a patched threshold does not leak."""
     from legate_pandas_spark.operators import load_all
     from legate_pandas_spark.operators import similarity as sim
 
     load_all()
-    return sim
+    clear_memos()
+    yield sim
+    clear_memos()
 
 
 def test_routing_emits_warning_and_oracle_override(spark, sf_dir, sim, monkeypatch):
     from legate_pandas_spark.operators import ORACLES, ORACLE_OVERRIDES, QUERIES
 
     # below threshold: no warning, override resolves to None (static oracle)
-    sim._COSINE_ROUTE_CACHE.clear()
     assert ORACLE_OVERRIDES["dedup_embedding_cosine_blocked"](spark, sf_dir) is None
 
     monkeypatch.setattr(sim, "_COSINE_EXACT_MAX_REPS", 0)
-    monkeypatch.setattr(sim, "_COSINE_ROUTE_CACHE", {})
+    clear_memos()
     with pytest.warns(UserWarning, match="routing to the multi-table LSH"):
         QUERIES["dedup_embedding_cosine_blocked"](spark, sf_dir)
     # the gate now compares the routed run against the LSH twin's oracle
@@ -82,21 +87,21 @@ def test_bpe_sym_memo_invalidates_on_corpus_rewrite(spark, tmp_path):
     """A rewritten corpus must retrain (snapshot token changes) and unpersist
     the stale table rather than accumulate a second live copy."""
     from legate_pandas_spark.operators import QUERIES, load_all
-    from legate_pandas_spark.operators import textops as t
 
     load_all()
     d = str(tmp_path / "corpus_inval")
     os.makedirs(d, exist_ok=True)
     _write_corpus(d, ["banana bandana" for _ in range(4)])
+    before = memo_stats("bpe_sym")
     r1 = QUERIES["bpe_encode_corpus"](spark, d).toPandas()
-    live_after_first = len(
-        [k for k in t._BPE_SYM_CACHE if k[1] == d]
-    )
+    after_first = memo_stats("bpe_sym")
     time.sleep(0.05)
     _write_corpus(d, ["zyx wvu tsr qpo nml" for _ in range(4)])
     r2 = QUERIES["bpe_encode_corpus"](spark, d).toPandas()
-    live_after_second = len([k for k in t._BPE_SYM_CACHE if k[1] == d])
-    assert live_after_first == live_after_second == 1  # swapped, not stacked
+    after_second = memo_stats("bpe_sym")
+    # one table for this corpus, retrained on the rewrite: swapped, not stacked
+    assert after_first["live"] == after_second["live"] == before["live"] + 1
+    assert after_second["misses"] == after_first["misses"] + 1
     # retrained on the new corpus: different fertility profile
     assert not r1.sort_values("doc_id")["n_bpe_tokens"].equals(
         r2.sort_values("doc_id")["n_bpe_tokens"]

@@ -9,7 +9,7 @@
    proof (kept rows can hold nulls).
 3. at_time/between_time match sub-second instants exactly ('9:30:15.5' no
    longer truncates to the whole second).
-4. The dedup session memos (_PROBE_CACHE / _PAIR_STAGE_CACHE) carry a data
+4. The dedup session memos (clone-mass verdict / pair list) carry a data
    snapshot token: rewriting the corpus under sf_dir invalidates the cached
    clone-mass verdict / pair list instead of silently reusing stale results.
 """
@@ -115,7 +115,7 @@ def test_between_time_subsecond_bounds(spark):
     assert got2 == [2, 3]
 
 
-def test_clone_mass_probe_token_invalidation(spark):
+def test_clone_mass_probe_token_invalidation(spark, tmp_path):
     from legate_pandas_spark.operators import dedup as dd
 
     heavy = spark.createDataFrame(
@@ -124,24 +124,25 @@ def test_clone_mass_probe_token_invalidation(spark):
     clean = spark.createDataFrame(
         [(i, 1) for i in range(20)], "gid long, gsize long"
     )
-    key = ("test-app", "/tmp/fake-sf-r9")
-    dd._PROBE_CACHE.pop(key, None)
-    assert dd._clone_mass_probe(heavy, cache_key=key, token=("t1",)) is True
-    # same token -> cached verdict (serve True even from the clean frame)
-    assert dd._clone_mass_probe(clean, cache_key=key, token=("t1",)) is True
-    # new token (corpus rewritten) -> recompute, verdict flips
-    assert dd._clone_mass_probe(clean, cache_key=key, token=("t2",)) is False
-    dd._PROBE_CACHE.pop(key, None)
+    doc = tmp_path / "documents.parquet"
+    doc.write_bytes(b"t1")
+    d = str(tmp_path)
+    assert dd._clone_mass_probe(spark, d, heavy) is True
+    # same snapshot -> cached verdict (serve True even from the clean frame)
+    assert dd._clone_mass_probe(spark, d, clean) is True
+    # corpus rewritten (new snapshot token) -> recompute, verdict flips
+    doc.write_bytes(b"t2 rewritten")
+    assert dd._clone_mass_probe(spark, d, clean) is False
 
 
 def test_corpus_snapshot_token_changes_on_touch(tmp_path):
-    from legate_pandas_spark.operators.dedup import _corpus_snapshot_token
+    from legate_pandas_spark.sources.tables import snapshot_token
 
     doc = tmp_path / "documents.parquet"
     doc.write_bytes(b"abc")
-    t1 = _corpus_snapshot_token(str(tmp_path))
+    t1 = snapshot_token(str(tmp_path), "documents")
     doc.write_bytes(b"abcd")
-    t2 = _corpus_snapshot_token(str(tmp_path))
+    t2 = snapshot_token(str(tmp_path), "documents")
     assert t1 != t2
-    missing = _corpus_snapshot_token(str(tmp_path / "nope"))
+    missing = snapshot_token(str(tmp_path / "nope"), "documents")
     assert missing == ()
