@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from legate_pandas_spark.frontend.dtypes import to_spark_type
 from legate_pandas_spark.frontend.frame import DataFrame
 from legate_pandas_spark.frontend.series import _strftime_to_java
+from legate_pandas_spark.sources.tables import parquet_schema
 
 
 def _session(spark):
@@ -66,8 +67,11 @@ def read_parquet(path, columns=None, index_col=None, spark=None) -> DataFrame:
     does (core/io.py:56-68; reference tests/io cover 6 index layouts):
     stored/Multi indexes ``set_index`` their column(s), a non-default
     RangeIndex(start, step) materializes via partition-offset positions, and
-    the default RangeIndex stays virtual (free)."""
-    sdf = _session(spark).read.parquet(path)
+    the default RangeIndex stays virtual (free). The schema comes from the
+    session's schema catalog (``sources.tables.parquet_schema``), so a warm
+    read runs no Spark job."""
+    ss = _session(spark)
+    sdf = ss.read.schema(parquet_schema(ss, path)).parquet(path)
     meta = None if index_col else _sniff_pandas_metadata(path)
     meta_index, range_spec = [], None
     if meta:

@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from legate_pandas_spark.operators import outer_explode, query
-from legate_pandas_spark.sources.tables import load_table, memo
+from legate_pandas_spark.sources.tables import load_table, memo, table_path
 
 _N = 5  # contamination n-gram width
 _BENCH_MOD = 97  # doc_id % _BENCH_MOD == 0 -> held-out "benchmark" membership
@@ -2419,7 +2419,7 @@ def _ingest_stores(spark: SparkSession, sf_dir: str):
             store.unpersist()
 
     digest_store, sig_store = memo(
-        spark, "ingest_stores", sf_dir, "documents", build, release=release
+        spark, "ingest_stores", table_path(sf_dir, "documents"), build, release=release
     )
     return digest_store.persist(), sig_store.persist()
 

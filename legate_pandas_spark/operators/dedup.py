@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from legate_pandas_spark.operators import outer_explode, query
-from legate_pandas_spark.sources.tables import load_table, memo
+from legate_pandas_spark.sources.tables import load_table, memo, table_path
 
 N_MINHASH = 8  # 2 md5 digests x 4 slices
 N_BANDS = 4  # bands of 2 minhashes each
@@ -473,7 +473,7 @@ def _clone_mass_probe(spark: SparkSession, sf_dir: str, gstats: DataFrame) -> bo
         mx, groups, docs = row["mx"] or 1, row["groups"] or 0, row["docs"] or 0
         return docs - groups > max(16, 0.01 * docs) or mx > 8
 
-    return memo(spark, "clone_mass", sf_dir, "documents", probe)
+    return memo(spark, "clone_mass", table_path(sf_dir, "documents"), probe)
 
 
 def _lsh_pairs_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,8 +539,7 @@ def lsh_verified_pairs(
     return memo(
         spark,
         "lsh_pairs",
-        sf_dir,
-        "documents",
+        table_path(sf_dir, "documents"),
         lambda: _lsh_pairs_guarded(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK),
         refresh=refresh,
         release=lambda df: df.unpersist(),

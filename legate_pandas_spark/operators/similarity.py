@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from legate_pandas_spark.operators import query
-from legate_pandas_spark.sources.tables import load_table, memo
+from legate_pandas_spark.sources.tables import load_table, memo, table_path
 
 DIM = 64
 N_HYPERPLANES = 8
@@ -533,7 +533,7 @@ def _cosine_route_lsh(spark: SparkSession, sf_dir: str) -> bool:
         ) or 0
         return mx > _COSINE_EXACT_MAX_REPS
 
-    return memo(spark, "cosine_route", sf_dir, "embeddings", route)
+    return memo(spark, "cosine_route", table_path(sf_dir, "embeddings"), route)
 
 
 @query(

@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from legate_pandas_spark.operators import outer_explode, query
-from legate_pandas_spark.sources.tables import load_table, memo
+from legate_pandas_spark.sources.tables import load_table, memo, table_path
 
 # Tiny per-language stopword lists for the n-gram/stopword language heuristic.
 STOPWORDS = {
@@ -1341,8 +1341,7 @@ def _bpe_sym_for(spark: SparkSession, sf_dir: str, k: int, sym0: DataFrame) -> D
     return memo(
         spark,
         "bpe_sym",
-        sf_dir,
-        "documents",
+        table_path(sf_dir, "documents"),
         lambda: _bpe_learn_sym(sym0, k),
         key=(k,),
         release=release,

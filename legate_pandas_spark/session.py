@@ -9,6 +9,8 @@
 * ``nanosAsLong`` so parquet TIMESTAMP(NANOS) columns (events.ts) are readable;
   sources.tables converts them to microsecond timestamps (documented ns→µs
   truncation, SURVEY §1.2).
+* No Python call-site capture (``dataFrameDebugging``): it costs py4j round
+  trips on every column expression an op builds.
 
 Shuffle partitions are one per core (AQE coalesces below that when stages are
 tiny; on a cluster this should be 2-3x total cores).
@@ -63,6 +65,11 @@ _CONF = {
     # never collect unbounded results (VERDICT-audited every round), so the
     # cap is not load-bearing there.
     "spark.driver.maxResultSize": "8g",
+    # PySpark 4.1 records the Python call site of every pyspark.sql.functions
+    # call and Column method in the JVM (about 8 py4j round trips each), for
+    # file:line context in error messages. Errors keep their class without
+    # it. Not runtime-modifiable: a session built elsewhere keeps its value.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -8,7 +8,7 @@ import os
 import pathlib
 import re
 
-from legate_pandas_spark.sources.tables import clear_memos, memo, memo_stats
+from legate_pandas_spark.sources.tables import clear_memos, memo, memo_stats, table_path
 
 OPERATORS = pathlib.Path(__file__).resolve().parents[1] / "legate_pandas_spark" / "operators"
 
@@ -25,7 +25,7 @@ def _cached_range(spark, n: int):
 
 def _memo_range(spark, name, d, table, n):
     return memo(
-        spark, name, d, table, lambda: _cached_range(spark, n),
+        spark, name, table_path(d, table), lambda: _cached_range(spark, n),
         release=lambda df: df.unpersist(),
     )
 
@@ -39,11 +39,11 @@ def test_hit_and_miss_counts(spark, tmp_path):
         calls.append(1)
         return len(calls)
 
-    assert memo(spark, "t_counts", d, "documents", build) == 1
-    assert memo(spark, "t_counts", d, "documents", build) == 1
-    assert memo(spark, "t_counts", d, "documents", build, key=("other",)) == 2
+    assert memo(spark, "t_counts", table_path(d, "documents"), build) == 1
+    assert memo(spark, "t_counts", table_path(d, "documents"), build) == 1
+    assert memo(spark, "t_counts", table_path(d, "documents"), build, key=("other",)) == 2
     assert memo_stats("t_counts") == {"hits": 1, "misses": 2, "live": 2}
-    assert memo(spark, "t_counts", d, "documents", build, refresh=True) == 3
+    assert memo(spark, "t_counts", table_path(d, "documents"), build, refresh=True) == 3
     assert memo_stats("t_counts") == {"hits": 1, "misses": 3, "live": 2}
     clear_memos()
     assert memo_stats("t_counts")["live"] == 0
@@ -82,7 +82,7 @@ def test_clear_memos_releases_and_empties_every_entry(spark, tmp_path):
     for name in ("t_clear_a", "t_clear_b", *package_memos):
         assert memo_stats(name)["live"] == 0, name
     # the next call builds afresh
-    memo(spark, "t_clear_a", d, "documents", lambda: 0)
+    memo(spark, "t_clear_a", table_path(d, "documents"), lambda: 0)
     assert memo_stats("t_clear_a") == {"hits": 0, "misses": 2, "live": 1}
     clear_memos()
 
@@ -108,11 +108,11 @@ def test_unstattable_snapshot_is_never_served(spark, tmp_path, monkeypatch):
         return len(built)
 
     monkeypatch.setattr(os, "stat", racing_stat)
-    assert memo(spark, "t_unstattable", d, "documents", build) == 1
-    assert memo(spark, "t_unstattable", d, "documents", build) == 2
+    assert memo(spark, "t_unstattable", table_path(d, "documents"), build) == 1
+    assert memo(spark, "t_unstattable", table_path(d, "documents"), build) == 2
     monkeypatch.undo()
-    assert memo(spark, "t_unstattable", d, "documents", build) == 3
-    assert memo(spark, "t_unstattable", d, "documents", build) == 3  # served
+    assert memo(spark, "t_unstattable", table_path(d, "documents"), build) == 3
+    assert memo(spark, "t_unstattable", table_path(d, "documents"), build) == 3  # served
     assert memo_stats("t_unstattable") == {"hits": 1, "misses": 3, "live": 1}
     clear_memos()
 

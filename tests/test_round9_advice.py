@@ -140,9 +140,9 @@ def test_corpus_snapshot_token_changes_on_touch(tmp_path):
 
     doc = tmp_path / "documents.parquet"
     doc.write_bytes(b"abc")
-    t1 = snapshot_token(str(tmp_path), "documents")
+    t1 = snapshot_token(str(doc))
     doc.write_bytes(b"abcd")
-    t2 = snapshot_token(str(tmp_path), "documents")
+    t2 = snapshot_token(str(doc))
     assert t1 != t2
-    missing = snapshot_token(str(tmp_path / "nope"), "documents")
-    assert missing == ()
+    missing = snapshot_token(str(tmp_path / "nope" / "documents.parquet"))
+    assert missing is None

@@ -3,10 +3,13 @@
 ``session._CONF`` is the only conf table: ``get_spark`` applies all of it,
 ``ensure_runtime_conf`` the runtime-modifiable part of it. Operator code has
 no env-selected variants, and the session reads only ``SPARK_GRAFT_CPUS``.
+A ``get_spark`` session records no Python call sites; errors keep their class.
 """
 
 import os
 import re
+
+import pytest
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "legate_pandas_spark"
@@ -35,6 +38,35 @@ def test_ensure_runtime_conf_on_untuned_session(spark, sf_dir):
         ns.sparkContext.defaultParallelism
     )
     assert dict(load_table(ns, sf_dir, "events").dtypes)["ts"] == "timestamp"
+
+
+DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_get_spark_session_records_no_call_sites(spark):
+    from legate_pandas_spark.session import ensure_runtime_conf
+
+    assert spark.conf.get(DEBUGGING) == "false"
+    ns = spark.newSession()
+    before = ns.conf.get(DEBUGGING)
+    assert not ns.conf.isModifiable(DEBUGGING)
+    ensure_runtime_conf(ns)
+    assert ns.conf.get(DEBUGGING) == before
+
+
+def test_ansi_error_keeps_its_class_without_call_sites(spark, monkeypatch):
+    import pyspark.errors.utils as errutils
+    import pyspark.sql.functions as F
+    from pyspark.errors import ArrayIndexOutOfBoundsException
+
+    def raised(debugging: bool) -> type:
+        # PySpark reads the conf once per process into this cache
+        monkeypatch.setattr(errutils, "_enable_debugging_cache", debugging)
+        with pytest.raises(ArrayIndexOutOfBoundsException) as info:
+            spark.range(3).select(F.element_at(F.array("id"), (F.col("id") + 5).cast("int"))).collect()
+        return type(info.value)
+
+    assert raised(False) is raised(True)
 
 
 def _env_refs(src: str) -> int:
