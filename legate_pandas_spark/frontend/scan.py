@@ -484,40 +484,6 @@ def bucket_of(bounds: list, key):
     return F.size(F.filter(barr, lambda b: b < key))
 
 
-def keyed_cumsum(sdf, out: str, value, lead_key, order_cols):
-    """Append a global running sum of ``value`` ordered by ``order_cols``
-    (whose FIRST element ``lead_key`` drives the range bucketing) — two-phase:
-    splitter boundaries bucket the leading key (rows with equal keys share a
-    bucket, so the intra-bucket window sees every tie), per-bucket partial
-    sums prefix-combine on the driver, and a broadcast carry lifts the
-    bucket-local running sum to the global one. No unpartitioned window; the
-    only full-data movement is ONE hash shuffle on the bucket id."""
-    bounds = _rank_boundaries(sdf, lead_key)
-    bucket = bucket_of(bounds, lead_key)
-    uniq = next(_seq)
-    bkt, car = f"__kb_{uniq}__", f"__kc_{uniq}__"
-    bsdf = sdf.withColumn(bkt, bucket)
-    counts = bsdf.groupBy(bkt).agg(F.sum(value).alias("__s__")).collect()
-    counts.sort(key=lambda r: r[bkt])
-    offs, run = [], 0
-    for r in counts:
-        offs.append((r[bkt], run))
-        run += r["__s__"] or 0
-    off_df = bsdf.sparkSession.createDataFrame(
-        offs or [(0, 0)], schema=f"{bkt} int, {car} long"
-    )
-    w = (
-        Window.partitionBy(F.col(bkt))
-        .orderBy(*[F.asc(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        bsdf.join(F.broadcast(off_df), bkt, "left")
-        .withColumn(out, F.sum(value).over(w) + F.coalesce(F.col(car), F.lit(0)))
-        .drop(bkt, car)
-    )
-
-
 def ewm_mean_columns(sdf, cols: dict, alpha: float):
     """Append exponentially-weighted means (pandas ewm(adjust=True,
     ignore_na=False)) — EXACT two-phase distributed recurrence, replacing the

@@ -42,12 +42,3 @@ def assert_no_cartesian(df: DataFrame) -> None:
     if "CartesianProduct" in plan:
         raise AssertionError("plan contains a cartesian product")
 
-
-def count_exchanges(df: DataFrame) -> int:
-    return explain_text(df, mode="simple").count("Exchange ")
-
-
-def has_reused_exchange(df: DataFrame) -> bool:
-    """True when Catalyst reuses one shuffle for multiple plan branches (the
-    reference's partition-key reuse, core/merge.py:296-354, for free)."""
-    return "ReusedExchange" in explain_text(df, mode="formatted")

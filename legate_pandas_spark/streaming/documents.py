@@ -7,8 +7,13 @@ Scale notes: the stateless stage is pure Catalyst projection per micro-batch
 (identical plan to batch — whole-stage codegen, no state). The dedup stage
 keys state by content digest; with ingest-time watermarking the state store
 evicts digests older than the horizon, bounding memory at (arrival rate ×
-watermark), the standard streaming-dedup sizing. No reference analog
-(batch-only engine)."""
+watermark), the standard streaming-dedup sizing. The ingest time is rounded
+up to a tick of a tenth of the horizon, so every digest is held for at least
+the horizon and evicted at tick granularity. The tick is there because the
+watermark follows the newest ingest time: on the raw clock it advances on
+every trigger, and each advance makes Spark run an extra no-data micro-batch
+to evict state; on the tick it advances, and that batch runs, once per tick.
+No reference analog (batch-only engine)."""
 
 from __future__ import annotations
 
@@ -58,15 +63,58 @@ def quality_scrub_stream(docs: DataFrame) -> DataFrame:
     )
 
 
+_INTERVAL_UNIT_US = {
+    "microsecond": 1,
+    "millisecond": 1_000,
+    "second": 1_000_000,
+    "minute": 60_000_000,
+    "hour": 3_600_000_000,
+    "day": 86_400_000_000,
+    "week": 7 * 86_400_000_000,
+    "month": 31 * 86_400_000_000,  # as Spark sizes a watermark delay
+    "year": 12 * 31 * 86_400_000_000,
+}
+
+
+def ingest_tick_us(watermark: str) -> int:
+    """The dedup stream's ingest tick for a watermark horizon such as
+    ``"10 minutes"``, in microseconds: a tenth of the horizon (1 minute for
+    ``"10 minutes"``, 6 minutes for ``"1 hour"``). Accepts the unit words of
+    Spark's interval strings, which ``withWatermark`` parses."""
+    words = watermark.lower().split()
+    if words[:1] == ["interval"]:
+        words = words[1:]
+    units = [u.removesuffix("s") for u in words[1::2]]
+    if not units or len(words) % 2 or not set(units) <= _INTERVAL_UNIT_US.keys():
+        raise ValueError(f"not a watermark interval: {watermark!r}")
+    horizon = sum(float(n) * _INTERVAL_UNIT_US[u] for n, u in zip(words[::2], units))
+    return max(1, round(horizon) // 10)
+
+
+def ceil_to_ingest_tick(ts: Column, watermark: str) -> Column:
+    """``ts`` rounded up to the next multiple of ``ingest_tick_us(watermark)``
+    since the epoch; a timestamp on a tick boundary maps to itself."""
+    us = F.unix_micros(ts)
+    return F.timestamp_micros(us + F.pmod(-us, F.lit(ingest_tick_us(watermark))))
+
+
 def corpus_dedup_stream(docs: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming exact dedup on the content digest. State is bounded by an
-    ingest-time watermark: a digest is only held long enough to catch
-    duplicates within the horizon (dropDuplicatesWithinWatermark), after which
-    the state store evicts it — the standard arrival-rate × horizon sizing."""
+    ingest-time watermark: a digest is held for at least the horizon to catch
+    its duplicates (dropDuplicatesWithinWatermark), after which the state store
+    evicts it — the standard arrival-rate × horizon sizing.
+
+    ``ingest_ts`` is the trigger time rounded *up* to the ingest tick (a tenth
+    of the horizon), so eviction happens at tick granularity. Rounding up
+    never evicts a digest earlier than the raw clock would, and a new row is
+    never behind the watermark, so no row is dropped as late. The tick keeps
+    the watermark still between tick boundaries: on the raw clock it moves on
+    every trigger, and Spark follows each move with a no-data micro-batch
+    that only evicts state."""
     keyed = docs.select(
         "doc_id",
         F.md5(F.col("text")).alias("digest"),
-        F.current_timestamp().alias("ingest_ts"),
+        ceil_to_ingest_tick(F.current_timestamp(), watermark).alias("ingest_ts"),
     )
     return keyed.withWatermark("ingest_ts", watermark).dropDuplicatesWithinWatermark(
         ["digest"]

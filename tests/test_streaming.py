@@ -266,6 +266,151 @@ def test_corpus_dedup_stream_distinct_digests(spark, sf_dir, documents_dir, tmp_
     assert spark.table("deduped_docs").count() == len(want)
 
 
+def test_ingest_tick_rounds_up_literal_timestamps(spark):
+    """The dedup stream's ingest tick is a tenth of the watermark horizon, and
+    rounding to it goes up: never below the input, less than one tick above
+    it, and an exact tick boundary maps to itself."""
+    from datetime import datetime, timezone
+
+    import pyspark.sql.functions as F
+
+    from legate_pandas_spark.streaming.documents import ceil_to_ingest_tick, ingest_tick_us
+
+    ticks = {"10 minutes": 60_000_000, "1 hour": 360_000_000, "30 seconds": 3_000_000}
+    assert {w: ingest_tick_us(w) for w in ticks} == ticks
+    assert ingest_tick_us("interval 1 hour") == ingest_tick_us("60 MINUTES")
+    with pytest.raises(ValueError):
+        ingest_tick_us("10 min")
+
+    def us(*dt):
+        return int(datetime(*dt, tzinfo=timezone.utc).timestamp()) * 1_000_000
+
+    stamps = [
+        us(2026, 10, 17, 19, 30),  # a boundary of every tick above
+        us(2026, 10, 17, 19, 30) + 1,
+        us(2026, 10, 17, 19, 30) - 1,
+        us(2026, 10, 17, 19, 59, 59) + 999_999,
+        us(2024, 2, 29, 23, 58, 31) + 250_000,
+        0,
+        -1,
+    ]
+    df = spark.createDataFrame([(u,) for u in stamps], "u long").select(
+        "u",
+        *[
+            F.unix_micros(ceil_to_ingest_tick(F.timestamp_micros("u"), w)).alias(w)
+            for w in ticks
+        ],
+    )
+    for row in df.collect():
+        for w, tick in ticks.items():
+            up = row[w]
+            assert row["u"] <= up < row["u"] + tick, (w, row)
+            assert up % tick == 0, (w, row)
+            if row["u"] % tick == 0:
+                assert up == row["u"], (w, row)
+
+
+def _feed_one_file_per_trigger(query, in_dir, frames, start=0):
+    """Drop each frame into ``in_dir`` as its own parquet file and run the
+    query to completion on it: one trigger per file."""
+    import os
+
+    for i, pdf in enumerate(frames, start):
+        staged = os.path.join(os.path.dirname(in_dir), f"shard{i:03d}.parquet")
+        pdf.to_parquet(staged, index=False)
+        os.rename(staged, os.path.join(in_dir, f"shard{i:03d}.parquet"))
+        query.processAllAvailable()
+
+
+def test_corpus_dedup_stream_runs_no_data_batch_once_per_tick(spark, sf_dir, tmp_path):
+    """The watermark moves only when the ingest tick does, so Spark's no-data
+    eviction batch runs once after the first data batch and at most once per
+    tick boundary after that, not after every trigger. Progress entries of
+    idle triggers (no batch ran, so no addBatch duration) are not counted."""
+    import time
+
+    import pandas as pd
+
+    from legate_pandas_spark.streaming import corpus_dedup_stream, stream_documents
+    from legate_pandas_spark.streaming.documents import ingest_tick_us
+
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    shards = [docs.iloc[i::8] for i in range(8)]
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    tick = ingest_tick_us("10 minutes")
+    t0 = time.time_ns() // 1000
+    q = (
+        corpus_dedup_stream(stream_documents(spark, str(in_dir)))
+        .writeStream.format("memory")
+        .queryName("dedup_ticks")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        _feed_one_file_per_trigger(q, str(in_dir), shards)
+        progress = q.recentProgress
+    finally:
+        q.stop()
+    t1 = time.time_ns() // 1000
+    ran = [p for p in progress if "addBatch" in p["durationMs"]]
+    assert sum(1 for p in ran if p["numInputRows"]) == len(shards)
+    no_data = sum(1 for p in ran if p["numInputRows"] == 0)
+    boundaries = -(-t1 // tick) - -(-t0 // tick)  # multiples of the tick in [t0, t1)
+    assert no_data <= 1 + boundaries, (no_data, boundaries)
+    assert spark.table("dedup_ticks").count() == docs["text"].nunique()
+
+
+def test_corpus_dedup_stream_restart_matches_batch_twin(spark, sf_dir, tmp_path):
+    """Stop the dedup query after k shards, restart it on the same checkpoint
+    and feed the rest, including exact duplicates of texts seen before the
+    restart: the output holds the batch twin's digest set, each digest once."""
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    from legate_pandas_spark.streaming import corpus_dedup_stream, stream_documents
+    from legate_pandas_spark.streaming.documents import DOCUMENTS_SCHEMA
+
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    shards = [docs.iloc[i::6] for i in range(6)]
+    k = 3
+    seen = pd.concat(shards[:k])
+    redo = seen.iloc[::4].assign(doc_id=seen["doc_id"].iloc[::4] + 10**9)
+    after = [shards[k], redo, shards[k + 1], pd.concat([shards[k + 2], redo.iloc[:5]])]
+    in_dir, out_dir = tmp_path / "in", str(tmp_path / "out")
+    in_dir.mkdir()
+
+    def start():
+        return (
+            corpus_dedup_stream(stream_documents(spark, str(in_dir)))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .outputMode("append")
+            .start()
+        )
+
+    q = start()
+    try:
+        _feed_one_file_per_trigger(q, str(in_dir), shards[:k])
+    finally:
+        q.stop()
+    before = spark.read.parquet(out_dir).count()
+    assert before == seen["text"].nunique()
+    q = start()
+    try:
+        _feed_one_file_per_trigger(q, str(in_dir), after, start=k)
+    finally:
+        q.stop()
+    got = spark.read.parquet(out_dir).select("digest").toPandas()["digest"]
+    batch = spark.read.schema(DOCUMENTS_SCHEMA).parquet(str(in_dir))
+    want = {r[0] for r in batch.select(F.md5("text")).distinct().collect()}
+    assert len(redo) > 0 and batch.count() == len(docs) + len(redo) + 5
+    assert set(got) == want
+    assert len(got) == len(want)  # no digest re-emitted after the restart
+
+
 def test_windowed_distinct_users_matches_batch(spark, sf_dir, events_dir):
     """Streaming HLL distinct-user counts must equal the same batch
     aggregation (sketch merge is commutative, so batch vs available-now
