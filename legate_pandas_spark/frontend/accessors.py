@@ -447,7 +447,7 @@ class StringMethods:
         else:
             pos = f"__exa_{next(_seq)}__"
             fresh = ROW_ORDER not in frame._sdf.columns
-            sdf, _total = _attach_positions(
+            sdf, _ = _attach_positions(
                 frame._ordered_sdf(), fresh, pos_name=pos
             )
             # avoid clobbering a user column literally named 'index'

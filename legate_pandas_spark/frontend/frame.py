@@ -969,7 +969,7 @@ class DataFrame:
 
             name = "index" if "index" not in self.columns else "level_0"
             fresh = ROW_ORDER not in self._sdf.columns
-            with_pos, _total = _attach_positions(
+            with_pos, _ = _attach_positions(
                 self._ordered_sdf(), fresh, pos_name=name
             )
             helpers = [c for c in with_pos.columns if c.startswith("__") and c.endswith("__")]
@@ -1234,7 +1234,7 @@ class DataFrame:
         uniq = next(_seq)
         POS = f"__fip_{uniq}__"
         fresh = ROW_ORDER not in self._sdf.columns
-        sdf, _total = _attach_positions(self._ordered_sdf(), fresh, pos_name=POS)
+        sdf, _ = _attach_positions(self._ordered_sdf(), fresh, pos_name=POS)
         fwd, bwd, names = {}, {}, {}
         for i, c in enumerate(targets):
             d = F.col(c).cast("double")
@@ -2052,7 +2052,7 @@ class DataFrame:
                 key = F.col(f._index[0])
             else:
                 fresh = ROW_ORDER not in f._sdf.columns
-                with_pos, _total = _attach_positions(
+                with_pos, _ = _attach_positions(
                     f._ordered_sdf(), fresh, pos_name="__cbkey__"
                 )
                 return with_pos.select(
@@ -2254,12 +2254,13 @@ class DataFrame:
         # pandas melt(ignore_index=False): variable-major ordering — order
         # key = var_index * n_rows + original position (needs the contiguous
         # position, so attach the partition-offset positions first)
-        from legate_pandas_spark.frontend.indexing import _attach_positions
+        from legate_pandas_spark.frontend.indexing import _attach_positions, _row_count
 
         pos = "__melt_pos__"
-        sdf, total = _attach_positions(
+        sdf, offsets = _attach_positions(
             self._ordered_sdf(), ROW_ORDER not in self._sdf.columns, pos_name=pos
         )
+        total = _row_count(offsets)
         var_idx = F.array_position(
             F.lit([str(c) for c in value_vars]), F.col(var_name)
         )
@@ -2920,21 +2921,21 @@ class DataFrame:
         equal columns nulled per pandas. Alignment is the partition-offset
         position zip (indexing._attach_positions) — a hash join on a unique
         long, no global sort."""
-        from legate_pandas_spark.frontend.indexing import _attach_positions
+        from legate_pandas_spark.frontend.indexing import _attach_positions, _row_count
 
         if self.columns != other.columns:
             raise ValueError("compare: columns must match")
         pos = "__cmp_pos__"
-        left, n_left = _attach_positions(
+        left, left_offsets = _attach_positions(
             self._ordered_sdf(), ROW_ORDER not in self._sdf.columns, pos_name=pos
         )
-        right, n_right = _attach_positions(
+        right, right_offsets = _attach_positions(
             other._ordered_sdf(), ROW_ORDER not in other._sdf.columns, pos_name=pos
         )
+        n_left, n_right = _row_count(left_offsets), _row_count(right_offsets)
         if n_left != n_right:
             # pandas: 'Can only compare identically-labeled DataFrame
-            # objects'. The totals fall out of the position-offset pass, so
-            # this check costs no extra job.
+            # objects'. One count job per side.
             raise ValueError(
                 "compare: can only compare identically-labeled DataFrame "
                 f"objects (lengths {n_left} != {n_right})"
@@ -3501,7 +3502,6 @@ class Expanding:
     def _apply(self, kind: str, ddof: int = 1) -> DataFrame:
         from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
         from legate_pandas_spark.frontend.scan import (
-            _add,
             _local_window,
             _seq,
             attach_carries,
@@ -3519,20 +3519,20 @@ class Expanding:
         for i, c in enumerate(cols):
             d = F.col(c).cast("double")
             kc = f"__exn_{uniq}_{i}__"
-            specs[kc] = (F.count(F.col(c)), _add)
+            specs[kc] = (F.count(F.col(c)), "sum")
             ks = km = kq = None
             if kind in ("sum", "mean", "var", "std"):
                 ks = f"__exs_{uniq}_{i}__"
-                specs[ks] = (F.sum(F.col(c)), _add)
+                specs[ks] = (F.sum(F.col(c)), "sum")
             if kind in ("var", "std"):
                 kq = f"__exq_{uniq}_{i}__"
-                specs[kq] = (F.sum(d * d), _add)
+                specs[kq] = (F.sum(d * d), "sum")
             if kind == "max":
                 km = f"__exm_{uniq}_{i}__"
-                specs[km] = (F.max(F.col(c)), max)
+                specs[km] = (F.max(F.col(c)), "max")
             if kind == "min":
                 km = f"__exm_{uniq}_{i}__"
-                specs[km] = (F.min(F.col(c)), min)
+                specs[km] = (F.min(F.col(c)), "min")
             keys[c] = (kc, ks, kq, km)
         out_sdf = attach_carries(sdf, specs) if specs else sdf
         lw = _local_window()

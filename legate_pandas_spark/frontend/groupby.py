@@ -893,7 +893,7 @@ class SeriesGroupBy:
         else:
             pos = f"__gidx_{next(_seq)}__"
             fresh = ROW_ORDER not in gb._df._sdf.columns
-            sdf, _total = _attach_positions(
+            sdf, _ = _attach_positions(
                 gb._df._ordered_sdf(), fresh, pos_name=pos
             )
             label = pos

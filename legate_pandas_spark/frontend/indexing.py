@@ -9,9 +9,12 @@ The reference binary-searches index bounds then range-slices regions
 * positional slicing (iloc) → partition-offset arithmetic, the reference's
   FIND_BOUNDS + weighted-partition design (core/table.py:629-772,
   core/runtime.py:1001-1008): one tiny aggregate computes per-partition row
-  counts, the driver prefix-sums them into offsets (num_partitions scalars),
-  and position = partition offset + partition-local rank. Every stage stays
-  partition-parallel — no global (unpartitioned) window anywhere.
+  counts, an in-plan exclusive prefix (``exclusive_prefix``, a broadcast
+  self-join over those num_partitions rows) turns them into offsets, and
+  position = partition offset + partition-local rank. Building it runs no
+  Spark job; every stage stays partition-parallel — no global (unpartitioned)
+  window anywhere. The same prefix serves every two-phase scan in
+  ``frontend/scan.py``.
 * scatter updates (``df.loc[mask, col] = v``) → copy-on-write conditional
   projection (reference scatter_by_mask, core/table.py:697-762).
 """
@@ -29,52 +32,168 @@ _PID_BITS = 33
 _pos_seq = itertools.count()
 
 
-def _attach_positions(sdf, fresh: bool, pos_name: str = "__pos__", with_offsets: bool = False):
-    """Return (sdf + global position column, total row count) — or, with
-    ``with_offsets``, (sdf, total, [(pid, start_position, count), ...]).
+def _pid_bound(sdf):
+    """Partition count of ``sdf`` (the key-count hint for ``exclusive_prefix``),
+    or None when the probe fails.
 
-    Mirrors the reference's FIND_BOUNDS: per-partition counts (one cheap
-    aggregate whose result is num_partitions scalars) → driver prefix-sum →
-    broadcast-joined offsets; position = offset[pid] + local rank. When the
-    order key was attached fresh on this plan (``fresh``) the local counter in
-    the id's low bits is contiguous, so the rank is pure arithmetic; after
-    filters it is a rank over a window PARTITIONED by pid (parallel, never a
-    single task).
+    ``getNumPartitions`` plans the DataFrame's RDD. On a plain scan or a
+    checkpoint that runs no job; on a shuffled input without a checkpoint it
+    runs the shuffle's upstream stages at call time (measured: 2 jobs after a
+    sort, 1 after a join or a ``groupBy``)."""
+    try:
+        return sdf.rdd.getNumPartitions()
+    except Exception:
+        return None
+
+
+def _fold(combine: str, src, order, reverse: bool):
+    """Aggregate folding ``src`` over a group of rows; 'last' keeps the value
+    at the highest non-null ``order`` (the lowest when ``reverse``)."""
+    if combine == "last":
+        return (F.min_by if reverse else F.max_by)(src, F.when(src.isNotNull(), order))
+    return {"sum": F.sum, "max": F.max, "min": F.min}[combine](src)
+
+
+# combine a within-bucket prefix (nearer) with the earlier buckets' prefix;
+# either may be null
+_MERGE = {
+    "sum": lambda near, far: F.coalesce(near + far, near, far),
+    "max": F.greatest,
+    "min": F.least,
+    "last": F.coalesce,
+}
+
+
+def exclusive_prefix(
+    table, key: str, combines: dict, reverse: bool = False, keep=(),
+    n_keys=None, force_two_level=None,
+):
+    """Exclusive prefix over a small keyed table, in the plan — the middle
+    step of every two-phase scan (positions, scan carries, rank offsets).
+
+    ``table`` has one row per ``key`` value. ``combines`` maps output name ->
+    (source column, combine), combine one of 'sum', 'max', 'min' or 'last':
+    each output folds the source values of every PRECEDING key (FOLLOWING
+    when ``reverse``), skipping nulls; 'last' is the nearest non-null one.
+    An output with nothing to fold is null. Returns one row per key: ``key``,
+    the ``keep`` columns and the outputs, typed like their sources.
+
+    With ``n_keys`` ≤ 1024: one broadcast non-equi self-join + re-aggregate
+    (fewest plan stages — A/B-measured ~0.4 s faster per query than the
+    two-level form at local[32]). Otherwise, or when ``n_keys`` is unknown
+    (None): TWO-LEVEL, keys bucketed by key >> 10 — a bucket-equi self-join
+    with a residual key comparison, plus the prefix over the ≤ n/1024 bucket
+    folds: O(n·1024 + (n/1024)²) pairs, ~8·10⁸ for an 800k-split scan instead
+    of 6·10¹¹. ``force_two_level`` pins the branch (test hook). Neither path
+    has a SinglePartition exchange or a driver collect."""
+
+    def prefix(t, k, folds: dict, group: list, by=None):
+        """Fold each ``folds`` source over the rows of ``t`` whose ``k`` comes
+        before the row's own (within the same ``by``): a broadcast self-join."""
+        dtypes = {f.name: f.dataType for f in t.schema.fields}
+        uniq = next(_pos_seq)
+        rk, rb = f"__xk_{uniq}__", f"__xb_{uniq}__"
+        r = {o: f"__xr_{uniq}_{i}__" for i, o in enumerate(folds)}
+        right = t.select(
+            F.col(k).alias(rk),
+            *([F.col(by).alias(rb)] if by else []),
+            *[F.col(src).alias(r[o]) for o, (src, _) in folds.items()],
+        )
+        cond = F.col(rk) > F.col(k) if reverse else F.col(rk) < F.col(k)
+        if by:
+            cond = (F.col(rb) == F.col(by)) & cond
+        return (
+            t.join(F.broadcast(right), cond, "left")
+            .groupBy(*group)
+            .agg(*[
+                _fold(comb, F.col(r[o]), F.col(rk), reverse).cast(dtypes[src]).alias(o)
+                for o, (src, comb) in folds.items()
+            ])
+        )
+
+    if force_two_level is None:
+        single = n_keys is not None and n_keys <= 1024
+    else:
+        single = not force_two_level
+    if single:
+        return prefix(table, key, combines, [key, *keep])
+    uniq = next(_pos_seq)
+    B = f"__xbk_{uniq}__"
+    near = {o: f"__xn_{uniq}_{i}__" for i, o in enumerate(combines)}
+    far = {o: f"__xf_{uniq}_{i}__" for i, o in enumerate(combines)}
+    t = table.withColumn(B, F.shiftright(F.col(key), 10))
+    intra = prefix(t, key, {near[o]: c for o, c in combines.items()}, [key, *keep, B], by=B)
+    # each bucket folded whole, then the exclusive prefix over the buckets
+    btot = t.groupBy(B).agg(*[
+        _fold(comb, F.col(src), F.col(key), reverse).alias(far[o])
+        for o, (src, comb) in combines.items()
+    ])
+    boff = prefix(btot, B, {far[o]: (far[o], comb) for o, (_, comb) in combines.items()}, [B])
+    return intra.join(F.broadcast(boff), B, "left").select(
+        key,
+        *keep,
+        *[
+            _MERGE[comb](F.col(near[o]), F.col(far[o])).cast(table.schema[src].dataType).alias(o)
+            for o, (src, comb) in combines.items()
+        ],
+    )
+
+
+def _attach_positions(sdf, fresh: bool, pos_name: str = "__pos__", force_two_level=None):
+    """Return (sdf + global position column, offsets DataFrame with columns
+    (pid, start, cnt)). Nothing is collected: on a scan or checkpoint input,
+    building them runs no Spark job.
+
+    Mirrors the reference's FIND_BOUNDS: per-partition counts (one small
+    aggregate, num_partitions rows) → in-plan exclusive prefix
+    (``exclusive_prefix``) → broadcast-joined offsets; position = offset[pid]
+    + local rank. When the order key was attached fresh on this plan
+    (``fresh``) the local counter in the id's low bits is contiguous, so the
+    rank is pure arithmetic; after filters it is a rank over a window
+    PARTITIONED by pid (parallel, never a single task). A caller that needs
+    the row count as a Python value takes it with ``_row_count(offsets)``.
+
+    The input is read twice in one plan (counts and rows), so an expensive
+    lineage is checkpointed first (``scan._stabilize``); without that, chained
+    position-based ops (``shift`` on ``shift``) double the plan each time.
     """
     from legate_pandas_spark.frontend.frame import ROW_ORDER
+    from legate_pandas_spark.frontend.scan import _stabilize
 
-    spark = sdf.sparkSession
+    sdf = _stabilize(sdf)
     pid = F.shiftright(F.col(ROW_ORDER), _PID_BITS)
     if fresh:
         local = F.col(ROW_ORDER) - F.shiftleft(pid, _PID_BITS)
     else:
         w = Window.partitionBy(pid).orderBy(F.asc(ROW_ORDER))
         local = F.row_number().over(w) - 1
-    counts = (
-        sdf.groupBy(pid.alias("__pid__"))
-        .agg(F.count(F.lit(1)).alias("__cnt__"))
-        .orderBy("__pid__")
-        .collect()
-    )
-    offsets, triples, total = [], [], 0
-    for r in counts:
-        offsets.append((r["__pid__"], total))
-        triples.append((r["__pid__"], total, r["__cnt__"]))
-        total += r["__cnt__"]
-    if not offsets:
-        offsets = [(0, 0)]
     uniq = next(_pos_seq)
-    pid_col, off_col = f"__pid_{uniq}__", f"__off_{uniq}__"
-    off = spark.createDataFrame(offsets, schema=f"{pid_col} long, {off_col} long")
-    out = (
-        sdf.withColumn(pid_col, pid)
-        .join(F.broadcast(off), pid_col, "left")
-        .withColumn(pos_name, (local + F.coalesce(F.col(off_col), F.lit(0))).cast("long"))
-        .drop(pid_col, off_col)
+    P, C, O = f"__lp_{uniq}__", f"__lc_{uniq}__", f"__lo_{uniq}__"
+    cnt = sdf.groupBy(pid.alias(P)).agg(F.count(F.lit(1)).alias(C))
+    off = exclusive_prefix(
+        cnt, P, {O: (C, "sum")}, keep=[C],
+        n_keys=_pid_bound(sdf), force_two_level=force_two_level,
     )
-    if with_offsets:
-        return out, total, triples
-    return out, total
+    with_pos = (
+        sdf.withColumn(P, pid)
+        .join(F.broadcast(off.select(P, O)), P, "left")
+        .withColumn(pos_name, (local + F.coalesce(F.col(O), F.lit(0))).cast("long"))
+        .drop(P, O)
+    )
+    offsets = off.select(
+        F.col(P).alias("pid"),
+        F.coalesce(F.col(O), F.lit(0)).alias("start"),
+        F.col(C).alias("cnt"),
+    )
+    return with_pos, offsets
+
+
+def _row_count(offsets) -> int:
+    """Row count of a positioned frame as a Python value — ONE Spark job over
+    its offsets table (num_partitions rows). Only for results pandas computes
+    from the count on the driver (a raised IndexError, skipfooter, equals,
+    melt, compare)."""
+    return offsets.agg(F.sum("cnt")).first()[0] or 0
 
 
 class LocIndexer:
@@ -156,21 +275,24 @@ class ILocIndexer:
             key, cols = key
         fresh = ROW_ORDER not in df._sdf.columns
         sdf = df._ordered_sdf()
-        with_pos, total = _attach_positions(sdf, fresh)
+        with_pos, offsets = _attach_positions(sdf, fresh)
         if isinstance(key, slice):
             start = key.start or 0
-            if start < 0:
-                start = max(total + start, 0)
             stop = key.stop
-            if stop is not None and stop < 0:
-                stop = total + stop
+            if start < 0 or (stop is not None and stop < 0):
+                total = _row_count(offsets)  # a negative bound counts from the end
+                if start < 0:
+                    start = max(total + start, 0)
+                if stop is not None and stop < 0:
+                    stop = total + stop
             cond = F.col("__pos__") >= start
             if stop is not None:
                 cond = cond & (F.col("__pos__") < stop)  # iloc stop exclusive
             out = df._carry_proofs(df._replace(with_pos.filter(cond).drop("__pos__")))
         elif isinstance(key, int):
+            total = _row_count(offsets)  # pandas raises IndexError past the end
             if key < 0:
-                key = total + key  # total came free with the offsets aggregate
+                key = total + key
             if key < 0 or key >= total:
                 raise IndexError("single positional indexer is out-of-bounds")
             out = df._carry_proofs(
@@ -182,9 +304,10 @@ class ILocIndexer:
             # driver-built (position, output_rank) frame (the key list is
             # driver-resident by construction) and make the rank the new
             # row-order key.
-            positions = [int(p) if p >= 0 else total + int(p) for p in key]
             # pandas raises rather than silently dropping rows that would
-            # fall out of the inner join below (total is already driver-side)
+            # fall out of the inner join below
+            total = _row_count(offsets)
+            positions = [int(p) if p >= 0 else total + int(p) for p in key]
             if any(p < 0 or p >= total for p in positions):
                 raise IndexError("positional indexers are out-of-bounds")
             want = with_pos.sparkSession.createDataFrame(
@@ -245,9 +368,9 @@ class AtIndexer:
             name = df.columns[col] if isinstance(col, int) else col
             fresh = ROW_ORDER not in df._sdf.columns
             sdf = df._ordered_sdf()
-            with_pos, total = _attach_positions(sdf, fresh)
+            with_pos, offsets = _attach_positions(sdf, fresh)
             if row < 0:
-                row = total + row
+                row = _row_count(offsets) + row
             df._sdf = with_pos.withColumn(
                 name, F.when(F.col("__pos__") == row, F.lit(value)).otherwise(F.col(name))
             ).drop("__pos__")

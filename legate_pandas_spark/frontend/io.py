@@ -251,17 +251,17 @@ def read_csv(
     if skiprows or skipfooter:
         # positional skip via partition-offset arithmetic (same FIND_BOUNDS
         # design as iloc, indexing._attach_positions): per-partition counts →
-        # driver prefix-sum → partition-local range filter. No global sort.
+        # in-plan prefix → partition-local range filter. No global sort.
         # skipfooter (reference option table, frontend/io.py:125-369) drops
-        # the LAST n rows — the total came free with the offsets aggregate.
+        # the LAST n rows, so it takes the row count: one job.
         from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.indexing import _attach_positions
+        from legate_pandas_spark.frontend.indexing import _attach_positions, _row_count
 
         sdf = sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id())
-        with_pos, total = _attach_positions(sdf, fresh=True)
+        with_pos, offsets = _attach_positions(sdf, fresh=True)
         cond = F.col("__pos__") >= skiprows
         if skipfooter:
-            cond = cond & (F.col("__pos__") < total - skipfooter)
+            cond = cond & (F.col("__pos__") < _row_count(offsets) - skipfooter)
         sdf = with_pos.filter(cond).drop("__pos__", ROW_ORDER)
         if dtype is None:
             # pandas infers types AFTER dropping skipped rows; Spark inferred

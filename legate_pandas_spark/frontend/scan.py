@@ -10,11 +10,19 @@ Spark mapping: "piece" = the ingest partition recovered from the row-order
 key's upper bits (``monotonically_increasing_id`` layout — see
 ``indexing._PID_BITS``).
 
-* Phase 1 — ONE small aggregate job: per-pid partials (num_partitions rows
-  collected to the driver, same cost class as ``indexing._attach_positions``).
-* Phase 2 — driver exclusive prefix-combine, then a broadcast join of the
-  per-partition carry; each row combines its partition-LOCAL window scan
-  (``Window.partitionBy(pid)`` — parallel) with the carry.
+* Phase 1 — per-pid partials: one small aggregate (num_partitions rows).
+* Phase 2 — their exclusive prefix-combine, in the plan
+  (``indexing.exclusive_prefix``: a broadcast self-join over the partials —
+  the same helper that computes positions and rank-bucket offsets), then a
+  broadcast join of the per-partition carry; each row combines its
+  partition-LOCAL window scan (``Window.partitionBy(pid)`` — parallel) with
+  the carry.
+
+Building these scans collects nothing, so on a scan or checkpoint input it
+runs no Spark job. What still runs jobs at build time: ``_stabilize``'s
+checkpoint, the rank splitters, ``ordered_row_number``'s eager checkpoints,
+the partition-count probe (``indexing._pid_bound``) on a shuffled input, and
+the global ewm folds, whose decayed combine stays on the driver.
 
 No unpartitioned window anywhere (``tests/test_plans.py`` pins "no
 ``Exchange SinglePartition``" on these plans). shift/diff/pct_change avoid
@@ -27,28 +35,35 @@ from __future__ import annotations
 import itertools
 
 import pyspark.sql.functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from legate_pandas_spark.frontend.indexing import _PID_BITS, _attach_positions
+from legate_pandas_spark.frontend.indexing import (
+    _PID_BITS,
+    _attach_positions,
+    _pid_bound,
+    exclusive_prefix,
+)
 
 _seq = itertools.count()
 
 
 def _stabilize(sdf):
-    """Materialize a multi-job scan input once when recomputing it is
-    expensive (round-7: pd_global_rank_rolling profiling).
+    """Checkpoint a scan input whose lineage is expensive to replay
+    (round-7: pd_global_rank_rolling profiling).
 
-    The two-phase machinery (rank buckets, position offsets, carries) runs
-    2-3 driver-blocking jobs plus the final stage over the SAME input. When
-    that input's lineage contains a Sort/Join/Window — e.g. the post-
-    `sort_values` frame, whose orderBy re-runs its range-partitioner SAMPLING
-    job on every execution — each phase replays the whole chain (measured:
-    the rank counts job alone cost 1.1s on a 5k-row frame). A lazy
-    localCheckpoint materializes the frame into executor-local blocks on the
-    first phase job; later phases read the blocks. Cheap lineages (pruned
-    parquet scans) are NOT checkpointed — re-scanning a pruned column beats
-    materializing the full width once."""
+    The two-phase machinery (rank splitters, position offsets, carries)
+    reads the SAME input several times. When that input's lineage contains a
+    Sort/Join/Window — e.g. the post-`sort_values` frame, whose orderBy
+    re-runs its range-partitioner SAMPLING job on every execution — each read
+    replays the whole chain. ``localCheckpoint(eager=False)`` cuts it: later
+    reads (and the final plan) scan executor-local blocks. It is NOT free at
+    call time: under AQE, building the checkpoint's RDD runs every upstream
+    shuffle stage now (measured at sf0.01, warm: 32 of the six facade census
+    queries' 65 build-time jobs). It is load-bearing all the same — without
+    it ``pd_rolling_median_quantile``'s plan grows from 18 to 98 exchanges
+    and from 6 to 62 sorts. Cheap lineages (pruned parquet scans) are NOT
+    checkpointed — re-scanning a pruned column beats materializing the full
+    width once."""
     try:
         plan = sdf._jdf.queryExecution().optimizedPlan().toString()
     except Exception:
@@ -78,51 +93,30 @@ def _local_window(following: bool = False):
     return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 
 
-def attach_carries(sdf, specs: dict, reverse: bool = False):
+def attach_carries(sdf, specs: dict, reverse: bool = False, force_two_level=None):
     """Attach one nullable carry column per spec.
 
-    ``specs`` maps carry-column name -> (partial_agg_expr, combine_fn); the
-    carry holds ``combine`` folded over all PRECEDING partitions' partials
+    ``specs`` maps carry-column name -> (partial_agg_expr, combine), combine
+    one of ``exclusive_prefix``'s ('sum', 'max', 'min', 'last'); the carry
+    holds ``combine`` folded over all PRECEDING partitions' partials
     (FOLLOWING when ``reverse``), null when none have data. All specs share
-    one phase-1 aggregate job.
+    one per-pid aggregate, and the prefix stays in the plan.
     """
     sdf = _stabilize(sdf)
-    agg_df = (
-        sdf.groupBy(_pid().alias("__pid__"))
-        .agg(*[e.alias(n) for n, (e, _) in specs.items()])
-        .orderBy("__pid__")
-    )
-    field_types = {f.name: f.dataType for f in agg_df.schema.fields}
-    rows = agg_df.collect()
-    if reverse:
-        rows = list(reversed(rows))
-    names = list(specs)
-    acc = {n: None for n in names}
-    data = []
-    for r in rows:
-        data.append(tuple([r["__pid__"]] + [acc[n] for n in names]))
-        for n in names:
-            v = r[n]
-            if v is not None:
-                acc[n] = v if acc[n] is None else specs[n][1](acc[n], v)
     uniq = next(_seq)
     pid_col = f"__carry_pid_{uniq}__"
-    schema = T.StructType(
-        [T.StructField(pid_col, T.LongType(), False)]
-        + [T.StructField(n, field_types[n], True) for n in names]
+    partials = sdf.groupBy(_pid().alias(pid_col)).agg(
+        *[e.alias(n) for n, (e, _) in specs.items()]
     )
-    if not data:
-        data = [tuple([0] + [None] * len(names))]
-    carry_df = sdf.sparkSession.createDataFrame(data, schema)
+    carry_df = exclusive_prefix(
+        partials, pid_col, {n: (n, comb) for n, (_, comb) in specs.items()},
+        reverse=reverse, n_keys=_pid_bound(sdf), force_two_level=force_two_level,
+    )
     return (
         sdf.withColumn(pid_col, _pid())
         .join(F.broadcast(carry_df), pid_col, "left")
         .drop(pid_col)
     )
-
-
-def _add(a, b):
-    return a + b
 
 
 def cum_columns(sdf, cols: dict, kind: str):
@@ -138,24 +132,24 @@ def cum_columns(sdf, cols: dict, kind: str):
     for i, (out, c) in enumerate(cols.items()):
         if kind == "sum":
             k = f"__cs_{uniq}_{i}__"
-            specs[k] = (F.sum(c), _add)
+            specs[k] = (F.sum(c), "sum")
             parts[out] = ("sum", c, [k])
         elif kind == "max":
             k = f"__cx_{uniq}_{i}__"
-            specs[k] = (F.max(c), max)
+            specs[k] = (F.max(c), "max")
             parts[out] = ("max", c, [k])
         elif kind == "min":
             k = f"__cn_{uniq}_{i}__"
-            specs[k] = (F.min(c), min)
+            specs[k] = (F.min(c), "min")
             parts[out] = ("min", c, [k])
         elif kind == "prod":
             d = c.cast("double")
             kn = f"__cpn_{uniq}_{i}__"  # count of negatives (sign parity)
             kl = f"__cpl_{uniq}_{i}__"  # sum of log|x| over non-zero
             kz = f"__cpz_{uniq}_{i}__"  # any-zero flag
-            specs[kn] = (F.sum(F.when(d < 0, 1).otherwise(0)), _add)
-            specs[kl] = (F.sum(F.when(d.isNotNull() & (d != 0), F.log(F.abs(d)))), _add)
-            specs[kz] = (F.max((d == 0).cast("int")), max)
+            specs[kn] = (F.sum(F.when(d < 0, 1).otherwise(0)), "sum")
+            specs[kl] = (F.sum(F.when(d.isNotNull() & (d != 0), F.log(F.abs(d)))), "sum")
+            specs[kz] = (F.max((d == 0).cast("int")), "max")
             parts[out] = ("prod", c, [kn, kl, kz])
         else:
             raise ValueError(kind)
@@ -206,11 +200,7 @@ def fill_columns(sdf, cols: dict, forward: bool = True):
         k = f"__fc_{uniq}_{i}__"
         keyed = F.when(c.isNotNull(), F.col(ROW_ORDER))
         # per-pid edge value: last (max_by) / first (min_by) non-null by order
-        specs[k] = (
-            (F.max_by(c, keyed), lambda a, b: b)
-            if forward
-            else (F.min_by(c, keyed), lambda a, b: b)
-        )
+        specs[k] = (F.max_by(c, keyed) if forward else F.min_by(c, keyed), "last")
         keys[out] = (c, k)
     out_sdf = attach_carries(sdf, specs, reverse=not forward)
     w = _local_window(following=not forward)
@@ -267,13 +257,14 @@ def rank_column(
     """Append one global value-rank column — two-phase range-bucketed rank,
     no unpartitioned window (the same carry discipline as ``cum_columns``).
 
-    Phase 0: splitter boundaries (one aggregate) define a bucket id that is
+    Phase 0: splitter boundaries (one aggregate, collected: the rank's only
+    build-time job besides ``_stabilize``) define a bucket id that is
     MONOTONIC in the value, so same values share a bucket and global rank =
-    per-bucket carry + partition-local rank.
-    Phase 1: per-bucket (row count, distinct count) — num_buckets scalars to
-    the driver, exclusive prefix-summed in rank order.
+    per-bucket offset + partition-local rank.
+    Phase 1: per-bucket (row count, distinct count) — ≤ 64 rows — and their
+    exclusive prefix in rank order, in the plan (``exclusive_prefix``).
     Phase 2: local rank over ``Window.partitionBy(bucket)`` + broadcast-joined
-    carry. Ties never straddle buckets by construction.
+    offsets. Ties never straddle buckets by construction.
 
     Methods: 'min' (SQL rank), 'dense', 'first' (row order breaks ties),
     'average' (min + (peers-1)/2; peers via the RANGE CURRENT ROW frame on the
@@ -281,6 +272,8 @@ def rank_column(
     default); 'top'/'bottom' → nulls rank before/after every value (they share
     the null bucket, so their ranks are pure offset arithmetic). ``pct``
     divides by the non-null total ('keep') or the row total (otherwise).
+    The null count and the totals those need come from a one-row aggregate
+    over the per-bucket counts, cross-joined in the plan.
     """
     from legate_pandas_spark.frontend.frame import ROW_ORDER
 
@@ -294,111 +287,92 @@ def rank_column(
     # dense pct normalization; countDistinct forces an Expand + second
     # shuffle, so skip it for the other methods (round-7 profiling: it
     # doubled the phase-1 job cost)
-    need_d = method == "dense" or (pct and method == "dense")
-    aggs = [F.count(F.lit(1)).alias("__n__")]
-    aggs.append(
-        F.countDistinct(c).alias("__d__") if need_d else F.lit(0).alias("__d__")
-    )
+    aggs = [
+        F.count(F.lit(1)).alias("__n__"),
+        F.countDistinct(c).alias("__d__") if method == "dense" else F.lit(0).alias("__d__"),
+    ]
     off_n, off_d = f"__ro_{uniq}__", f"__rd_{uniq}__"
-    if na_option == "keep" and not pct:
-        # COLLECT-FREE offsets (round-8 job-count reduction): the rank's
-        # cross-bucket offsets need no driver scalars here (no pct
-        # denominator, no null-rank literals), so the exclusive prefix over
-        # the ≤64-row bucket-count table is computed IN the plan by a
-        # broadcast non-equi self-join + re-aggregate — no SinglePartition
-        # window, no driver-blocking job; the whole rank becomes one Spark
-        # job instead of two.
-        cnt = (
-            bsdf.filter(F.col(bkt).isNotNull()).groupBy(bkt).agg(*aggs)
+    tot_cols = [f"__rnn_{uniq}__", f"__rtn_{uniq}__", f"__rtd_{uniq}__"]
+    cnt = bsdf.filter(F.col(bkt).isNotNull()).groupBy(bkt).agg(*aggs)
+    off_df = exclusive_prefix(
+        cnt, bkt, {off_n: ("__n__", "sum"), off_d: ("__d__", "sum")},
+        reverse=not ascending, n_keys=len(bounds) + 1,
+    ).select(
+        bkt,
+        F.coalesce(F.col(off_n), F.lit(0)).alias(off_n),
+        F.coalesce(F.col(off_d), F.lit(0)).alias(off_d),
+    )
+    joined = bsdf.join(F.broadcast(off_df), bkt, "left")
+    on, od = F.col(off_n), F.col(off_d)
+    if pct or na_option != "keep":
+        # null count, non-null total, distinct total: ONE row, grouped on a
+        # constant (a global aggregate would add a SinglePartition exchange)
+        isnull, n, d = F.col(bkt).isNull(), F.col("__n__"), F.col("__d__")
+        tot = bsdf.groupBy(bkt).agg(*aggs).groupBy(F.lit(0).alias(bkt)).agg(
+            F.coalesce(F.sum(F.when(isnull, n)), F.lit(0)).alias(tot_cols[0]),
+            F.coalesce(F.sum(F.when(~isnull, n)), F.lit(0)).alias(tot_cols[1]),
+            F.coalesce(F.sum(F.when(~isnull, d)), F.lit(0)).alias(tot_cols[2]),
         )
-        prior = F.col("__bb__") < F.col(bkt) if ascending else F.col("__bb__") > F.col(bkt)
-        rc = cnt.select(
-            F.col(bkt).alias("__bb__"),
-            F.col("__n__").alias("__bn__"),
-            F.col("__d__").alias("__bd__"),
-        )
-        off_df = (
-            cnt.join(F.broadcast(rc), prior, "left")
-            .groupBy(bkt)
-            .agg(
-                F.coalesce(F.sum("__bn__"), F.lit(0)).alias(off_n),
-                F.coalesce(F.sum("__bd__"), F.lit(0)).alias(off_d),
-            )
-        )
-        joined = bsdf.join(F.broadcast(off_df), bkt, "left")
-        counts, null_n, total_nn = [], 0, 0  # driver scalars unused below
-    else:
-        counts = bsdf.groupBy(bkt).agg(*aggs).collect()
-        null_n = sum(r["__n__"] for r in counts if r[bkt] is None)
-        counts = [r for r in counts if r[bkt] is not None]
-        counts.sort(key=lambda r: r[bkt], reverse=not ascending)
-        # nulls-first offsets when they outrank every value
-        run_n = null_n if na_option == "top" else 0
-        run_d = (1 if null_n else 0) if na_option == "top" else 0
-        offs = []
-        for r in counts:
-            offs.append((r[bkt], run_n, run_d))
-            run_n += r["__n__"]
-            run_d += r["__d__"]
-        total_nn = run_n - (null_n if na_option == "top" else 0)
-        off_df = bsdf.sparkSession.createDataFrame(
-            offs or [(0, 0, 0)], schema=f"{bkt} int, {off_n} long, {off_d} long"
-        )
-        joined = bsdf.join(F.broadcast(off_df), bkt, "left")
+        joined = joined.crossJoin(F.broadcast(tot.drop(bkt)))
+        null_n, total_nn, total_d = [F.col(n) for n in tot_cols]
+        has_null = (null_n > 0).cast("long")
+        if na_option == "top":  # every value ranks after the nulls
+            on, od = on + null_n, od + has_null
     order = c.asc() if ascending else c.desc()
     w = Window.partitionBy(F.col(bkt)).orderBy(order)
     if method == "first":
         w = Window.partitionBy(F.col(bkt)).orderBy(order, F.asc(ROW_ORDER))
-        expr = F.col(off_n) + F.row_number().over(w)
+        expr = on + F.row_number().over(w)
     elif method == "dense":
-        expr = F.col(off_d) + F.dense_rank().over(w)
+        expr = od + F.dense_rank().over(w)
     elif method == "average":
         peers = F.count(F.lit(1)).over(
             w.rangeBetween(Window.currentRow, Window.currentRow)
         )
-        expr = F.col(off_n) + F.rank().over(w) + (peers - 1) / 2.0
+        expr = on + F.rank().over(w) + (peers - 1) / 2.0
     elif method == "min":
-        expr = F.col(off_n) + F.rank().over(w)
+        expr = on + F.rank().over(w)
     elif method == "max":
         # rank of the LAST peer: min rank + (peer count - 1)
         peers = F.count(F.lit(1)).over(
             w.rangeBetween(Window.currentRow, Window.currentRow)
         )
-        expr = F.col(off_n) + F.rank().over(w) + (peers - 1)
+        expr = on + F.rank().over(w) + (peers - 1)
     else:
         raise ValueError(f"unsupported rank method: {method!r}")
     expr = expr.cast("double")
-    total_d_nn = sum(r["__d__"] for r in counts)
     if na_option == "keep":
-        # pandas pct: dense ranks normalize by the DISTINCT count (the max
-        # dense rank), every other method by the row count
-        denom = float((total_d_nn if method == "dense" else total_nn) or 1)
-        out_expr = F.when(c.isNotNull(), expr / denom if pct else expr)
+        out_expr = F.when(c.isNotNull(), expr)
+        if pct:
+            # pandas pct: dense ranks normalize by the DISTINCT count (the max
+            # dense rank), every other method by the row count
+            denom = total_d if method == "dense" else total_nn
+            out_expr = out_expr / F.greatest(denom, F.lit(1))
     elif na_option in ("top", "bottom"):
-        base = 0 if na_option == "top" else total_nn
+        base = F.lit(0) if na_option == "top" else total_nn
         if method == "first":
             wn = Window.partitionBy(F.col(bkt)).orderBy(F.asc(ROW_ORDER))
-            null_rank = F.lit(base) + F.row_number().over(wn)
+            null_rank = base + F.row_number().over(wn)
         elif method == "dense":
-            null_rank = F.lit((0 if na_option == "top" else run_d) + 1)
+            null_rank = (F.lit(0) if na_option == "top" else total_d) + 1
         elif method == "average":
-            null_rank = F.lit(base + (1 + null_n) / 2.0)
+            null_rank = base + (null_n + 1) / 2.0
         elif method == "max":
-            null_rank = F.lit(base + null_n)
+            null_rank = base + null_n
         else:  # min
-            null_rank = F.lit(base + 1)
+            null_rank = base + 1
         out_expr = F.when(c.isNotNull(), expr).otherwise(
             null_rank.cast("double")
         )
         if pct:
             if method == "dense":
-                denom = float((total_d_nn + (1 if null_n else 0)) or 1)
+                denom = total_d + has_null
             else:
-                denom = float((total_nn + null_n) or 1)
-            out_expr = out_expr / F.lit(denom)
+                denom = total_nn + null_n
+            out_expr = out_expr / F.greatest(denom, F.lit(1))
     else:
         raise ValueError(f"unsupported na_option: {na_option!r}")
-    return joined.withColumn(out, out_expr).drop(bkt, off_n, off_d)
+    return joined.withColumn(out, out_expr).drop(bkt, off_n, off_d, *tot_cols)
 
 
 def window_quantile_expr(c, w, q: float):
@@ -424,47 +398,28 @@ def ordered_row_number(sdf, order_cols: list, out: str, partitions: int | None =
     core/runtime.py:1001-1008) with no single-partition exchange:
 
     1. range-partition + local sort on the order keys (Spark's
-       RangePartitioner IS the sample sort), pin the partition id as a column
-       and ``localCheckpoint`` so every later job sees the SAME partitions
-       (range sampling is not deterministic across executions);
-    2. per-partition counts (num_partitions scalars) → driver prefix sums;
-    3. row number = broadcast offset + partition-local row_number.
+       RangePartitioner IS the sample sort), a fresh row-order key in sorted
+       order, and ``localCheckpoint`` so every later read sees the SAME
+       partitions (range sampling is not deterministic across executions);
+    2. row number = that frame's global position (``_attach_positions``:
+       per-partition counts and their in-plan exclusive prefix), checkpointed
+       again so consumers read the numbered table, not the prefix joins.
 
     Intended for derived tables whose global ordering IS the result (vocab
-    ranking, dense ids) — the checkpoint materializes the table once.
+    ranking, dense ids; ``sdf`` carries no row-order key of its own). Both
+    checkpoints are eager: the sort and the numbering run when this is called.
     """
-    spark = sdf.sparkSession
-    n_parts = partitions or spark.sparkContext.defaultParallelism
-    uniq = next(_seq)
-    pid_col, off_col = f"__orp_{uniq}__", f"__oro_{uniq}__"
+    from legate_pandas_spark.frontend.frame import ROW_ORDER
+
+    n_parts = partitions or sdf.sparkSession.sparkContext.defaultParallelism
     arranged = (
         sdf.repartitionByRange(n_parts, *order_cols)
         .sortWithinPartitions(*order_cols)
-        .withColumn(pid_col, F.spark_partition_id())
+        .withColumn(ROW_ORDER, F.monotonically_increasing_id())
         .localCheckpoint()
     )
-    counts = (
-        arranged.groupBy(pid_col)
-        .agg(F.count(F.lit(1)).alias("__c__"))
-        .collect()
-    )
-    counts.sort(key=lambda r: r[pid_col])
-    offs, run = [], 0
-    for r in counts:
-        offs.append((r[pid_col], run))
-        run += r["__c__"]
-    off_df = spark.createDataFrame(
-        offs or [(0, 0)], schema=f"{pid_col} int, {off_col} long"
-    )
-    w = Window.partitionBy(F.col(pid_col)).orderBy(*order_cols)
-    return (
-        arranged.join(F.broadcast(off_df), pid_col, "left")
-        .withColumn(
-            out,
-            (F.row_number().over(w) - 1 + F.coalesce(F.col(off_col), F.lit(0))).cast("long"),
-        )
-        .drop(pid_col, off_col)
-    )
+    numbered, _ = _attach_positions(arranged, fresh=True, pos_name=out)
+    return numbered.drop(ROW_ORDER).localCheckpoint()
 
 
 def bucket_of(bounds: list, key):
@@ -910,112 +865,14 @@ def grouped_ewm_mean_columns(sdf, keys: list, cols: dict, alpha: float):
     )
 
 
-def _attach_positions_lazy(sdf, fresh: bool, pos_name: str, force_two_level=None):
-    """Collect-free twin of ``indexing._attach_positions`` (round-8 job-count
-    reduction): the per-pid count table (≤ num_partitions rows) stays IN the
-    plan, and the exclusive prefix (partition start offsets) comes from a
-    broadcast non-equi self-join + re-aggregate over it — no SinglePartition
-    window, no driver-blocking collect. Returns (sdf + position column,
-    offsets DataFrame with (pid, start, cnt)).
-
-    The exclusive prefix is ADAPTIVE on the partition count (a planning-only
-    ``getNumPartitions`` probe — no job):
-
-    - P ≤ 1024: a single broadcast non-equi self-join over the P-row count
-      table (≤ ~1M cheap comparisons; minimal plan stages — A/B-measured
-      ~0.4s faster per query than the two-level form at local[32] scale,
-      where scheduler latency per extra stage dominates).
-    - P > 1024: TWO-LEVEL (pids bucketed by pid >> 10): the intra-bucket
-      self-join is equi-keyed on the bucket with a residual pid-comparison,
-      and the cross-bucket prefix joins the ≤P/1024-row bucket totals —
-      O(P·1024 + (P/1024)²) pairs, so an 800k-split 100 TB scan costs
-      ~8·10⁸ cheap comparisons across the cluster instead of the naive
-      single-level join's 6·10¹¹. No driver collect on either path."""
-    from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-    pid = F.shiftright(F.col(ROW_ORDER), _PID_BITS)
-    if fresh:
-        local = F.col(ROW_ORDER) - F.shiftleft(pid, _PID_BITS)
-    else:
-        w = Window.partitionBy(pid).orderBy(F.asc(ROW_ORDER))
-        local = F.row_number().over(w) - 1
-    if force_two_level is not None:  # test hook: pin the branch
-        small_p = not force_two_level
-    else:
-        try:
-            small_p = sdf.rdd.getNumPartitions() <= 1024
-        except Exception:
-            small_p = False  # probe failed: the two-level form is safe at any P
-    uniq = next(_seq)
-    P, C, O = f"__lp_{uniq}__", f"__lc_{uniq}__", f"__lo_{uniq}__"
-    cnt = sdf.groupBy(pid.alias(P)).agg(F.count(F.lit(1)).alias(C))
-    if small_p:
-        rc = cnt.select(F.col(P).alias("__lb_p__"), F.col(C).alias("__lbn__"))
-        off = (
-            cnt.join(F.broadcast(rc), F.col("__lb_p__") < F.col(P), "left")
-            .groupBy(P, C)
-            .agg(F.coalesce(F.sum("__lbn__"), F.lit(0)).alias(O))
-        )
-    else:
-        B = f"__lbk_{uniq}__"
-        cnt = cnt.withColumn(B, F.shiftright(F.col(P), 10))
-        # intra-bucket exclusive prefix: equi-join on the bucket, residual pid<
-        rc = cnt.select(
-            F.col(B).alias("__lb_b__"),
-            F.col(P).alias("__lb_p__"),
-            F.col(C).alias("__lbn__"),
-        )
-        intra = (
-            cnt.join(
-                F.broadcast(rc),
-                (F.col("__lb_b__") == F.col(B)) & (F.col("__lb_p__") < F.col(P)),
-                "left",
-            )
-            .groupBy(P, C, B)
-            .agg(F.coalesce(F.sum("__lbn__"), F.lit(0)).alias("__lintra__"))
-        )
-        # cross-bucket exclusive prefix over the bucket totals
-        btot = cnt.groupBy(B).agg(F.sum(C).alias("__lbt__"))
-        rbt = btot.select(
-            F.col(B).alias("__lp_b__"), F.col("__lbt__").alias("__lptn__")
-        )
-        boff = (
-            btot.join(F.broadcast(rbt), F.col("__lp_b__") < F.col(B), "left")
-            .groupBy(B)
-            .agg(F.coalesce(F.sum("__lptn__"), F.lit(0)).alias("__lboff__"))
-        )
-        off = (
-            intra.join(F.broadcast(boff), B, "left")
-            .select(
-                P,
-                C,
-                (
-                    F.col("__lintra__") + F.coalesce(F.col("__lboff__"), F.lit(0))
-                ).alias(O),
-            )
-        )
-    with_pos = (
-        sdf.withColumn(P, pid)
-        .join(F.broadcast(off.select(P, O)), P, "left")
-        .withColumn(
-            pos_name, (local + F.coalesce(F.col(O), F.lit(0))).cast("long")
-        )
-        .drop(P, O)
-    )
-    offsets_df = off.select(
-        F.col(P).alias("pid"), F.col(O).alias("start"), F.col(C).alias("cnt")
-    )
-    return with_pos, offsets_df
-
-
 def rolling_parts(sdf, k: int, fresh: bool):
     """Build the pieces for a k-row rolling frame without an unpartitioned
     window: (augmented sdf, window spec, ghost flag column name, helper cols).
 
     The reference's boundary-exchange idea: a k-row window only ever needs the
     k-1 rows PRECEDING each partition's start. Positions and per-partition
-    [start, count) ranges come from the offsets aggregate
-    (``_attach_positions``, driver-side scalars); each partition's required
+    [start, count) ranges come from the offsets table
+    (``_attach_positions``, lazy — no job); each partition's required
     boundary rows are found with a broadcast range-join against a tiny
     (target_pid, lo, hi) map and re-targeted as GHOST copies. The rolling
     window then partitions by target pid — partition-parallel, with at most
@@ -1025,11 +882,9 @@ def rolling_parts(sdf, k: int, fresh: bool):
     POS, TGT, GH = f"__rwp_{uniq}__", f"__rwt_{uniq}__", f"__rwg_{uniq}__"
     # the offsets table, the main branch, AND the ghost branch all consume sdf
     sdf = _stabilize(sdf)
-    # round-8: positions AND the ghost range map are collect-free — the
-    # per-pid offsets table stays in the plan and the (target, lo, hi) map
-    # derives from it lazily, so building a rolling column schedules ZERO
-    # driver-blocking jobs (was: one offsets collect per rolling op)
-    with_pos, offsets_df = _attach_positions_lazy(sdf, fresh, pos_name=POS)
+    # positions AND the ghost range map stay in the plan: the (target, lo,
+    # hi) map derives from the offsets table lazily
+    with_pos, offsets_df = _attach_positions(sdf, fresh, pos_name=POS)
     main = with_pos.withColumn(TGT, _pid()).withColumn(GH, F.lit(False))
     if k > 1:
         lo, hi = f"__rwl_{uniq}__", f"__rwh_{uniq}__"
@@ -1068,7 +923,7 @@ def shift_columns(sdf, cols: dict, periods: int, fresh: bool):
     """
     uniq = next(_seq)
     pos, dpos = f"__sp_{uniq}__", f"__spd_{uniq}__"
-    with_pos, _total = _attach_positions(sdf, fresh, pos_name=pos)
+    with_pos, _ = _attach_positions(sdf, fresh, pos_name=pos)
     donor = with_pos.select(
         (F.col(pos) + F.lit(periods)).alias(dpos),
         *[c.alias(out) for out, c in cols.items()],

@@ -573,7 +573,7 @@ class Series:
         uniq = next(_seq)
         POS = f"__ipos_{uniq}__"
         fresh = ROW_ORDER not in self._frame._sdf.columns
-        sdf, _total = _attach_positions(
+        sdf, _ = _attach_positions(
             self._frame._ordered_sdf(), fresh, pos_name=POS
         )
         col = self._col.cast("double")
@@ -806,7 +806,7 @@ class Series:
         pos, val = f"__as_pos_{uniq}__", f"__as_val_{uniq}__"
         cpos, rnk = f"__as_cp_{uniq}__", f"__as_rk_{uniq}__"
         fresh = ROW_ORDER not in self._frame._sdf.columns
-        with_pos, _total = _attach_positions(
+        with_pos, _ = _attach_positions(
             self._frame._ordered_sdf(), fresh, pos_name=pos
         )
         nn = with_pos.select(self._col.alias(val), F.col(pos)).filter(
@@ -1082,7 +1082,7 @@ class Series:
 
             pos = f"__idxr_{next(_seq)}__"
             fresh = ROW_ORDER not in self._frame._sdf.columns
-            with_pos, _total = _attach_positions(
+            with_pos, _ = _attach_positions(
                 self._frame._ordered_sdf(), fresh, pos_name=pos
             )
             order = self._col.desc() if descending else self._col.asc()
@@ -1128,7 +1128,7 @@ class Series:
 
         pos = f"__fvi_{next(_seq)}__"
         fresh = ROW_ORDER not in self._frame._sdf.columns
-        with_pos, _total = _attach_positions(
+        with_pos, _ = _attach_positions(
             self._frame._ordered_sdf(), fresh, pos_name=pos
         )
         label = self._frame._index[0] if self._frame._index else pos
@@ -1401,7 +1401,7 @@ class Series:
 
         pos = f"__arg_{next(_seq)}__"
         fresh = ROW_ORDER not in self._frame._sdf.columns
-        with_pos, _total = _attach_positions(
+        with_pos, _ = _attach_positions(
             self._frame._ordered_sdf(), fresh, pos_name=pos
         )
         order = self._col.desc() if descending else self._col.asc()
@@ -1471,7 +1471,7 @@ class Series:
         if f._index:
             return f
         fresh = ROW_ORDER not in f._sdf.columns
-        with_pos, _total = _attach_positions(
+        with_pos, _ = _attach_positions(
             f._ordered_sdf(), fresh, pos_name="__sidx__"
         )
         return DataFrame(with_pos, ("__sidx__",))
@@ -1711,13 +1711,13 @@ class Series:
             )
             return row["eq"] != 0  # vacuously true on empty
         from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.indexing import _attach_positions
+        from legate_pandas_spark.frontend.indexing import _attach_positions, _row_count
 
         def _positioned(s, alias):
             sdf = s._frame._sdf.select(s._col.alias(alias))
             sdf = sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id())
-            with_pos, total = _attach_positions(sdf, fresh=True)
-            return with_pos.drop(ROW_ORDER), total
+            with_pos, offsets = _attach_positions(sdf, fresh=True)
+            return with_pos.drop(ROW_ORDER), _row_count(offsets)
 
         a, na = _positioned(self, "__a__")
         b, nb = _positioned(other, "__b__")
@@ -1942,7 +1942,6 @@ class SeriesExpanding:
 
     def _apply(self, kind: str, ddof: int = 1) -> "Series":
         from legate_pandas_spark.frontend.scan import (
-            _add,
             _local_window,
             _seq,
             attach_carries,
@@ -1954,18 +1953,18 @@ class SeriesExpanding:
         d = c.cast("double")
         uniq = next(_seq)
         kc = f"__sexn_{uniq}__"
-        specs = {kc: (F.count(c), _add)}
+        specs = {kc: (F.count(c), "sum")}
         ks = kq = km = None
         if kind in ("sum", "mean", "var", "std"):
             ks = f"__sexs_{uniq}__"
-            specs[ks] = (F.sum(c), _add)
+            specs[ks] = (F.sum(c), "sum")
         if kind in ("var", "std"):
             kq = f"__sexq_{uniq}__"
-            specs[kq] = (F.sum(d * d), _add)
+            specs[kq] = (F.sum(d * d), "sum")
         if kind in ("max", "min"):
             km = f"__sexm_{uniq}__"
             specs[km] = (
-                (F.max(c), max) if kind == "max" else (F.min(c), min)
+                (F.max(c), "max") if kind == "max" else (F.min(c), "min")
             )
         out_sdf = attach_carries(sdf, specs)
         lw = _local_window()
@@ -2037,7 +2036,6 @@ class SeriesExpanding:
 
     def _pairwise(self, other: "Series", kind: str) -> "Series":
         from legate_pandas_spark.frontend.scan import (
-            _add,
             _local_window,
             _seq,
             attach_carries,
@@ -2062,7 +2060,7 @@ class SeriesExpanding:
             F.sum(xa * xa),
             F.sum(xb * xb),
         ]
-        specs = {nm: (e, _add) for nm, e in zip(names, parts)}
+        specs = {nm: (e, "sum") for nm, e in zip(names, parts)}
         out_sdf = attach_carries(sdf, specs)
         lw = _local_window()
         locs = [
