@@ -1605,7 +1605,7 @@ class DataFrame:
         """Exponentially weighted accessor (alpha/com/span/halflife, pandas
         parameter resolution). The recurrence is linear, so it distributes
         exactly: partition-local pandas ewm + geometric-decay carries
-        (scan.ewm_mean_columns) — two Arrow passes, both partition-parallel;
+        (scan.ewm_columns) — two Arrow passes, both partition-parallel;
         no single sequential group."""
         from legate_pandas_spark.frontend.dtypes import resolve_ewm_alpha
 
@@ -3303,17 +3303,28 @@ class Resampler:
 
 
 class Ewm:
-    """Frame-level exponentially weighted window — EXACT two-phase
-    distributed recurrence (scan.ewm_mean_columns: partition-local pandas ewm
-    recovered as num/den pairs + geometric-decay carries), no longer the
-    single-Arrow-group sequential pass."""
+    """Exponentially weighted window over every numeric value column —
+    EXACT two-phase distributed recurrence (``scan.ewm_columns``), per group
+    of ``keys`` (``groupby(...).ewm``: key columns are not values) or over
+    the whole frame."""
 
-    def __init__(self, df: DataFrame, alpha: float):
+    def __init__(self, df: DataFrame, alpha: float, keys: list = ()):
         self._df = df
         self._alpha = alpha
+        self._keys = list(keys)
 
     def mean(self) -> DataFrame:
-        from legate_pandas_spark.frontend.scan import _seq, ewm_mean_columns
+        return self._stat("mean")
+
+    def var(self) -> DataFrame:
+        """Exact distributed ewm variance (pandas bias=False)."""
+        return self._stat("var")
+
+    def std(self) -> DataFrame:
+        return self._stat("std")
+
+    def _stat(self, stat: str) -> DataFrame:
+        from legate_pandas_spark.frontend.scan import _seq, ewm_columns
 
         sdf = self._df._ordered_sdf()
         dtypes = dict(sdf.dtypes)
@@ -3322,45 +3333,14 @@ class Ewm:
             for c in sdf.columns
             if c != ROW_ORDER
             and c not in self._df._index
+            and c not in self._keys
             and is_numeric_spark_type(dtypes[c])
         ]
         if not value_cols:
             return DataFrame(sdf, self._df._index)
         uniq = next(_seq)
         outs = {f"__ewm_{uniq}_{i}__": c for i, c in enumerate(value_cols)}
-        res = ewm_mean_columns(sdf, outs, self._alpha)
-        back = {c: o for o, c in outs.items()}
-        sel = [
-            F.col(back[c]).alias(c) if c in back else F.col(c)
-            for c in sdf.columns
-        ]
-        return DataFrame(res.select(*sel), self._df._index)
-
-    def var(self) -> DataFrame:
-        """Exact distributed ewm variance (pandas bias=False) per numeric
-        column — four-moment carry decomposition (scan.ewm_var_columns)."""
-        return self._moments(std=False)
-
-    def std(self) -> DataFrame:
-        return self._moments(std=True)
-
-    def _moments(self, std: bool) -> DataFrame:
-        from legate_pandas_spark.frontend.scan import _seq, ewm_var_columns
-
-        sdf = self._df._ordered_sdf()
-        dtypes = dict(sdf.dtypes)
-        value_cols = [
-            c
-            for c in sdf.columns
-            if c != ROW_ORDER
-            and c not in self._df._index
-            and is_numeric_spark_type(dtypes[c])
-        ]
-        if not value_cols:
-            return DataFrame(sdf, self._df._index)
-        uniq = next(_seq)
-        outs = {f"__ewv_{uniq}_{i}__": c for i, c in enumerate(value_cols)}
-        res = ewm_var_columns(sdf, outs, self._alpha, std=std)
+        res = ewm_columns(sdf, self._keys, outs, self._alpha, stat)
         back = {c: o for o, c in outs.items()}
         sel = [
             F.col(back[c]).alias(c) if c in back else F.col(c)

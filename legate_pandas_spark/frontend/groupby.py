@@ -693,14 +693,17 @@ class GroupBy:
         """Per-group exponentially weighted accessor (pandas groupby.ewm;
         alpha/com/span/halflife parameter resolution).
         EXACT fully-distributed keyed two-phase recurrence
-        (``scan.grouped_ewm_mean_columns``): partition-local EWM states per
+        (``scan.ewm_columns``): partition-local EWM states per
         (group, partition) + a distributed per-group prefix-combine of the
         carries — no per-group sequential task, so one giant skewed group
         still parallelizes (the reference has no ewm; nearest is the two-phase
         scan machinery, core/column.py:644-687)."""
         from legate_pandas_spark.frontend.dtypes import resolve_ewm_alpha
+        from legate_pandas_spark.frontend.frame import Ewm
 
-        return GroupByEwm(self, resolve_ewm_alpha(alpha, com, span, halflife))
+        return Ewm(
+            self._df, resolve_ewm_alpha(alpha, com, span, halflife), self._keys
+        )
 
     def __getitem__(self, col: str) -> "SeriesGroupBy":
         """``df.groupby(k)[col]`` — single-column grouped view."""
@@ -1086,70 +1089,6 @@ class GroupedExpanding(GroupedRolling):
             "use groupby(...).agg percentile/approx_percentile for the "
             "final-state quantile"
         )
-
-
-class GroupByEwm:
-    def __init__(self, gb: GroupBy, alpha: float):
-        self._gb = gb
-        self._alpha = alpha
-
-    def mean(self):
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
-
-        gb = self._gb
-        sdf = gb._df._ordered_sdf()
-        dtypes = dict(sdf.dtypes)
-        value_cols = [
-            c
-            for c in sdf.columns
-            if c not in gb._keys
-            and c != ROW_ORDER
-            and c not in gb._df._index
-            and is_numeric_spark_type(dtypes[c])
-        ]
-        keep = [c for c in sdf.columns if c not in value_cols]
-        from legate_pandas_spark.frontend import scan
-
-        tmp = {f"__gewm_out_{i}__": c for i, c in enumerate(value_cols)}
-        res = scan.grouped_ewm_mean_columns(sdf, list(gb._keys), tmp, self._alpha)
-        res = res.select(
-            *keep, *[F.col(t).alias(c) for t, c in zip(tmp, value_cols)]
-        )
-        return DataFrame(res, gb._df._index)
-
-    def var(self):
-        """Exact distributed per-group ewm variance (pandas bias=False) —
-        keyed five-moment carries (scan.grouped_ewm_var_columns)."""
-        return self._moments(std=False)
-
-    def std(self):
-        return self._moments(std=True)
-
-    def _moments(self, std: bool):
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
-
-        gb = self._gb
-        sdf = gb._df._ordered_sdf()
-        dtypes = dict(sdf.dtypes)
-        value_cols = [
-            c
-            for c in sdf.columns
-            if c not in gb._keys
-            and c != ROW_ORDER
-            and c not in gb._df._index
-            and is_numeric_spark_type(dtypes[c])
-        ]
-        keep = [c for c in sdf.columns if c not in value_cols]
-        from legate_pandas_spark.frontend import scan
-
-        tmp = {f"__gewv_out_{i}__": c for i, c in enumerate(value_cols)}
-        res = scan.grouped_ewm_var_columns(
-            sdf, list(gb._keys), tmp, self._alpha, std=std
-        )
-        res = res.select(
-            *keep, *[F.col(t).alias(c) for t, c in zip(tmp, value_cols)]
-        )
-        return DataFrame(res, gb._df._index)
 
 
 class PivotedGroupBy:

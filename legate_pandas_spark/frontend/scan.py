@@ -439,432 +439,6 @@ def bucket_of(bounds: list, key):
     return F.size(F.filter(barr, lambda b: b < key))
 
 
-def ewm_mean_columns(sdf, cols: dict, alpha: float):
-    """Append exponentially-weighted means (pandas ewm(adjust=True,
-    ignore_na=False)) — EXACT two-phase distributed recurrence, replacing the
-    old single-Arrow-group sequential pass.
-
-    Math: ewm_i = num_i / den_i with num_i = Σ_{j≤i} b^{i-j}·x_j (non-null j)
-    and den_i the same sum of weights, b = 1-α. Within a partition both are
-    recovered from pandas' own local ewm (mean·den; den = mask-ewm · closed-
-    form all-ones sum). Across partitions the recurrences are linear, so row r
-    of partition p needs only b^{r+1} × the previous partitions' end state —
-    a driver-side prefix-combine of (end_num, end_den, b^rowcount) triples,
-    one per partition. Two Arrow passes, both partition-parallel.
-
-    ``cols`` maps out_name -> source column NAME (str).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-    b = 1.0 - alpha
-    uniq = next(_seq)
-    PID = f"__ewp_{uniq}__"
-    work = sdf.withColumn(PID, _pid())
-    srcs = list(dict.fromkeys(cols.values()))
-
-    def _locals(pdf):
-        n = len(pdf)
-        r = np.arange(1, n + 1, dtype="float64")
-        dall = (1.0 - np.power(b, r)) / alpha if alpha < 1.0 else np.ones(n)
-        res = {}
-        for s in srcs:
-            x = pdf[s].astype("float64")
-            mask = x.notna().astype("float64")
-            mean_local = x.ewm(alpha=alpha, adjust=True).mean().to_numpy()
-            mm = mask.ewm(alpha=alpha, adjust=True).mean().to_numpy()
-            den = mm * dall
-            num = np.where(den > 0, np.nan_to_num(mean_local) * den, 0.0)
-            res[s] = (num, den)
-        return res
-
-    f1 = [T.StructField(PID, T.LongType()), T.StructField("__decay__", T.DoubleType())]
-    for i in range(len(srcs)):
-        f1 += [
-            T.StructField(f"__en_{i}__", T.DoubleType()),
-            T.StructField(f"__ed_{i}__", T.DoubleType()),
-        ]
-    schema1 = T.StructType(f1)
-
-    def phase1(pdf):
-        pdf = pdf.sort_values(ROW_ORDER)
-        n = len(pdf)
-        res = _locals(pdf)
-        row = {PID: [int(pdf[PID].iloc[0])], "__decay__": [float(b**n)]}
-        for i, s in enumerate(srcs):
-            num, den = res[s]
-            row[f"__en_{i}__"] = [float(num[-1]) if n else 0.0]
-            row[f"__ed_{i}__"] = [float(den[-1]) if n else 0.0]
-        return pd.DataFrame(row)
-
-    ends = work.groupBy(PID).applyInPandas(phase1, schema1).collect()
-    ends.sort(key=lambda r: r[PID])
-    carry: dict = {}
-    cn = {s: 0.0 for s in srcs}
-    cd = {s: 0.0 for s in srcs}
-    for r in ends:
-        carry[r[PID]] = (dict(cn), dict(cd))
-        for i, s in enumerate(srcs):
-            cn[s] = r[f"__en_{i}__"] + r["__decay__"] * cn[s]
-            cd[s] = r[f"__ed_{i}__"] + r["__decay__"] * cd[s]
-
-    schema2 = T.StructType(
-        list(work.schema.fields)
-        + [T.StructField(o, T.DoubleType()) for o in cols]
-    )
-
-    def phase2(pdf):
-        pdf = pdf.sort_values(ROW_ORDER).reset_index(drop=True)
-        n = len(pdf)
-        res = _locals(pdf)
-        prevn, prevd = carry.get(int(pdf[PID].iloc[0]) if n else -1, ({}, {}))
-        bpow = np.power(b, np.arange(1, n + 1, dtype="float64"))
-        out = pdf.copy()
-        for out_name, s in cols.items():
-            num, den = res[s]
-            gn = num + bpow * prevn.get(s, 0.0)
-            gd = den + bpow * prevd.get(s, 0.0)
-            out[out_name] = np.where(gd > 0, gn / np.where(gd > 0, gd, 1.0), np.nan)
-        return out
-
-    return work.groupBy(PID).applyInPandas(phase2, schema2).drop(PID)
-
-
-def ewm_var_columns(sdf, cols: dict, alpha: float, std: bool = False):
-    """Append exact distributed pandas ``ewm(adjust=True).var()`` (bias=False)
-    or ``.std()`` — a weighted-Welford (West) merge over the two-phase carry
-    plumbing of ``ewm_mean_columns``.
-
-    Per row over non-null x with weights w_j = b^{i-j} (ignore_na=False: the
-    decay counts all periods): the partition-LOCAL state (B=Σw, mean, M2=
-    Σw·(x−mean)², D=Σw², N=obs count) is recovered from pandas' own ewm
-    (mean, bias=True var — their stable recursion), and states merge with the
-    weighted Chan/West update M2 = M2₁+M2₂+δ²·B₁B₂/B — numerically stable
-    where the raw-moment form (C/B − mean²) suffers catastrophic cancellation
-    under long decay gaps. Carries decay by b^rows (B, M2; mean is invariant
-    under uniform weight scaling) and b^{2·rows} (D). Bias correction
-    var = M2/B · B²/(B²−D) gates on an EXACT observation count (≥2) and falls
-    back to the uncorrected value if the correction denominator underflows
-    (matching pandas' recursive collapse).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-    b = 1.0 - alpha
-    uniq = next(_seq)
-    PID = f"__evp_{uniq}__"
-    work = sdf.withColumn(PID, _pid())
-    srcs = list(dict.fromkeys(cols.values()))
-
-    def _moments(pdf):
-        res = {}
-        for s in srcs:
-            res[s] = _ewm_local_welford(pdf[s], alpha)
-        return res
-
-    names = [f"__ev{m}_{uniq}_{i}__" for i in range(len(srcs)) for m in "bmwdn"]
-    f1 = [T.StructField(PID, T.LongType()), T.StructField("__dec__", T.DoubleType())]
-    f1 += [T.StructField(n, T.DoubleType()) for n in names]
-    schema1 = T.StructType(f1)
-
-    def phase1(pdf):
-        pdf = pdf.sort_values(ROW_ORDER)
-        n = len(pdf)
-        res = _moments(pdf)
-        row = {PID: [int(pdf[PID].iloc[0])], "__dec__": [float(b**n)]}
-        for i, s in enumerate(srcs):
-            for m, arr in zip("bmwdn", res[s]):
-                row[f"__ev{m}_{uniq}_{i}__"] = [float(arr[-1]) if n else 0.0]
-        return pd.DataFrame(row)
-
-    ends = work.groupBy(PID).applyInPandas(phase1, schema1).collect()
-    ends.sort(key=lambda r: r[PID])
-    carry: dict = {}
-    acc = {s: [0.0, 0.0, 0.0, 0.0, 0.0] for s in srcs}  # B, mean, M2, D, N
-    for r in ends:
-        carry[r[PID]] = {s: list(acc[s]) for s in srcs}
-        dec = r["__dec__"]
-        for i, s in enumerate(srcs):
-            L = [r[f"__ev{m}_{uniq}_{i}__"] for m in "bmwdn"]
-            acc[s] = _welford_merge_decayed(acc[s], L, dec)
-
-    schema2 = T.StructType(
-        list(work.schema.fields)
-        + [T.StructField(o, T.DoubleType()) for o in cols]
-    )
-
-    def phase2(pdf):
-        pdf = pdf.sort_values(ROW_ORDER).reset_index(drop=True)
-        n = len(pdf)
-        res = _moments(pdf)
-        prev = carry.get(int(pdf[PID].iloc[0]) if n else -1, {})
-        bp = np.power(b, np.arange(1, n + 1, dtype="float64"))
-        out = pdf.copy()
-        for out_name, s in cols.items():
-            loc = res[s]
-            pv = prev.get(s, [0.0, 0.0, 0.0, 0.0, 0.0])
-            out[out_name] = _welford_rowwise_var(loc, pv, bp, std)
-        return out
-
-    return work.groupBy(PID).applyInPandas(phase2, schema2).drop(PID)
-
-
-def _ewm_local_welford(x_ser, alpha: float):
-    """Partition-local per-row EWM Welford state arrays (B, mean, M2, P, N)
-    recovered from pandas' own (numerically stable, recursive) ewm.
-
-    P is the PAIRWISE weight-product sum Σ_{j<k} w_j·w_k = (B² − Σw²)/2 —
-    tracked directly (recurrence P_i = b²·P_{i-1} + m_i·b·B_{i-1}, an
-    ewm-sum at decay b² of z_i = m_i·b·B_{i-1}) because forming B² − D
-    explicitly cancels catastrophically under long decay gaps; P IS the
-    bias-correction denominator (×2), so its relative precision carries
-    straight through."""
-    import numpy as np
-    import pandas as pd
-
-    b = 1.0 - alpha
-    n = len(x_ser)
-    x = x_ser.astype("float64")
-    _num, B = _ewm_local_num_den(x, alpha)
-    mean = np.nan_to_num(x.ewm(alpha=alpha, adjust=True).mean().to_numpy())
-    varb = np.nan_to_num(
-        x.ewm(alpha=alpha, adjust=True).var(bias=True).to_numpy()
-    )
-    M2 = varb * B
-    mask = x.notna().astype("float64").to_numpy()
-    if b > 0 and n:
-        q = b * b
-        alpha2 = 1.0 - q
-        Bprev = np.concatenate(([0.0], B[:-1]))
-        z = pd.Series(mask * b * Bprev)
-        r = np.arange(1, n + 1, dtype="float64")
-        dall2 = (1.0 - np.power(q, r)) / alpha2
-        P = z.ewm(alpha=alpha2, adjust=True).mean().to_numpy() * dall2
-        P = np.nan_to_num(P)
-    else:
-        P = np.zeros(n)
-    N = x.notna().astype("float64").cumsum().to_numpy()
-    return B, mean, M2, P, N
-
-
-def _welford_merge_decayed(C, L, dec):
-    """Merge carry state C (decayed by ``dec``) with a local end state L —
-    the weighted Chan/West combine; mean and M2 are exact under uniform
-    weight rescaling. The pairwise sum gains the cross term
-    (decayed carry weight) × (local weight)."""
-    cb, cm, cw, cp, cn = C[0] * dec, C[1], C[2] * dec, C[3] * dec * dec, C[4]
-    lb, lm, lw, lp, ln = L
-    B = cb + lb
-    if B > 0:
-        delta = lm - cm
-        mean = cm + delta * lb / B
-        M2 = cw + lw + delta * delta * cb * lb / B
-    else:
-        mean, M2 = 0.0, 0.0
-    P = cp + cb * lb + lp
-    return [B, mean, M2, P, cn + ln]
-
-
-def _welford_rowwise_var(loc, pv, bp, std):
-    """Vectorized per-row merge of decayed carry ``pv`` into local states
-    ``loc`` and the bias-corrected variance (or std): var = M2·B / (2P),
-    with P the cancellation-free pairwise weight-product sum."""
-    import numpy as np
-
-    Bl, Ml, Wl, Pl, Nl = loc
-    pb, pm, pw, pp, pn = pv
-    Cb = pb * bp
-    Cw = pw * bp
-    Cp = pp * bp * bp
-    Bt = Bl + Cb
-    with np.errstate(divide="ignore", invalid="ignore"):
-        delta = Ml - pm
-        safe_B = np.where(Bt > 0, Bt, 1.0)
-        M2t = Wl + Cw + delta * delta * Cb * Bl / safe_B
-        Pt = Pl + Cp + Cb * Bl
-        Nt = Nl + pn
-        denom = 2.0 * Pt
-        biased = np.maximum(M2t, 0.0) / safe_B
-        ok = (Bt > 0) & (Nt >= 2) & (denom > 0)
-        v = np.where(
-            ok,
-            biased * (Bt * Bt) / np.where(denom > 0, denom, 1.0),
-            # >= 2 obs but the correction denominator underflowed (one obs
-            # carries ~all weight after a long decay gap): fall back to the
-            # uncorrected value, matching pandas' recursive collapse
-            np.where((Nt >= 2) & (Bt > 0), biased, np.nan),
-        )
-    return np.sqrt(v) if std else v
-
-
-def _ewm_local_num_den(x_ser, alpha: float):
-    """Local (within one ordered run) EWM numerator/denominator arrays.
-
-    num_i = Σ_{j≤i, x_j non-null} b^{i-j}·x_j, den_i = same sum of weights
-    (b = 1-α) — recovered from pandas' own ewm so the adjust=True /
-    ignore_na=False weighting is bit-compatible with pandas.
-    """
-    import numpy as np
-
-    b = 1.0 - alpha
-    n = len(x_ser)
-    r = np.arange(1, n + 1, dtype="float64")
-    dall = (1.0 - np.power(b, r)) / alpha if alpha < 1.0 else np.ones(n)
-    x = x_ser.astype("float64")
-    mask = x.notna().astype("float64")
-    mean_local = x.ewm(alpha=alpha, adjust=True).mean().to_numpy()
-    mm = mask.ewm(alpha=alpha, adjust=True).mean().to_numpy()
-    den = mm * dall
-    num = np.where(den > 0, np.nan_to_num(mean_local) * den, 0.0)
-    return num, den
-
-
-def grouped_ewm_mean_columns(sdf, keys: list, cols: dict, alpha: float):
-    """Append per-group exponentially-weighted means
-    (pandas ``groupby(keys).ewm(alpha, adjust=True).mean()``) — EXACT and
-    fully distributed: no per-group sequential task, so one giant (skewed)
-    group still parallelizes across partitions.
-
-    Same linear-recurrence math as ``ewm_mean_columns`` (reference carry
-    design: ``legate/pandas/core/column.py:644-687``, generalized to keyed
-    scans) but the carry is per (group, partition) and the prefix-combine is
-    itself DISTRIBUTED: phase 1 emits one tiny state row per
-    (partition, group) — (end_num, end_den, b^rows) — those states are
-    prefix-combined per group by a second applyInPandas over the state table
-    (≤ num_partitions rows per group), and the carries join back on
-    (pid, keys) with null-safe key equality. Nothing is collected to the
-    driver, so millions of groups are fine; a single global group degrades to
-    exactly ``ewm_mean_columns``' shape.
-
-    ``cols`` maps out_name -> source column NAME (str); outputs are appended
-    as doubles.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-    b = 1.0 - alpha
-    uniq = next(_seq)
-    PID = f"__gep_{uniq}__"
-    work = sdf.withColumn(PID, _pid())
-    srcs = list(dict.fromkeys(cols.values()))
-    key_fields = {f.name: f for f in work.schema.fields}
-    en = [f"__gen_{uniq}_{i}__" for i in range(len(srcs))]
-    ed = [f"__ged_{uniq}_{i}__" for i in range(len(srcs))]
-    cn = [f"__gcn_{uniq}_{i}__" for i in range(len(srcs))]
-    cd = [f"__gcd_{uniq}_{i}__" for i in range(len(srcs))]
-    DEC = f"__gdec_{uniq}__"
-
-    state_schema = T.StructType(
-        [T.StructField(PID, T.LongType())]
-        + [key_fields[k] for k in keys]
-        + [T.StructField(DEC, T.DoubleType())]
-        + [T.StructField(c, T.DoubleType()) for pair in zip(en, ed) for c in pair]
-    )
-
-    def phase1(pdf):
-        pdf = pdf.sort_values(ROW_ORDER)
-        outs = []
-        for _, g in pdf.groupby(keys, dropna=False, sort=False):
-            o = g.iloc[[0]][[PID] + keys].copy()
-            o[DEC] = float(b ** len(g))
-            for i, s in enumerate(srcs):
-                num, den = _ewm_local_num_den(g[s], alpha)
-                o[en[i]] = float(num[-1])
-                o[ed[i]] = float(den[-1])
-            outs.append(o)
-        if not outs:
-            o = pdf.iloc[0:0][[PID] + keys].copy()
-            o[DEC] = pd.Series(dtype="float64")
-            for i in range(len(srcs)):
-                o[en[i]] = pd.Series(dtype="float64")
-                o[ed[i]] = pd.Series(dtype="float64")
-            outs.append(o)
-        return pd.concat(outs)
-
-    states = work.groupBy(PID).applyInPandas(phase1, state_schema)
-
-    carry_schema = T.StructType(
-        [T.StructField(PID, T.LongType())]
-        + [key_fields[k] for k in keys]
-        + [T.StructField(c, T.DoubleType()) for pair in zip(cn, cd) for c in pair]
-    )
-
-    def combine(pdf):
-        pdf = pdf.sort_values(PID).reset_index(drop=True)
-        out = pdf[[PID] + keys].copy()
-        for i in range(len(srcs)):
-            ns, ds = [], []
-            an, ad = 0.0, 0.0
-            for dec, e_n, e_d in zip(pdf[DEC], pdf[en[i]], pdf[ed[i]]):
-                ns.append(an)
-                ds.append(ad)
-                an = e_n + dec * an
-                ad = e_d + dec * ad
-            out[cn[i]] = ns
-            out[cd[i]] = ds
-        return out
-
-    carries = states.groupBy(*keys).applyInPandas(combine, carry_schema)
-
-    cpid = f"__gcp_{uniq}__"
-    ckeys = [f"__gck_{uniq}_{i}__" for i in range(len(keys))]
-    carries = carries.select(
-        F.col(PID).alias(cpid),
-        *[F.col(k).alias(a) for k, a in zip(keys, ckeys)],
-        *[c for pair in zip(cn, cd) for c in pair],
-    )
-    cond = F.col(PID) == F.col(cpid)
-    for k, a in zip(keys, ckeys):
-        cond = cond & F.col(k).eqNullSafe(F.col(a))
-    work2 = work.join(carries, cond, "left").drop(cpid, *ckeys)
-
-    out_schema = T.StructType(
-        list(work2.schema.fields)
-        + [T.StructField(o, T.DoubleType()) for o in cols]
-    )
-
-    def phase2(pdf):
-        pdf = pdf.sort_values(ROW_ORDER)
-        outs = []
-        for _, g in pdf.groupby(keys, dropna=False, sort=False):
-            n = len(g)
-            bpow = np.power(b, np.arange(1, n + 1, dtype="float64"))
-            o = g.copy()
-            for out_name, s in cols.items():
-                i = srcs.index(s)
-                num, den = _ewm_local_num_den(g[s], alpha)
-                pn = g[cn[i]].iloc[0]
-                pdn = g[cd[i]].iloc[0]
-                pn = 0.0 if pd.isna(pn) else float(pn)
-                pdn = 0.0 if pd.isna(pdn) else float(pdn)
-                gn = num + bpow * pn
-                gd = den + bpow * pdn
-                o[out_name] = np.where(gd > 0, gn / np.where(gd > 0, gd, 1.0), np.nan)
-            outs.append(o)
-        if not outs:
-            o = pdf.copy()
-            for out_name in cols:
-                o[out_name] = pd.Series(dtype="float64")
-            outs.append(o)
-        return pd.concat(outs)
-
-    drop_helpers = [c for pair in zip(cn, cd) for c in pair]
-    return (
-        work2.groupBy(PID)
-        .applyInPandas(phase2, out_schema)
-        .drop(PID, *drop_helpers)
-    )
-
-
 def rolling_parts(sdf, k: int, fresh: bool):
     """Build the pieces for a k-row rolling frame without an unpartitioned
     window: (augmented sdf, window spec, ghost flag column name, helper cols).
@@ -934,132 +508,244 @@ def shift_columns(sdf, cols: dict, periods: int, fresh: bool):
     )
 
 
-def grouped_ewm_var_columns(sdf, keys: list, cols: dict, alpha: float, std: bool = False):
-    """Per-group exact distributed ewm variance/std — the keyed version of
-    ``ewm_var_columns`` with the fully-distributed carry plumbing of
-    ``grouped_ewm_mean_columns``: per-(group, partition) Welford states
-    (B, mean, M2, D, N), a per-group prefix-combine over the tiny state table
-    (the same weighted Chan/West merge as the global path — numerically
-    stable under long decay gaps), and a null-safe carry join. No per-group
-    sequential task; nothing collected to the driver."""
+def _ewm_local_num_den(x_ser, alpha: float):
+    """Local (within one ordered run) EWM numerator/denominator arrays.
+
+    num_i = Σ_{j≤i, x_j non-null} b^{i-j}·x_j, den_i = same sum of weights
+    (b = 1-α) — recovered from pandas' own ewm so the adjust=True /
+    ignore_na=False weighting is bit-compatible with pandas.
+    """
+    import numpy as np
+
+    b = 1.0 - alpha
+    n = len(x_ser)
+    r = np.arange(1, n + 1, dtype="float64")
+    dall = (1.0 - np.power(b, r)) / alpha if alpha < 1.0 else np.ones(n)
+    x = x_ser.astype("float64")
+    mask = x.notna().astype("float64")
+    mean_local = x.ewm(alpha=alpha, adjust=True).mean().to_numpy()
+    mm = mask.ewm(alpha=alpha, adjust=True).mean().to_numpy()
+    den = mm * dall
+    num = np.where(den > 0, np.nan_to_num(mean_local) * den, 0.0)
+    return num, den
+
+
+def _ewm_mean_merge(C, L, dec):
+    """The (num, den) recurrences are linear: the carry decays, the local
+    state adds."""
+    return tuple(lv + dec * cv for cv, lv in zip(C, L))
+
+
+def _ewm_mean_finish(state):
+    import numpy as np
+
+    num, den = state
+    return np.where(den > 0, num / np.where(den > 0, den, 1.0), np.nan)
+
+
+def _ewm_local_welford(x_ser, alpha: float):
+    """Partition-local per-row EWM Welford state arrays (B, mean, M2, P, N)
+    recovered from pandas' own (numerically stable, recursive) ewm.
+
+    P is the PAIRWISE weight-product sum Σ_{j<k} w_j·w_k = (B² − Σw²)/2 —
+    tracked directly (recurrence P_i = b²·P_{i-1} + m_i·b·B_{i-1}, an
+    ewm-sum at decay b² of z_i = m_i·b·B_{i-1}) because forming B² − Σw²
+    explicitly cancels catastrophically under long decay gaps; P IS the
+    bias-correction denominator (×2), so its relative precision carries
+    straight through."""
+    import numpy as np
+    import pandas as pd
+
+    b = 1.0 - alpha
+    n = len(x_ser)
+    x = x_ser.astype("float64")
+    _num, B = _ewm_local_num_den(x, alpha)
+    mean = np.nan_to_num(x.ewm(alpha=alpha, adjust=True).mean().to_numpy())
+    varb = np.nan_to_num(
+        x.ewm(alpha=alpha, adjust=True).var(bias=True).to_numpy()
+    )
+    M2 = varb * B
+    mask = x.notna().astype("float64").to_numpy()
+    if b > 0 and n:
+        q = b * b
+        alpha2 = 1.0 - q
+        Bprev = np.concatenate(([0.0], B[:-1]))
+        z = pd.Series(mask * b * Bprev)
+        r = np.arange(1, n + 1, dtype="float64")
+        dall2 = (1.0 - np.power(q, r)) / alpha2
+        P = z.ewm(alpha=alpha2, adjust=True).mean().to_numpy() * dall2
+        P = np.nan_to_num(P)
+    else:
+        P = np.zeros(n)
+    N = x.notna().astype("float64").cumsum().to_numpy()
+    return B, mean, M2, P, N
+
+
+def _welford_merge_decayed(C, L, dec):
+    """Merge carry state C, decayed by ``dec``, into local state L — the
+    weighted Chan/West combine; mean and M2 are exact under uniform weight
+    rescaling (B and M2 decay by ``dec``, P by ``dec²``), and the pairwise
+    sum gains the cross term (decayed carry weight) × (local weight). Takes
+    scalars (the prefix combine) or per-row arrays (phase 2)."""
+    import numpy as np
+
+    cb, cm, cw, cp, cn = C
+    lb, lm, lw, lp, ln = L
+    cb = cb * dec
+    B = cb + lb
+    safe_B = np.where(B > 0, B, 1.0)
+    delta = lm - cm
+    mean = np.where(B > 0, cm + delta * lb / safe_B, 0.0)
+    M2 = np.where(B > 0, cw * dec + lw + delta * delta * cb * lb / safe_B, 0.0)
+    return B, mean, M2, cp * dec * dec + cb * lb + lp, cn + ln
+
+
+def _welford_var(state):
+    """Bias-corrected variance var = M2·B / (2P) of merged states, with P
+    the cancellation-free pairwise weight-product sum; gated on an EXACT
+    observation count (≥ 2)."""
+    import numpy as np
+
+    B, _mean, M2, P, N = state
+    with np.errstate(divide="ignore", invalid="ignore"):
+        safe_B = np.where(B > 0, B, 1.0)
+        denom = 2.0 * P
+        biased = np.maximum(M2, 0.0) / safe_B
+        return np.where(
+            (B > 0) & (N >= 2) & (denom > 0),
+            biased * (B * B) / np.where(denom > 0, denom, 1.0),
+            # >= 2 obs but the correction denominator underflowed (one obs
+            # carries ~all weight after a long decay gap): fall back to the
+            # uncorrected value, matching pandas' recursive collapse
+            np.where((N >= 2) & (B > 0), biased, np.nan),
+        )
+
+
+def _welford_std(state):
+    import numpy as np
+
+    return np.sqrt(_welford_var(state))
+
+
+# stat -> (state letters, local end-state arrays, merge(carry, local, decay),
+# per-row finish)
+_EWM_STATS = {
+    "mean": ("nd", _ewm_local_num_den, _ewm_mean_merge, _ewm_mean_finish),
+    "var": ("bmwpn", _ewm_local_welford, _welford_merge_decayed, _welford_var),
+    "std": ("bmwpn", _ewm_local_welford, _welford_merge_decayed, _welford_std),
+}
+
+
+def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
+    """Append exact distributed pandas ``ewm(alpha, adjust=True,
+    ignore_na=False)`` statistics (``stat``: 'mean', 'var' or 'std', the
+    latter two bias=False), per group of ``keys`` or, with no keys, over the
+    whole frame — the reference's two-phase carry design
+    (``legate/pandas/core/column.py:644-687``) generalized to keyed scans.
+
+    A statistic is a per-row state that runs partition-LOCALLY through
+    pandas' own ewm and merges across partitions with a decay b^rows
+    (b = 1-α): (num, den) for the mean (num/den), weighted-Welford
+    (B=Σw, mean, M2, P = pairwise Σw_j·w_k, N = obs count) for var/std —
+    the Chan/West merge is numerically stable where the raw-moment form
+    cancels catastrophically under long decay gaps.
+
+    Phase 1 emits one end-state row per (partition, group); the combine
+    takes their exclusive prefix in partition order, per group; phase 2
+    merges each row's local state with its run's carry, decayed by
+    b^{row+1}. With keys, the combine runs in the plan (grouped on the keys,
+    ≤ num_partitions rows per group — one giant skewed group still
+    parallelizes) and phase 2 cogroups rows and carries by partition,
+    matching keys null-safely in pandas; nothing is collected. Without keys,
+    the same combine runs on the driver over the ≤ num_partitions collected
+    states (measured cheaper than the in-plan form for one global group).
+
+    ``cols`` maps out_name -> source column NAME; outputs are doubles.
+    """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
     from legate_pandas_spark.frontend.frame import ROW_ORDER
 
+    letters, local, merge, finish = _EWM_STATS[stat]
     b = 1.0 - alpha
     uniq = next(_seq)
-    PID = f"__gvp_{uniq}__"
-    work = sdf.withColumn(PID, _pid())
-    srcs = list(dict.fromkeys(cols.values()))
-    key_fields = {f.name: f for f in work.schema.fields}
-    MOMS = "bmwdn"
-    st_cols = {
-        m: [f"__gv{m}_{uniq}_{i}__" for i in range(len(srcs))] for m in MOMS
-    }
-    cr_cols = {
-        m: [f"__gc{m}_{uniq}_{i}__" for i in range(len(srcs))] for m in MOMS
-    }
-    DEC = f"__gvd_{uniq}__"
-
-    state_schema = T.StructType(
-        [T.StructField(PID, T.LongType())]
-        + [key_fields[k] for k in keys]
-        + [T.StructField(DEC, T.DoubleType())]
-        + [T.StructField(st_cols[m][i], T.DoubleType())
-           for i in range(len(srcs)) for m in MOMS]
+    PID, DEC = f"__ewp_{uniq}__", f"__ewd_{uniq}__"
+    # Both phases group the same exchange by partition id. Its explicit
+    # partition count keeps AQE from coalescing these few-byte, Python-heavy
+    # groups into one task (measured: the serial phases cost more than the
+    # parallel ones at 200k rows on 4 cores and at 1M rows on 8 partitions).
+    work = sdf.withColumn(PID, _pid()).repartition(
+        sdf.sparkSession.sparkContext.defaultParallelism, PID
     )
+    srcs = list(dict.fromkeys(cols.values()))
+    state = {
+        s: [f"__ew{m}_{uniq}_{i}__" for m in letters] for i, s in enumerate(srcs)
+    }
+    fields = {f.name: f for f in work.schema.fields}
+    state_schema = T.StructType(
+        [fields[PID]]
+        + [fields[k] for k in keys]
+        + [
+            T.StructField(c, T.DoubleType())
+            for c in [DEC, *(c for names in state.values() for c in names)]
+        ]
+    )
+    out_schema = T.StructType(
+        work.schema.fields + [T.StructField(o, T.DoubleType()) for o in cols]
+    )
+
+    def runs(pdf):
+        pdf = pdf.sort_values(ROW_ORDER)
+        return pdf.groupby(keys, dropna=False, sort=False) if keys else [(None, pdf)]
 
     def phase1(pdf):
-        pdf = pdf.sort_values(ROW_ORDER)
-        outs = []
-        for _, g in pdf.groupby(keys, dropna=False, sort=False):
-            o = g.iloc[[0]][[PID] + keys].copy()
-            o[DEC] = float(b ** len(g))
-            for i, s in enumerate(srcs):
-                for m, arr in zip(MOMS, _ewm_local_welford(g[s], alpha)):
-                    o[st_cols[m][i]] = float(arr[-1])
-            outs.append(o)
-        if not outs:
-            o = pdf.iloc[0:0][[PID] + keys].copy()
-            o[DEC] = pd.Series(dtype="float64")
-            for i in range(len(srcs)):
-                for m in MOMS:
-                    o[st_cols[m][i]] = pd.Series(dtype="float64")
-            outs.append(o)
-        return pd.concat(outs)
-
-    states = work.groupBy(PID).applyInPandas(phase1, state_schema)
-
-    carry_schema = T.StructType(
-        [T.StructField(PID, T.LongType())]
-        + [key_fields[k] for k in keys]
-        + [T.StructField(cr_cols[m][i], T.DoubleType())
-           for i in range(len(srcs)) for m in MOMS]
-    )
+        ends = []
+        for _, g in runs(pdf):
+            end = {DEC: b ** len(g)}
+            for s in srcs:
+                end.update(zip(state[s], (a[-1] for a in local(g[s], alpha))))
+            ends.append(g.iloc[[0]][[PID, *keys]].assign(**end))
+        return pd.concat(ends)
 
     def combine(pdf):
-        pdf = pdf.sort_values(PID).reset_index(drop=True)
-        out = pdf[[PID] + keys].copy()
-        for i in range(len(srcs)):
-            accs = {m: [] for m in MOMS}
-            cur = [0.0, 0.0, 0.0, 0.0, 0.0]
-            for _, r in pdf.iterrows():
-                for m, v in zip(MOMS, cur):
-                    accs[m].append(v)
-                L = [r[st_cols[m][i]] for m in MOMS]
-                cur = _welford_merge_decayed(cur, L, r[DEC])
-            for m in MOMS:
-                out[cr_cols[m][i]] = accs[m]
-        return out
+        pdf = pdf.sort_values(PID)
+        for names in state.values():
+            acc, carries = (0.0,) * len(names), []
+            ends = pdf[names].itertuples(index=False, name=None)
+            for end, dec in zip(ends, pdf[DEC]):
+                carries.append(acc)
+                acc = merge(acc, end, dec)
+            pdf[names] = np.array(carries, dtype="float64").reshape(-1, len(names))
+        return pdf
 
-    carries = states.groupBy(*keys).applyInPandas(combine, carry_schema)
-
-    cpid = f"__gvc_{uniq}__"
-    ckeys = [f"__gvk_{uniq}_{i}__" for i in range(len(keys))]
-    flat_cr = [cr_cols[m][i] for i in range(len(srcs)) for m in MOMS]
-    carries = carries.select(
-        F.col(PID).alias(cpid),
-        *[F.col(k).alias(a) for k, a in zip(keys, ckeys)],
-        *flat_cr,
-    )
-    cond = F.col(PID) == F.col(cpid)
-    for k, a in zip(keys, ckeys):
-        cond = cond & F.col(k).eqNullSafe(F.col(a))
-    work2 = work.join(carries, cond, "left").drop(cpid, *ckeys)
-
-    out_schema = T.StructType(
-        list(work2.schema.fields)
-        + [T.StructField(o, T.DoubleType()) for o in cols]
-    )
-
-    def phase2(pdf):
-        pdf = pdf.sort_values(ROW_ORDER)
+    def phase2(pdf):  # one partition's rows, each with its run's carry
         outs = []
-        for _, g in pdf.groupby(keys, dropna=False, sort=False):
-            n = len(g)
-            bp = np.power(b, np.arange(1, n + 1, dtype="float64"))
-            o = g.copy()
-            for out_name, s in cols.items():
-                i = srcs.index(s)
-                loc = _ewm_local_welford(g[s], alpha)
-                pv = [
-                    (0.0 if pd.isna(g[cr_cols[m][i]].iloc[0])
-                     else float(g[cr_cols[m][i]].iloc[0]))
-                    for m in MOMS
-                ]
-                o[out_name] = _welford_rowwise_var(loc, pv, bp, std)
-            outs.append(o)
-        if not outs:
-            o = pdf.copy()
-            for out_name in cols:
-                o[out_name] = pd.Series(dtype="float64")
-            outs.append(o)
-        return pd.concat(outs)
+        for _, g in runs(pdf):
+            decay = np.power(b, np.arange(1, len(g) + 1, dtype="float64"))
+            carry = g.iloc[0]
+            done = {
+                s: merge(tuple(carry[state[s]]), local(g[s], alpha), decay)
+                for s in srcs
+            }
+            outs.append(g.assign(**{o: finish(done[s]) for o, s in cols.items()}))
+        return pd.concat(outs)[out_schema.fieldNames()]
 
-    return (
-        work2.groupBy(PID)
-        .applyInPandas(phase2, out_schema)
-        .drop(PID, *flat_cr)
-    )
+    states = work.groupBy(PID).applyInPandas(phase1, state_schema)
+    if keys:
+        carries = states.groupBy(*keys).applyInPandas(combine, state_schema)
+        out = work.groupBy(PID).cogroup(carries.groupBy(PID)).applyInPandas(
+            lambda rows, c: phase2(
+                rows.merge(c.drop(columns=[PID, DEC]), on=keys, how="left")
+            ),
+            out_schema,
+        )
+    else:
+        carry = combine(states.toPandas()).set_index(PID).drop(columns=DEC)
+        carry = carry.to_dict("index")
+        out = work.groupBy(PID).applyInPandas(
+            lambda rows: phase2(rows.assign(**carry[rows[PID].iloc[0]])),
+            out_schema,
+        )
+    return out.drop(PID)

@@ -463,7 +463,7 @@ class Series:
     def ewm(self, alpha: float = None, com=None, span=None, halflife=None):
         """Series exponentially weighted accessor (alpha/com/span/halflife,
         pandas parameter resolution) — the exact two-phase distributed
-        recurrence (scan.ewm_mean_columns)."""
+        recurrence (scan.ewm_columns)."""
         from legate_pandas_spark.frontend.dtypes import resolve_ewm_alpha
 
         return SeriesEwm(self, resolve_ewm_alpha(alpha, com, span, halflife))
@@ -2090,40 +2090,30 @@ class SeriesExpanding:
 
 class SeriesEwm:
     """Exponentially weighted accessor over the parent frame's row order —
-    exact two-phase distributed recurrence (scan.ewm_mean_columns)."""
+    exact two-phase distributed recurrence (scan.ewm_columns)."""
 
     def __init__(self, s: "Series", alpha: float):
         self._s = s
         self._alpha = alpha
 
     def mean(self) -> "Series":
-        from legate_pandas_spark.frontend.scan import ewm_mean_columns
-
-        return self._via(ewm_mean_columns)
+        return self._via("mean")
 
     def var(self) -> "Series":
-        """Exact distributed ewm variance (pandas bias=False) — four-moment
-        carry decomposition (scan.ewm_var_columns)."""
-        from legate_pandas_spark.frontend.scan import ewm_var_columns
-
-        return self._via(lambda sdf, cols, a: ewm_var_columns(sdf, cols, a))
+        """Exact distributed ewm variance (pandas bias=False)."""
+        return self._via("var")
 
     def std(self) -> "Series":
-        from legate_pandas_spark.frontend.scan import ewm_var_columns
+        return self._via("std")
 
-        return self._via(
-            lambda sdf, cols, a: ewm_var_columns(sdf, cols, a, std=True)
-        )
-
-    def _via(self, fn) -> "Series":
-        from legate_pandas_spark.frontend.scan import _seq
+    def _via(self, stat: str) -> "Series":
+        from legate_pandas_spark.frontend.scan import _seq, ewm_columns
 
         s = self._s
-        src = s.name or "0"
-        sdf = s._frame._ordered_sdf()
-        if src not in sdf.columns:
-            src = f"__ewsrc_{next(_seq)}__"
-            sdf = sdf.withColumn(src, s._col)
-        out = f"__sewm_{next(_seq)}__"
-        s._frame._sdf = fn(sdf, {out: src}, self._alpha)
+        uniq = next(_seq)
+        # always the Series' own expression: a derived Series (s * 10,
+        # s.cumsum()) keeps the name of the stored column it came from
+        src, out = f"__ewsrc_{uniq}__", f"__sewm_{uniq}__"
+        sdf = s._frame._ordered_sdf().withColumn(src, s._col)
+        s._frame._sdf = ewm_columns(sdf, [], {out: src}, self._alpha, stat).drop(src)
         return s._wrap(F.col(out))

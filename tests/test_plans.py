@@ -197,9 +197,21 @@ def test_rank_interpolate_rolling_no_global_window(spark):
         )
     )
     cases.append(("ewm_var", lps.from_pandas(pdf, spark=spark).ewm(alpha=0.4).var()))
+    cases.append(
+        (
+            "grouped_ewm_var",
+            lps.from_pandas(pdf_k, spark=spark).groupby("k").ewm(alpha=0.4).var(),
+        )
+    )
+    cases.append(("ewm_std", lps.from_pandas(pdf, spark=spark).ewm(alpha=0.4).std()))
     for name, df in cases:
         plan = plan_text(df._sdf, mode="simple")
         assert "SinglePartition" not in plan, f"{name}: unpartitioned exchange"
+    # grouped ewm carries reach their rows through a cogroup by partition,
+    # not a row join on (partition, keys)
+    for name in ("grouped_ewm_mean", "grouped_ewm_var"):
+        plan = plan_text(dict(cases)[name]._sdf, mode="simple")
+        assert "Join" not in plan, f"{name}: carry join over every row"
 
 
 def test_pack_training_sequences_no_global_window(catalog, spark, sf_dir):

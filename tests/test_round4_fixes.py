@@ -481,7 +481,8 @@ def test_grouped_ewm_distributed_skewed_group(spark):
     )
 
 
-def test_grouped_ewm_multikey_and_null_keys(spark):
+@pytest.mark.parametrize("stat", ["mean", "var", "std"])
+def test_grouped_ewm_multikey_and_null_keys(spark, stat):
     """Composite keys incl. null keys: null-key rows are EXCLUDED (pandas
     dropna=True groupby contract, matching the reference's cudf EXCLUDE);
     surviving groups match pandas exactly across partition boundaries."""
@@ -495,13 +496,13 @@ def test_grouped_ewm_multikey_and_null_keys(spark):
         }
     )
     ldf = lps.from_pandas(pdf, spark=spark)
-    got = ldf.groupby(["k1", "k2"]).ewm(alpha=0.4).mean().to_pandas()
+    got = getattr(ldf.groupby(["k1", "k2"]).ewm(alpha=0.4), stat)().to_pandas()
     keep = pdf["k1"].notna()
     assert len(got) == int(keep.sum())
     want = (
         pdf[keep]
         .groupby(["k1", "k2"])["v"]
-        .transform(lambda s: s.ewm(alpha=0.4, adjust=True).mean())
+        .transform(lambda s: getattr(s.ewm(alpha=0.4, adjust=True), stat)())
     )
     np.testing.assert_allclose(
         got["v"].to_numpy(), want.to_numpy(), rtol=1e-9, equal_nan=True
@@ -776,6 +777,22 @@ def test_ewm_var_std_matches_pandas(spark):
     got = ldf2.ewm(span=7).var().to_pandas().reset_index(drop=True)
     want = pdf2.ewm(span=7, adjust=True).var(bias=False)
     pd.testing.assert_frame_equal(got[["a", "b"]], want, check_dtype=False, atol=1e-9)
+
+
+@pytest.mark.parametrize("stat", ["mean", "var", "std"])
+def test_series_ewm_on_derived_series(spark, stat):
+    """A derived Series keeps its parent's name; its ewm must read the
+    derived values, not the stored column of that name."""
+    import numpy as np
+
+    pdf = pd.DataFrame({"v": [1.0, 2.0, 3.0, np.nan, 5.0, 4.0, 7.0, 6.0] * 40})
+    for derive in (lambda s: s * 10, lambda s: s.cumsum()):
+        ldf = lps.from_pandas(pdf, spark=spark)
+        got = getattr(derive(ldf["v"]).ewm(alpha=0.5), stat)().to_pandas()
+        want = getattr(derive(pdf["v"]).ewm(alpha=0.5, adjust=True), stat)()
+        np.testing.assert_allclose(
+            got.to_numpy(), want.to_numpy(), rtol=1e-9, equal_nan=True
+        )
 
 
 def test_melt_default_value_vars(spark):

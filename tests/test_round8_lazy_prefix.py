@@ -150,12 +150,14 @@ _groups = itertools.count()
 def test_building_scans_runs_no_job(spark):
     """On a shuffle-free multi-partition input, building the two-phase scans
     (cumulative sum/max/min/prod, forward and backward fill, shift,
-    positions) launches no Spark job: the exclusive prefix is in the plan."""
+    positions, grouped ewm) launches no Spark job: the exclusive prefix is
+    in the plan."""
     from legate_pandas_spark.frontend import indexing, scan
     from legate_pandas_spark.frontend.frame import ROW_ORDER
 
     sdf = spark.range(500, numPartitions=7).select(
         F.when(F.col("id") % 4 == 0, None).otherwise(F.col("id") % 9 - 4).alias("v"),
+        (F.col("id") % 3).alias("k"),
         F.monotonically_increasing_id().alias(ROW_ORDER),
     )
     v = F.col("v")
@@ -168,6 +170,12 @@ def test_building_scans_runs_no_job(spark):
         "bfill": lambda: scan.fill_columns(sdf, {"o": v}, forward=False),
         "shift": lambda: scan.shift_columns(sdf, {"o": v}, 1, fresh=True),
         "positions": lambda: indexing._attach_positions(sdf, fresh=True),
+        **{
+            f"grouped_ewm_{stat}": (
+                lambda stat=stat: scan.ewm_columns(sdf, ["k"], {"o": "v"}, 0.4, stat)
+            )
+            for stat in ("mean", "var", "std")
+        },
     }
     jobs = {name: _build_jobs(spark, build) for name, build in builds.items()}
     assert jobs == {name: [] for name in builds}
