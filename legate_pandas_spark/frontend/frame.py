@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql.window import Window
 
 from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type, to_spark_type
+from legate_pandas_spark.frontend.scan import WindowStats, _seq, ewm_columns, window_columns
 from legate_pandas_spark.frontend.series import Series
 
 ROW_ORDER = "__row_order__"
@@ -2711,10 +2712,10 @@ class DataFrame:
         return Resampler(self, freq, on)
 
     def rolling(self, window: int, min_periods: int | None = None):
-        """Global rolling window object (pandas df.rolling(n)); partitioned
-        rolling lives on groupby(...).rolling_*() — the scale path.
-        min_periods follows pandas: defaults to the window size (leading rows
-        yield null); pass 1 for partial windows."""
+        """Rolling window object over the frame's row order (pandas
+        df.rolling(n)); ``groupby(...).rolling(n)`` is the same object per
+        group. min_periods follows pandas: defaults to the window size
+        (leading rows yield null); pass 1 for partial windows."""
         return Rolling(self, window, min_periods)
 
     def expanding(self, min_periods: int = 1):
@@ -3302,6 +3303,35 @@ class Resampler:
         return self._agg(F.min)
 
 
+def _per_value_column(df: DataFrame, keys: list, kernel) -> DataFrame:
+    """Run a column-appending scan kernel over every numeric value column of
+    ``df`` (not the index, the group ``keys`` or the row order) and put each
+    output in its source column's place. ``kernel(sdf, outs)`` appends one
+    column per ``outs`` entry (out name -> source column name)."""
+    sdf = df._sdf
+    dtypes = dict(sdf.dtypes)
+    value_cols = [
+        c
+        for c in sdf.columns
+        if c != ROW_ORDER
+        and c not in df._index
+        and c not in keys
+        and is_numeric_spark_type(dtypes[c])
+    ]
+    if not value_cols:
+        return DataFrame(df._ordered_sdf(), df._index)
+    uniq = next(_seq)
+    outs = {f"__win_{uniq}_{i}__": c for i, c in enumerate(value_cols)}
+    res = kernel(sdf, outs)
+    back = {c: o for o, c in outs.items()}
+    sel = [
+        F.col(back[c]).alias(c) if c in back else _qcol(c)
+        for c in res.columns
+        if c not in outs
+    ]
+    return DataFrame(res.select(*sel), df._index)
+
+
 class Ewm:
     """Exponentially weighted window over every numeric value column —
     EXACT two-phase distributed recurrence (``scan.ewm_columns``), per group
@@ -3324,258 +3354,58 @@ class Ewm:
         return self._stat("std")
 
     def _stat(self, stat: str) -> DataFrame:
-        from legate_pandas_spark.frontend.scan import _seq, ewm_columns
-
-        sdf = self._df._ordered_sdf()
-        dtypes = dict(sdf.dtypes)
-        value_cols = [
-            c
-            for c in sdf.columns
-            if c != ROW_ORDER
-            and c not in self._df._index
-            and c not in self._keys
-            and is_numeric_spark_type(dtypes[c])
-        ]
-        if not value_cols:
-            return DataFrame(sdf, self._df._index)
-        uniq = next(_seq)
-        outs = {f"__ewm_{uniq}_{i}__": c for i, c in enumerate(value_cols)}
-        res = ewm_columns(sdf, self._keys, outs, self._alpha, stat)
-        back = {c: o for o, c in outs.items()}
-        sel = [
-            F.col(back[c]).alias(c) if c in back else F.col(c)
-            for c in sdf.columns
-        ]
-        return DataFrame(res.select(*sel), self._df._index)
-
-
-class Rolling:
-    """pandas rolling semantics: min_periods defaults to the window size, and
-    the period check counts NON-NULL observations in the window (rows with too
-    few yield null) — masked via a count() over the same frame.
-
-    Distributed: a k-row frame only needs the k-1 rows preceding each
-    partition boundary, so the window runs PARTITIONED by ingest partition
-    over an augmented frame carrying broadcast "ghost" copies of those
-    boundary rows (scan.rolling_parts) — no Exchange SinglePartition."""
-
-    def __init__(self, df: DataFrame, window: int, min_periods: int | None = None):
-        self._df = df
-        self._n = window
-        self._mp = window if min_periods is None else min_periods
-
-    def _passthrough(self, c: str) -> bool:
-        return c == ROW_ORDER or c in self._df._index
-
-    def _apply(self, fn) -> DataFrame:
-        return self._apply_expr(lambda c, w: fn(c).over(w))
-
-    def _apply_expr(self, make) -> DataFrame:
-        from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
-        from legate_pandas_spark.frontend.scan import rolling_parts
-
-        fresh = ROW_ORDER not in self._df._sdf.columns
-        sdf = self._df._ordered_sdf()
-        aug, w, GH, _helpers = rolling_parts(sdf, self._n, fresh)
-        mp = self._mp
-        dtypes = dict(sdf.dtypes)
-        sel = []
-        for c in sdf.columns:
-            if self._passthrough(c) or not is_numeric_spark_type(dtypes[c]):
-                sel.append(F.col(c))
-            else:
-                expr = make(F.col(c), w)
-                if mp > 1:
-                    expr = F.when(F.count(F.col(c)).over(w) >= mp, expr)
-                sel.append(expr.alias(c))
-        out = aug.select(*sel, F.col(GH)).filter(~F.col(GH)).drop(GH)
-        return DataFrame(out, self._df._index)
-
-    def median(self):
-        return self.quantile(0.5)
-
-    def quantile(self, q: float):
-        """Exact interpolated rolling quantile (pandas interpolation='linear'):
-        sorted window-frame list + bracketing blend (scan.window_quantile_expr
-        — the list is k-sized, never partition-sized)."""
-        from legate_pandas_spark.frontend.scan import window_quantile_expr
-
-        return self._apply_expr(lambda c, w: window_quantile_expr(c, w, q))
-
-    def apply(self, func, raw: bool = False):
-        """Arbitrary Python rolling function (pandas rolling.apply) — the UDF
-        escape hatch, still distributed: each ingest partition plus its k-1
-        boundary ghost rows becomes ONE Arrow batch, pandas computes the
-        rolling apply locally, and ghost rows are dropped after providing
-        left context. Partition-parallel; one Python hop per partition."""
-        from pyspark.sql import types as T
-
-        from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
-        from legate_pandas_spark.frontend.scan import rolling_parts
-
-        fresh = ROW_ORDER not in self._df._sdf.columns
-        sdf = self._df._ordered_sdf()
-        aug, _w, GH, helpers = rolling_parts(sdf, self._n, fresh)
-        POS, TGT = helpers[0], helpers[1]
-        dtypes = dict(sdf.dtypes)
-        targets = [
-            c
-            for c in sdf.columns
-            if not self._passthrough(c) and is_numeric_spark_type(dtypes[c])
-        ]
-        fields = []
-        for f in sdf.schema.fields:
-            if f.name in targets:
-                fields.append(T.StructField(f.name, T.DoubleType()))
-            else:
-                fields.append(f)
-        schema = T.StructType(fields)
-        n, mp = self._n, self._mp
-        out_cols = [f.name for f in fields]
-
-        def fn(pdf):
-            pdf = pdf.sort_values(POS).reset_index(drop=True)
-            out = pdf.copy()
-            for c in targets:
-                out[c] = pdf[c].rolling(n, min_periods=mp).apply(func, raw=raw)
-            return out.loc[~pdf[GH], out_cols]
-
-        res = aug.groupBy(TGT).applyInPandas(fn, schema=schema)
-        return DataFrame(res, self._df._index)
-
-    def sum(self):
-        return self._apply(F.sum)
-
-    def mean(self):
-        return self._apply(F.avg)
-
-    def max(self):
-        return self._apply(F.max)
-
-    def min(self):
-        return self._apply(F.min)
-
-    def std(self, ddof: int = 1):
-        return self._apply(F.stddev_samp if ddof == 1 else F.stddev_pop)
-
-    def var(self, ddof: int = 1):
-        return self._apply(F.var_samp if ddof == 1 else F.var_pop)
-
-    def count(self):
-        return self._apply(F.count)
-
-
-class Expanding:
-    """Expanding window — two-phase distributed scan, NOT an unbounded global
-    window: partition-local running aggregates combine with a broadcast carry
-    of preceding partitions' partials (scan.attach_carries, the reference's
-    core/column.py:644-687 design). var/std decompose into (n, Σx, Σx²) — the
-    reference's own mean/var/std decomposition (core/column.py:573-585)."""
-
-    def __init__(self, df: DataFrame, min_periods: int = 1):
-        self._df = df
-        self._mp = min_periods
-
-    def _passthrough(self, c: str) -> bool:
-        return c == ROW_ORDER or c in self._df._index
-
-    def _apply(self, kind: str, ddof: int = 1) -> DataFrame:
-        from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
-        from legate_pandas_spark.frontend.scan import (
-            _local_window,
-            _seq,
-            attach_carries,
+        return _per_value_column(
+            self._df,
+            self._keys,
+            lambda sdf, outs: ewm_columns(sdf, self._keys, outs, self._alpha, stat),
         )
 
-        sdf = self._df._ordered_sdf()
-        dtypes = dict(sdf.dtypes)
-        cols = [
-            c
-            for c in sdf.columns
-            if not self._passthrough(c) and is_numeric_spark_type(dtypes[c])
-        ]
-        uniq = next(_seq)
-        specs, keys = {}, {}
-        for i, c in enumerate(cols):
-            d = F.col(c).cast("double")
-            kc = f"__exn_{uniq}_{i}__"
-            specs[kc] = (F.count(F.col(c)), "sum")
-            ks = km = kq = None
-            if kind in ("sum", "mean", "var", "std"):
-                ks = f"__exs_{uniq}_{i}__"
-                specs[ks] = (F.sum(F.col(c)), "sum")
-            if kind in ("var", "std"):
-                kq = f"__exq_{uniq}_{i}__"
-                specs[kq] = (F.sum(d * d), "sum")
-            if kind == "max":
-                km = f"__exm_{uniq}_{i}__"
-                specs[km] = (F.max(F.col(c)), "max")
-            if kind == "min":
-                km = f"__exm_{uniq}_{i}__"
-                specs[km] = (F.min(F.col(c)), "min")
-            keys[c] = (kc, ks, kq, km)
-        out_sdf = attach_carries(sdf, specs) if specs else sdf
-        lw = _local_window()
-        mp = self._mp
-        sel = []
-        for c in sdf.columns:
-            if c not in keys:
-                sel.append(F.col(c))
-                continue
-            kc, ks, kq, km = keys[c]
-            d = F.col(c).cast("double")
-            n = F.count(F.col(c)).over(lw) + F.coalesce(F.col(kc), F.lit(0))
-            if kind in ("sum", "mean", "var", "std"):
-                ls = F.sum(F.col(c)).over(lw)
-                s = F.when(
-                    ls.isNull() & F.col(ks).isNull(), F.lit(None)
-                ).otherwise(
-                    F.coalesce(ls, F.lit(0)) + F.coalesce(F.col(ks), F.lit(0))
-                )
-            if kind == "sum":
-                expr = s
-            elif kind == "count":
-                expr = n.cast("double")
-            elif kind == "mean":
-                expr = s / n
-            elif kind == "max":
-                expr = F.greatest(F.max(F.col(c)).over(lw), F.col(km))
-            elif kind == "min":
-                expr = F.least(F.min(F.col(c)).over(lw), F.col(km))
-            elif kind in ("var", "std"):
-                lq = F.sum(d * d).over(lw)
-                q = F.coalesce(lq, F.lit(0.0)) + F.coalesce(F.col(kq), F.lit(0.0))
-                denom = n - F.lit(ddof)
-                v = F.greatest(
-                    (q - s.cast("double") * s.cast("double") / n) / denom,
-                    F.lit(0.0),
-                )
-                expr = F.when(denom > 0, F.sqrt(v) if kind == "std" else v)
-            else:
-                raise ValueError(kind)
-            sel.append(F.when(n >= mp, expr).alias(c))
-        return DataFrame(out_sdf.select(*sel), self._df._index)
 
-    def sum(self):
-        return self._apply("sum")
+class Rolling(WindowStats):
+    """pandas rolling window of ``window`` rows (``Expanding``: every row so
+    far) over every numeric value column, per group of ``keys``
+    (``groupby(...).rolling``: key columns are not values) or over the whole
+    frame in row order — ``scan.window_columns``. ``min_periods`` defaults
+    to the window size."""
 
-    def mean(self):
-        return self._apply("mean")
+    def __init__(
+        self, df: DataFrame, window, min_periods: int | None = None, keys: list = ()
+    ):
+        self._df = df
+        self._window = window
+        self._mp = window if min_periods is None else min_periods
+        self._keys = list(keys)
 
-    def max(self):
-        return self._apply("max")
+    def _stat(self, stat: str, arg=None) -> DataFrame:
+        def kernel(sdf, outs):
+            cols = {o: _qcol(c) for o, c in outs.items()}
+            return window_columns(sdf, self._keys, cols, self._window, self._mp, stat, arg)
 
-    def min(self):
-        return self._apply("min")
+        return _per_value_column(self._df, self._keys, kernel)
 
-    def std(self, ddof: int = 1):
-        return self._apply("std", ddof)
+    def corr(self, a: str, b: str) -> DataFrame:
+        """Pearson correlation of columns ``a`` and ``b`` over the window,
+        appended as ``<a>_<b>_corr`` (pairwise-complete rows; min_periods
+        counts pairwise observations)."""
+        return self._pairwise(a, b, "corr")
 
-    def var(self, ddof: int = 1):
-        return self._apply("var", ddof)
+    def cov(self, a: str, b: str) -> DataFrame:
+        """Sample covariance (ddof=1), appended as ``<a>_<b>_cov``."""
+        return self._pairwise(a, b, "cov")
 
-    def count(self):
-        return self._apply("count")
+    def _pairwise(self, a: str, b: str, stat: str) -> DataFrame:
+        cols = {f"{a}_{b}_{stat}": (_qcol(a), _qcol(b))}
+        out = window_columns(self._df._sdf, self._keys, cols, self._window, self._mp, stat)
+        return DataFrame(out, self._df._index)
+
+
+class Expanding(Rolling):
+    """pandas expanding window: a rolling window over every preceding row
+    (without keys: running partials plus the carry of all preceding
+    partitions, not an unbounded global window)."""
+
+    def __init__(self, df: DataFrame, min_periods: int = 1, keys: list = ()):
+        super().__init__(df, None, min_periods, keys)
 
 
 def concat(objs, axis: int = 0) -> DataFrame:

@@ -335,25 +335,17 @@ class GroupBy:
     def diff(self, periods: int = 1):
         return self._over(lambda c, w: c - F.lag(c, periods).over(w))
 
-    def rolling_sum(self, window: int):
-        return self._over(
-            lambda c, w: F.sum(c).over(w.rowsBetween(-(window - 1), 0)), numeric=True
-        )
+    def rolling(self, window: int, min_periods: int | None = None):
+        """pandas groupby.rolling: the frame-level Rolling object over a
+        window PARTITIONED by the group keys — parallel per group."""
+        from legate_pandas_spark.frontend.frame import Rolling
 
-    def rolling_mean(self, window: int):
-        return self._over(
-            lambda c, w: F.avg(c).over(w.rowsBetween(-(window - 1), 0)), numeric=True
-        )
+        return Rolling(self._df, window, min_periods, self._keys)
 
-    def rolling(self, window: int, min_periods: int | None = None) -> "GroupedRolling":
-        """pandas groupby.rolling object API: sum/mean/min/max/std/var/count with
-        min_periods semantics, over a window PARTITIONED by the group keys —
-        parallel per group, the scale path (frame-level .rolling documents the
-        global-order variant)."""
-        return GroupedRolling(self, window, min_periods)
+    def expanding(self, min_periods: int = 1):
+        from legate_pandas_spark.frontend.frame import Expanding
 
-    def expanding(self, min_periods: int = 1) -> "GroupedExpanding":
-        return GroupedExpanding(self, min_periods)
+        return Expanding(self._df, min_periods, self._keys)
 
     def _over(self, fn, numeric: bool = False):
         from pyspark.sql.window import Window
@@ -923,172 +915,6 @@ class SeriesGroupBy:
             F.max_by(c, keyed).alias("close"),
         )
         return DataFrame(out, tuple(gb._keys))
-
-
-class GroupedRolling:
-    """Per-group rolling windows (pandas groupby.rolling): same aggregate
-    surface as the frame-level Rolling, but the window is PARTITIONED by the
-    group keys — every group scans in parallel, no global ordering anywhere.
-    Null-key rows are excluded (groupby dropna contract)."""
-
-    def __init__(self, gb: GroupBy, window: int, min_periods: int | None = None):
-        from pyspark.sql.window import Window
-
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-        self._gb = gb
-        self._df = gb._df
-        self._n = window
-        self._mp = window if min_periods is None else min_periods
-        self._keys = gb._keys
-        self._Window, self._ROW_ORDER = Window, ROW_ORDER
-
-    def _frame_spec(self):
-        return (
-            self._Window.partitionBy(*self._keys)
-            .orderBy(F.asc(self._ROW_ORDER))
-            .rowsBetween(-(self._n - 1), 0)
-        )
-
-    def _passthrough(self, c: str) -> bool:
-        return c == self._ROW_ORDER or c in self._df._index or c in self._keys
-
-    def _apply(self, fn):
-        return self._apply_expr(lambda c, w: fn(c).over(w))
-
-    def _apply_expr(self, make):
-        """Window-spec loop over the group-key-PARTITIONED frame (already
-        partition-parallel — the frame-level ghost machinery is unnecessary
-        here; the group keys ARE the partitioning)."""
-        from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
-        from legate_pandas_spark.frontend.frame import DataFrame
-
-        sdf = self._df._ordered_sdf()
-        w = self._frame_spec()
-        mp = self._mp
-        dtypes = dict(sdf.dtypes)
-        sel = []
-        for c in sdf.columns:
-            if self._passthrough(c) or not is_numeric_spark_type(dtypes[c]):
-                sel.append(F.col(c))
-            else:
-                expr = make(F.col(c), w)
-                if mp > 1:
-                    expr = F.when(F.count(F.col(c)).over(w) >= mp, expr)
-                sel.append(expr.alias(c))
-        return DataFrame(sdf.select(*sel), self._df._index)
-
-    def median(self):
-        return self.quantile(0.5)
-
-    def quantile(self, q: float):
-        """Exact interpolated per-group rolling quantile — k-sized frame
-        lists; see frame-level Rolling.quantile."""
-        from legate_pandas_spark.frontend.scan import window_quantile_expr
-
-        return self._apply_expr(lambda c, w: window_quantile_expr(c, w, q))
-
-    def apply(self, func, raw: bool = False):
-        """Arbitrary Python rolling function per group (pandas
-        groupby.rolling().apply) — each group is one Arrow batch (groups ARE
-        the partition unit, no boundary exchange needed)."""
-        from pyspark.sql import types as T
-
-        from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
-        from legate_pandas_spark.frontend.frame import DataFrame
-
-        sdf = self._df._ordered_sdf()
-        dtypes = dict(sdf.dtypes)
-        targets = [
-            c
-            for c in sdf.columns
-            if not self._passthrough(c) and is_numeric_spark_type(dtypes[c])
-        ]
-        fields = [
-            T.StructField(f.name, T.DoubleType()) if f.name in targets else f
-            for f in sdf.schema.fields
-        ]
-        schema = T.StructType(fields)
-        n, mp, order = self._n, self._mp, self._ROW_ORDER
-
-        def fn(pdf):
-            pdf = pdf.sort_values(order).reset_index(drop=True)
-            out = pdf.copy()
-            for c in targets:
-                out[c] = pdf[c].rolling(n, min_periods=mp).apply(func, raw=raw)
-            return out
-
-        res = sdf.groupBy(*self._keys).applyInPandas(fn, schema=schema)
-        return DataFrame(res, self._df._index)
-
-    def sum(self):
-        return self._apply(F.sum)
-
-    def mean(self):
-        return self._apply(F.avg)
-
-    def max(self):
-        return self._apply(F.max)
-
-    def min(self):
-        return self._apply(F.min)
-
-    def std(self, ddof: int = 1):
-        return self._apply(F.stddev_samp if ddof == 1 else F.stddev_pop)
-
-    def var(self, ddof: int = 1):
-        return self._apply(F.var_samp if ddof == 1 else F.var_pop)
-
-    def count(self):
-        return self._apply(F.count)
-
-    def corr(self, a: str, b: str):
-        """Per-group rolling Pearson correlation between two columns,
-        appended as ``<a>_<b>_corr`` (pairwise-complete rows; min_periods
-        counts pairwise observations). The window is group-key-partitioned —
-        every group computes in parallel. Inherited by GroupedExpanding with
-        its unbounded frame."""
-        return self._pairwise(a, b, F.corr, "corr")
-
-    def cov(self, a: str, b: str):
-        """Per-group rolling sample covariance (ddof=1), appended as
-        ``<a>_<b>_cov``."""
-        return self._pairwise(a, b, F.covar_samp, "cov")
-
-    def _pairwise(self, a: str, b: str, fn, suffix: str):
-        from legate_pandas_spark.frontend.frame import DataFrame
-
-        sdf = self._df._ordered_sdf()
-        w = self._frame_spec()
-        both = F.when(F.col(a).isNotNull() & F.col(b).isNotNull(), F.lit(1))
-        expr = F.when(
-            F.count(both).over(w) >= self._mp, fn(F.col(a), F.col(b)).over(w)
-        )
-        return DataFrame(
-            sdf.withColumn(f"{a}_{b}_{suffix}", expr), self._df._index
-        )
-
-
-class GroupedExpanding(GroupedRolling):
-    """Per-group expanding window = grouped rolling with an unbounded-preceding
-    frame."""
-
-    def __init__(self, gb: GroupBy, min_periods: int = 1):
-        super().__init__(gb, window=1, min_periods=min_periods)
-
-    def _frame_spec(self):
-        return (
-            self._Window.partitionBy(*self._keys)
-            .orderBy(F.asc(self._ROW_ORDER))
-            .rowsBetween(self._Window.unboundedPreceding, self._Window.currentRow)
-        )
-
-    def quantile(self, q: float):
-        raise NotImplementedError(
-            "expanding quantile would collect an O(rows²) list per group; "
-            "use groupby(...).agg percentile/approx_percentile for the "
-            "final-state quantile"
-        )
 
 
 class PivotedGroupBy:

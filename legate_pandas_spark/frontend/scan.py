@@ -24,7 +24,10 @@ checkpoint, the rank splitters, ``ordered_row_number``'s eager checkpoints,
 the partition-count probe (``indexing._pid_bound``) on a shuffled input, and
 the global ewm folds, whose decayed combine stays on the driver.
 
-No unpartitioned window anywhere (``tests/test_plans.py`` pins "no
+Rolling and expanding windows (``window_columns``) reuse both: an expanding
+window is a carry scan, a k-row rolling frame reads ghost copies of the k-1
+rows before each partition; with group keys either is one key-partitioned
+window. No unpartitioned window anywhere (``tests/test_plans.py`` pins "no
 ``Exchange SinglePartition``" on these plans). shift/diff/pct_change avoid
 windows entirely: they equi-join on the global position computed by the same
 partition-offset arithmetic (unique keys, hash join, fully parallel).
@@ -375,14 +378,12 @@ def rank_column(
     return joined.withColumn(out, out_expr).drop(bkt, off_n, off_d, *tot_cols)
 
 
-def window_quantile_expr(c, w, q: float):
-    """Exact interpolated quantile over a window FRAME — Spark refuses
-    median/percentile with a frame spec, so sort the frame's collected values
-    and blend the bracketing elements (pandas linear interpolation). Intended
-    for k-row rolling frames (the list is window-sized, not partition-sized).
-    Nulls are excluded by collect_list; empty frame → null (ANSI-safe
-    element_at guard)."""
-    s = F.array_sort(F.collect_list(c).over(w))
+def _sorted_quantile(s, q: float):
+    """Exact interpolated quantile of a sorted array column — the bracketing
+    elements blended (pandas linear interpolation). Spark refuses
+    median/percentile with a window frame, so a rolling quantile sorts the
+    frame's collected values and reads them here. Empty array → null
+    (ANSI-safe element_at guard)."""
     n = F.size(s)
     idx = (n - 1) * F.lit(float(q))
     lo = F.floor(idx).cast("int")
@@ -441,7 +442,8 @@ def bucket_of(bounds: list, key):
 
 def rolling_parts(sdf, k: int, fresh: bool):
     """Build the pieces for a k-row rolling frame without an unpartitioned
-    window: (augmented sdf, window spec, ghost flag column name, helper cols).
+    window: (augmented sdf, window spec, helper columns [position, target
+    partition, ghost flag]).
 
     The reference's boundary-exchange idea: a k-row window only ever needs the
     k-1 rows PRECEDING each partition's start. Positions and per-partition
@@ -484,7 +486,213 @@ def rolling_parts(sdf, k: int, fresh: bool):
         .orderBy(F.asc(POS))
         .rowsBetween(-(k - 1), 0)
     )
-    return aug, w, GH, [POS, TGT, GH]
+    return aug, w, [POS, TGT, GH]
+
+
+def _ordered(sdf):
+    """(``sdf`` with a row-order key, whether the key was attached here —
+    then its low bits count each partition's rows contiguously)."""
+    from legate_pandas_spark.frontend.frame import ROW_ORDER
+
+    if ROW_ORDER in sdf.columns:
+        return sdf, False
+    return sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id()), True
+
+
+def _window_stat(stat: str, src, arg, run, comoment):
+    """(min_periods gate count, value) of one window statistic, written once
+    over two primitives of the row's frame: ``run(partial, combine)``, the
+    running value of a partial aggregate (``combine`` folds it across
+    partitions: 'sum', 'max', 'min', or None where it cannot be folded), and
+    ``comoment(x, y)`` = Σ(x-x̄)(y-ȳ).
+
+    ``src`` is a Column, or an (x, y) pair for corr/cov whose sides are
+    masked to the rows where both are present (pandas pairwise-complete
+    observations). pandas gates ``count`` on the rows in the frame and every
+    other statistic on its non-null observations."""
+    if isinstance(src, tuple):
+        both = src[0].isNotNull() & src[1].isNotNull()
+        x, y = (F.when(both, c).cast("double") for c in src)
+    else:
+        x = y = src.cast("double")
+    n = run(F.count(x), "sum")
+    if stat == "count":
+        return run(F.count(F.lit(1)), "sum"), n.cast("double")
+    if stat == "sum":
+        expr = run(F.sum(x), "sum")
+    elif stat == "mean":
+        expr = run(F.sum(x), "sum") / n
+    elif stat == "max":
+        expr = run(F.max(x), "max")
+    elif stat == "min":
+        expr = run(F.min(x), "min")
+    elif stat in ("var", "std"):  # arg = ddof
+        var = F.greatest(comoment(x, x) / (n - arg), F.lit(0.0))
+        expr = F.when(n > arg, F.sqrt(var) if stat == "std" else var)
+    elif stat == "cov":
+        expr = F.when(n > 1, comoment(x, y) / (n - 1))
+    elif stat == "corr":
+        den = comoment(x, x) * comoment(y, y)
+        expr = F.when(den > 0, comoment(x, y) / F.sqrt(den))
+    elif stat == "quantile":  # arg = q
+        expr = _sorted_quantile(F.array_sort(run(F.collect_list(x), None)), arg)
+    else:
+        raise ValueError(f"unsupported window statistic: {stat!r}")
+    return n, expr
+
+
+def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: str, arg=None):
+    """Append pandas rolling (``window`` rows) or expanding (``window``
+    None) statistics, per group of ``keys`` or over the whole frame, in row
+    order — the one kernel behind every rolling and expanding window.
+
+    ``cols`` maps out_name -> source Column, or -> an (x, y) pair of Columns
+    for 'corr'/'cov'. ``stat``: sum, mean, max, min, count, var/std (``arg``
+    = ddof), quantile (``arg`` = q), corr, cov, or apply (``arg`` = (func,
+    raw)). Outputs are doubles, null where the frame holds fewer than
+    ``min_periods`` observations (``_window_stat``).
+
+    * With keys: one ``Window.partitionBy(*keys)`` frame — every group is a
+      parallel unit already; no ghosts, no carries.
+    * Rolling without keys: the frame runs per ingest partition over that
+      partition plus copies of the k-1 rows before it (``rolling_parts``'
+      ghosts, dropped afterwards).
+    * Expanding without keys: partition-local running partials combined with
+      the carry of all preceding partitions (``attach_carries``); the
+      (co)moments come from running Σx, Σy, Σxy.
+
+    ``apply`` runs pandas' own rolling/expanding apply on each group (keys)
+    or ghost-augmented partition as one Arrow batch. A frame without a
+    row-order key gets one here."""
+    from pyspark.sql import types as T
+
+    from legate_pandas_spark.frontend.frame import ROW_ORDER
+    from legate_pandas_spark.frontend.indexing import _MERGE
+
+    if window is None and stat == "quantile":
+        raise NotImplementedError(
+            "expanding quantile would collect an O(rows²) list per frame; "
+            "use groupby(...).agg percentile/approx_percentile for the "
+            "final-state quantile"
+        )
+    if window is None and stat == "apply" and not keys:
+        raise NotImplementedError(
+            "expanding apply over the whole frame is one sequential Python "
+            "pass; use groupby(...).expanding().apply"
+        )
+    sdf, fresh = _ordered(sdf)
+    helpers = []
+    if keys:
+        start = Window.unboundedPreceding if window is None else -(window - 1)
+        w = (
+            Window.partitionBy(*keys)
+            .orderBy(F.asc(ROW_ORDER))
+            .rowsBetween(start, Window.currentRow)
+        )
+        order, by = ROW_ORDER, list(keys)
+    elif window is not None:
+        sdf, w, helpers = rolling_parts(sdf, window, fresh)
+        order, by = helpers[0], [helpers[1]]
+    else:
+        w = None
+
+    if stat == "apply":
+        func, raw = arg
+        uniq = next(_seq)
+        srcs = {f"__was_{uniq}_{i}__": c.cast("double") for i, c in enumerate(cols.values())}
+        work = sdf.select("*", *[c.alias(s) for s, c in srcs.items()])
+        schema = T.StructType(
+            work.schema.fields + [T.StructField(o, T.DoubleType()) for o in cols]
+        )
+        pairs = list(zip(cols, srcs))  # names only: Columns do not pickle
+
+        def fn(pdf):
+            pdf = pdf.sort_values(order)
+            for o, s in pairs:
+                x = pdf[s]
+                frame = (
+                    x.expanding(min_periods=min_periods)
+                    if window is None
+                    else x.rolling(window, min_periods=min_periods)
+                )
+                pdf[o] = frame.apply(func, raw=raw)
+            return pdf
+
+        out = work.groupBy(*by).applyInPandas(fn, schema).drop(*srcs)
+    else:
+        carries = {}
+        if w is not None:
+            def run(part, _combine):
+                return part.over(w)
+
+            def comoment(x, y):
+                return F.covar_pop(x, y).over(w) * F.count(x).over(w)
+        else:
+            lw, uniq, names = _local_window(), next(_seq), {}
+
+            def run(part, combine):
+                key = (str(part), combine)
+                if key not in names:
+                    names[key] = f"__wc_{uniq}_{len(names)}__"
+                    carries[names[key]] = (part, combine)
+                return _MERGE[combine](part.over(lw), F.col(names[key]))
+
+            def comoment(x, y):
+                s = run(F.sum(x), "sum") * run(F.sum(y), "sum")
+                return run(F.sum(x * y), "sum") - s / run(F.count(x), "sum")
+
+        exprs = []
+        for out_name, src in cols.items():
+            gate, expr = _window_stat(stat, src, arg, run, comoment)
+            exprs.append(F.when(gate >= min_periods, expr).alias(out_name))
+        if carries:
+            sdf = attach_carries(sdf, carries)
+        out = sdf.select("*", *exprs).drop(*carries)
+    if helpers:  # the ghosts gave their left context
+        out = out.filter(~F.col(helpers[2])).drop(*helpers)
+    return out
+
+
+class WindowStats:
+    """The pandas statistics of a rolling or expanding window object — one
+    surface for the frame (``frame.Rolling``/``Expanding``) and Series
+    (``series.SeriesWindow``) accessors; each runs ``window_columns``
+    through its own ``_stat(stat, arg)``."""
+
+    def sum(self):
+        return self._stat("sum")
+
+    def mean(self):
+        return self._stat("mean")
+
+    def max(self):
+        return self._stat("max")
+
+    def min(self):
+        return self._stat("min")
+
+    def count(self):
+        return self._stat("count")
+
+    def std(self, ddof: int = 1):
+        return self._stat("std", ddof)
+
+    def var(self, ddof: int = 1):
+        return self._stat("var", ddof)
+
+    def median(self):
+        return self._stat("quantile", 0.5)
+
+    def quantile(self, q: float):
+        """Exact interpolated quantile (pandas interpolation='linear') of
+        the sorted frame list — rolling only: the list is k-sized."""
+        return self._stat("quantile", q)
+
+    def apply(self, func, raw: bool = False):
+        """Arbitrary Python window function (pandas rolling.apply): pandas
+        computes it over each group, or each ingest partition plus its k-1
+        ghost rows, as one Arrow batch — partition-parallel."""
+        return self._stat("apply", (func, raw))
 
 
 def shift_columns(sdf, cols: dict, periods: int, fresh: bool):
@@ -660,7 +868,8 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
     the same combine runs on the driver over the ≤ num_partitions collected
     states (measured cheaper than the in-plan form for one global group).
 
-    ``cols`` maps out_name -> source column NAME; outputs are doubles.
+    ``cols`` maps out_name -> source column NAME; outputs are doubles. A
+    frame without a row-order key gets one here.
     """
     import numpy as np
     import pandas as pd
@@ -668,6 +877,7 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
 
     from legate_pandas_spark.frontend.frame import ROW_ORDER
 
+    sdf, _ = _ordered(sdf)
     letters, local, merge, finish = _EWM_STATS[stat]
     b = 1.0 - alpha
     uniq = next(_seq)

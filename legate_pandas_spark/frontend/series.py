@@ -23,6 +23,7 @@ from legate_pandas_spark.frontend.dtypes import (
     to_spark_type,
     truediv,
 )
+from legate_pandas_spark.frontend.scan import WindowStats, _seq, window_columns
 
 
 class Series:
@@ -456,9 +457,9 @@ class Series:
         return self._cum("prod")
 
     def rolling(self, window: int, min_periods: int | None = None):
-        """Series rolling window (pandas s.rolling(k).mean() idiom) — same
-        boundary-ghost distributed machinery as frame-level Rolling."""
-        return SeriesRolling(self, window, min_periods)
+        """Series rolling window (pandas s.rolling(k).mean() idiom) — the
+        kernel of frame-level Rolling (scan.window_columns)."""
+        return SeriesWindow(self, window, min_periods)
 
     def ewm(self, alpha: float = None, com=None, span=None, halflife=None):
         """Series exponentially weighted accessor (alpha/com/span/halflife,
@@ -471,7 +472,7 @@ class Series:
     def expanding(self, min_periods: int = 1):
         """Series expanding window — two-phase running carry, no
         unpartitioned window."""
-        return SeriesExpanding(self, min_periods)
+        return SeriesWindow(self, None, min_periods)
 
     def _fill(self, forward: bool):
         from legate_pandas_spark.frontend.scan import _seq, fill_columns
@@ -1840,252 +1841,40 @@ class _SeriesScalarIndexer:
         return vals[0]
 
 
-class SeriesRolling:
-    """k-row rolling over the parent frame's row order — the boundary-ghost
-    distributed window (scan.rolling_parts; no Exchange SinglePartition).
-    Each stat materializes a hidden column on the parent frame and wraps it."""
+class SeriesWindow(WindowStats):
+    """Rolling (``window`` rows) or expanding (``window`` None) accessor over
+    the parent frame's row order — the frame's window kernel
+    (``scan.window_columns``) on this Series. Each statistic appends a
+    hidden column to the parent frame and wraps it."""
 
-    def __init__(self, s: "Series", window: int, min_periods: int | None = None):
+    def __init__(self, s: "Series", window, min_periods: int | None = None):
         self._s = s
-        self._n = window
+        self._window = window
         self._mp = window if min_periods is None else min_periods
 
-    def _apply(self, fn) -> "Series":
-        return self._apply_expr(lambda c, w: fn(c).over(w))
-
-    def _apply_expr(self, make) -> "Series":
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.scan import _seq, rolling_parts
-
+    def _stat(self, stat: str, arg=None, other: "Series" = None) -> "Series":
         s = self._s
-        fresh = ROW_ORDER not in s._frame._sdf.columns
-        sdf = s._frame._ordered_sdf()
-        aug, w, GH, helpers = rolling_parts(sdf, self._n, fresh)
-        out = f"__sroll_{next(_seq)}__"
-        expr = make(s._col, w)
-        if self._mp > 1:
-            expr = F.when(F.count(s._col).over(w) >= self._mp, expr)
-        new = aug.withColumn(out, expr).filter(~F.col(GH))
-        s._frame._sdf = new.drop(*helpers)
+        src = s._col
+        if other is not None:
+            if other._frame is not s._frame:
+                raise ValueError(f"window {stat} requires Series from the same frame")
+            src = (s._col, other._col)
+        out = f"__swin_{next(_seq)}__"
+        s._frame._sdf = window_columns(
+            s._frame._sdf, [], {out: src}, self._window, self._mp, stat, arg
+        )
         return s._wrap(F.col(out))
-
-    def median(self):
-        return self.quantile(0.5)
-
-    def quantile(self, q: float):
-        from legate_pandas_spark.frontend.scan import window_quantile_expr
-
-        return self._apply_expr(lambda c, w: window_quantile_expr(c, w, q))
-
-    def sum(self):
-        return self._apply(F.sum)
-
-    def mean(self):
-        return self._apply(F.avg)
-
-    def max(self):
-        return self._apply(F.max)
-
-    def min(self):
-        return self._apply(F.min)
-
-    def std(self, ddof: int = 1):
-        return self._apply(F.stddev_samp if ddof == 1 else F.stddev_pop)
-
-    def var(self, ddof: int = 1):
-        return self._apply(F.var_samp if ddof == 1 else F.var_pop)
-
-    def count(self):
-        return self._apply(lambda c: F.count(c).cast("double"))
 
     def corr(self, other: "Series") -> "Series":
-        """Rolling Pearson correlation against another Series of the SAME
-        frame (pandas s.rolling(k).corr(other)). Pairwise-complete rows only
-        (Spark's corr skips a row when either side is null, matching pandas),
-        and the min_periods gate counts pairwise-complete observations."""
-        return self._pairwise(other, F.corr)
+        """Pearson correlation against another Series of the SAME frame
+        (pandas s.rolling(k).corr(other)): pairwise-complete rows only, and
+        min_periods counts pairwise observations."""
+        return self._stat("corr", other=other)
 
     def cov(self, other: "Series") -> "Series":
-        """Rolling sample covariance (ddof=1) against another Series of the
-        same frame (pandas s.rolling(k).cov(other))."""
-        return self._pairwise(other, F.covar_samp)
-
-    def _pairwise(self, other: "Series", fn) -> "Series":
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.scan import _seq, rolling_parts
-
-        s = self._s
-        if other._frame is not s._frame:
-            raise ValueError(
-                "rolling corr/cov requires Series from the same frame"
-            )
-        fresh = ROW_ORDER not in s._frame._sdf.columns
-        sdf = s._frame._ordered_sdf()
-        aug, w, GH, helpers = rolling_parts(sdf, self._n, fresh)
-        out = f"__sroll_{next(_seq)}__"
-        both = F.when(s._col.isNotNull() & other._col.isNotNull(), F.lit(1))
-        expr = fn(s._col, other._col).over(w)
-        expr = F.when(F.count(both).over(w) >= self._mp, expr)
-        new = aug.withColumn(out, expr).filter(~F.col(GH))
-        s._frame._sdf = new.drop(*helpers)
-        return s._wrap(F.col(out))
-
-
-class SeriesExpanding:
-    """Expanding window over the parent frame's row order — partition-local
-    running aggregate + broadcast carry (scan.attach_carries); var/std
-    decompose into (n, Σx, Σx²)."""
-
-    def __init__(self, s: "Series", min_periods: int = 1):
-        self._s = s
-        self._mp = min_periods
-
-    def _apply(self, kind: str, ddof: int = 1) -> "Series":
-        from legate_pandas_spark.frontend.scan import (
-            _local_window,
-            _seq,
-            attach_carries,
-        )
-
-        s = self._s
-        sdf = s._frame._ordered_sdf()
-        c = s._col
-        d = c.cast("double")
-        uniq = next(_seq)
-        kc = f"__sexn_{uniq}__"
-        specs = {kc: (F.count(c), "sum")}
-        ks = kq = km = None
-        if kind in ("sum", "mean", "var", "std"):
-            ks = f"__sexs_{uniq}__"
-            specs[ks] = (F.sum(c), "sum")
-        if kind in ("var", "std"):
-            kq = f"__sexq_{uniq}__"
-            specs[kq] = (F.sum(d * d), "sum")
-        if kind in ("max", "min"):
-            km = f"__sexm_{uniq}__"
-            specs[km] = (
-                (F.max(c), "max") if kind == "max" else (F.min(c), "min")
-            )
-        out_sdf = attach_carries(sdf, specs)
-        lw = _local_window()
-        n = F.count(c).over(lw) + F.coalesce(F.col(kc), F.lit(0))
-        if kind in ("sum", "mean", "var", "std"):
-            ls = F.sum(c).over(lw)
-            ssum = F.when(ls.isNull() & F.col(ks).isNull(), F.lit(None)).otherwise(
-                F.coalesce(ls, F.lit(0)) + F.coalesce(F.col(ks), F.lit(0))
-            )
-        if kind == "sum":
-            expr = ssum
-        elif kind == "count":
-            expr = n.cast("double")
-        elif kind == "mean":
-            expr = ssum / n
-        elif kind == "max":
-            expr = F.greatest(F.max(c).over(lw), F.col(km))
-        elif kind == "min":
-            expr = F.least(F.min(c).over(lw), F.col(km))
-        elif kind in ("var", "std"):
-            lq = F.sum(d * d).over(lw)
-            q = F.coalesce(lq, F.lit(0.0)) + F.coalesce(F.col(kq), F.lit(0.0))
-            denom = n - F.lit(ddof)
-            v = F.greatest(
-                (q - ssum.cast("double") * ssum.cast("double") / n) / denom,
-                F.lit(0.0),
-            )
-            expr = F.when(denom > 0, F.sqrt(v) if kind == "std" else v)
-        else:
-            raise ValueError(kind)
-        out = f"__sexp_{uniq}__"
-        s._frame._sdf = out_sdf.withColumn(
-            out, F.when(n >= self._mp, expr)
-        ).drop(*[k for k in (kc, ks, kq, km) if k])
-        return s._wrap(F.col(out))
-
-    def sum(self):
-        return self._apply("sum")
-
-    def mean(self):
-        return self._apply("mean")
-
-    def max(self):
-        return self._apply("max")
-
-    def min(self):
-        return self._apply("min")
-
-    def std(self, ddof: int = 1):
-        return self._apply("std", ddof)
-
-    def var(self, ddof: int = 1):
-        return self._apply("var", ddof)
-
-    def count(self):
-        return self._apply("count")
-
-    def corr(self, other: "Series") -> "Series":
-        """Expanding Pearson correlation against another Series of the same
-        frame — window-free: six running pairwise sums (n, Σx, Σy, Σxy, Σx²,
-        Σy² over pairwise-complete rows) through the SAME one-aggregate carry
-        pass, then pure arithmetic. No rolling frame, no extra shuffle."""
-        return self._pairwise(other, "corr")
-
-    def cov(self, other: "Series") -> "Series":
-        """Expanding sample covariance (ddof=1) — same running-sum
-        decomposition as corr."""
-        return self._pairwise(other, "cov")
-
-    def _pairwise(self, other: "Series", kind: str) -> "Series":
-        from legate_pandas_spark.frontend.scan import (
-            _local_window,
-            _seq,
-            attach_carries,
-        )
-
-        s = self._s
-        if other._frame is not s._frame:
-            raise ValueError(
-                "expanding corr/cov requires Series from the same frame"
-            )
-        sdf = s._frame._ordered_sdf()
-        mask = s._col.isNotNull() & other._col.isNotNull()
-        xa = F.when(mask, s._col).cast("double")
-        xb = F.when(mask, other._col).cast("double")
-        uniq = next(_seq)
-        names = [f"__sxp{i}_{uniq}__" for i in range(6)]
-        parts = [
-            F.count(F.when(mask, 1)),
-            F.sum(xa),
-            F.sum(xb),
-            F.sum(xa * xb),
-            F.sum(xa * xa),
-            F.sum(xb * xb),
-        ]
-        specs = {nm: (e, "sum") for nm, e in zip(names, parts)}
-        out_sdf = attach_carries(sdf, specs)
-        lw = _local_window()
-        locs = [
-            F.count(F.when(mask, 1)).over(lw),
-            F.sum(xa).over(lw),
-            F.sum(xb).over(lw),
-            F.sum(xa * xb).over(lw),
-            F.sum(xa * xa).over(lw),
-            F.sum(xb * xb).over(lw),
-        ]
-        run = [
-            F.coalesce(l.cast("double"), F.lit(0.0))
-            + F.coalesce(F.col(nm).cast("double"), F.lit(0.0))
-            for l, nm in zip(locs, names)
-        ]
-        n, sx, sy, sxy, sxx, syy = run
-        gate = n >= F.greatest(F.lit(float(self._mp)), F.lit(2.0))
-        if kind == "cov":
-            expr = F.when(gate, (sxy - sx * sy / n) / (n - 1))
-        else:
-            den = (n * sxx - sx * sx) * (n * syy - sy * sy)
-            expr = F.when(gate & (den > 0), (n * sxy - sx * sy) / F.sqrt(den))
-        out = f"__sexp_{uniq}__"
-        s._frame._sdf = out_sdf.withColumn(out, expr).drop(*names)
-        return s._wrap(F.col(out))
+        """Sample covariance (ddof=1) against another Series of the same
+        frame (pandas s.rolling(k).cov(other))."""
+        return self._stat("cov", other=other)
 
 
 class SeriesEwm:

@@ -528,7 +528,7 @@ def pd_global_rank_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pd_rolling_median_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pandas idiom: global rolling median/quantile (round-4
-    window_quantile_expr — sorted k-sized frame list + linear interpolation,
+    scan._sorted_quantile — sorted k-sized frame list + linear interpolation,
     over the boundary-ghost partitioned window; Spark's own median/percentile
     refuse window frames). Ordered by the unique o_orderkey (total order).
     DuckDB twin: median / quantile_cont window aggregates."""

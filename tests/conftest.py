@@ -19,8 +19,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # Every oracle-parity row, every plan audit/budget, every streaming-parity
 # case, the graph-reference fuzzers (triangle/LPA), and all sub-15 s property
 # fuzzers still run by default. The marked tests fuzz facade surfaces
-# (rolling/ewm/interpolate/categorical/provenance) that no optimization
-# round touches; each still has faster sibling fuzz coverage in its family.
+# (rolling/ewm/interpolate/categorical/provenance); each still has faster
+# sibling fuzz coverage in its family, and a change to one of these surfaces
+# runs its marked fuzzers by node id with -m "slow or not slow".
 # Central list (rather than per-file decorators) so the whole trade is
 # auditable in one place.
 # ---------------------------------------------------------------------------

@@ -207,10 +207,10 @@ def test_groupby_shift_diff(spark):
 def test_groupby_rolling(spark):
     p = pd.DataFrame({"g": [0, 0, 0, 0, 1, 1], "v": [1.0, 2.0, 3.0, 4.0, 10.0, 20.0]})
     l = lps.from_pandas(p, spark=spark)
-    got = l.groupby("g").rolling_sum(2).to_pandas()
+    got = l.groupby("g").rolling(2, min_periods=1).sum().to_pandas()
     want = p.groupby("g")["v"].rolling(2, min_periods=1).sum().reset_index(drop=True)
     assert sorted(got["v"]) == sorted(want)
-    got_m = l.groupby("g").rolling_mean(3).to_pandas()
+    got_m = l.groupby("g").rolling(3, min_periods=1).mean().to_pandas()
     want_m = p.groupby("g")["v"].rolling(3, min_periods=1).mean().reset_index(drop=True)
     assert sorted(got_m["v"]) == sorted(want_m)
 

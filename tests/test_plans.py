@@ -164,8 +164,9 @@ def test_cum_shift_fill_no_global_window(spark):
 def test_rank_interpolate_rolling_no_global_window(spark):
     """Round-4 closure of the global-window family: Series.rank (range-bucketed
     two-phase rank), Series.interpolate (position + ffill/bfill carries), and
-    frame-level Rolling (boundary ghost rows) / Expanding (running carry) must
-    never emit `Exchange SinglePartition`."""
+    Rolling (boundary ghost rows) / Expanding (running carry) on the frame,
+    the Series accessor and groupby must never emit `Exchange
+    SinglePartition`."""
     import pandas as pd
 
     import legate_pandas_spark as lps
@@ -186,6 +187,10 @@ def test_rank_interpolate_rolling_no_global_window(spark):
     cases.append(("rolling_std", ldf.rolling(5).std()))
     cases.append(("expanding_sum", ldf.expanding().sum()))
     cases.append(("expanding_var", ldf.expanding().var()))
+    ldf = lps.from_pandas(pdf, spark=spark)
+    cases.append(("series_rolling_mean", ldf["a"].rolling(5).mean()._frame))
+    ldf = lps.from_pandas(pdf, spark=spark)
+    cases.append(("series_expanding_std", ldf["a"].expanding().std()._frame))
     cases.append(("frame_interpolate", lps.from_pandas(pdf, spark=spark).interpolate()))
     cases.append(("frame_rank", lps.from_pandas(pdf, spark=spark).rank()))
     cases.append(("ewm_mean", lps.from_pandas(pdf, spark=spark).ewm(alpha=0.4).mean()))
@@ -194,6 +199,12 @@ def test_rank_interpolate_rolling_no_global_window(spark):
         (
             "grouped_ewm_mean",
             lps.from_pandas(pdf_k, spark=spark).groupby("k").ewm(alpha=0.4).mean(),
+        )
+    )
+    cases.append(
+        (
+            "grouped_rolling_sum",
+            lps.from_pandas(pdf_k, spark=spark).groupby("k").rolling(5).sum(),
         )
     )
     cases.append(("ewm_var", lps.from_pandas(pdf, spark=spark).ewm(alpha=0.4).var()))
