@@ -401,8 +401,9 @@ class StringMethods:
 
     def cat(self, others=None, sep: str = ""):
         """Concatenate with an aligned Series (or a scalar string)."""
-        other = self._s._other_col(others) if others is not None else F.lit("")
-        return self._wrap(F.concat(self._s._col, F.lit(sep), other))
+        return self._s._binop(
+            "" if others is None else others, lambda a, b: F.concat(a, F.lit(sep), b)
+        )
 
     def extract(self, pat: str, group: int = 1):
         """First regex group match (pandas str.extract with one group)."""
@@ -745,9 +746,9 @@ class CategoricalMethods:
         """int32 codes; nulls → -1 (pandas). Declared categories (an explicit
         CategoricalDtype) compile straight to an array_position expression —
         the dictionary is user-supplied, nothing touches the cluster. Inferred
-        categories broadcast-join a lazy distinct+rank dictionary into the
-        parent frame's plan (mutating its lineage like the ordered-op
-        materializers do) — zero driver collect either way."""
+        categories broadcast-join a lazy distinct+rank dictionary onto a
+        derived frame (``DataFrame._with_step``; the parent frame is not
+        rewritten) — zero driver collect either way."""
         if self._s._cat is not None and self._s._cat.categories is not None:
             return self._s._wrap(self._s._cat.code_expr(self._s._col))
         # Adaptive fast path (round 6): probe the inferred dictionary with an
@@ -775,11 +776,11 @@ class CategoricalMethods:
                 ).cast("int")
             )
         dict_df, val, code = self._dictionary()
-        frame = self._s._frame
-        frame._sdf = frame._sdf.join(
-            F.broadcast(dict_df), self._s._col == F.col(val), "left"
-        ).drop(val)
-        return self._s._wrap(F.coalesce(F.col(code), F.lit(-1)).cast("int"))
+        src = self._s._col
+        frame = self._s._frame._with_step(
+            lambda sdf: sdf.join(F.broadcast(dict_df), src == F.col(val), "left").drop(val)
+        )
+        return self._s._wrap(F.coalesce(F.col(code), F.lit(-1)).cast("int"), frame=frame)
 
     # -- dictionary editing (pandas .cat mutators; all return new series) ---
 

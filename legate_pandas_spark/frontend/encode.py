@@ -147,13 +147,9 @@ def crosstab(index: Series, columns: Series) -> DataFrame:
     One hash aggregate + pivot with an explicit value list (the column
     dictionary is one distinct aggregate — small by contract, it becomes the
     schema)."""
-    if index._frame is not columns._frame:
-        root_i = getattr(index._frame, "_lineage_parent", None) or index._frame
-        root_c = getattr(columns._frame, "_lineage_parent", None) or columns._frame
-        if root_i is not root_c:
-            raise ValueError("crosstab requires Series from the same frame")
-    sdf = index._frame._sdf.select(
-        index._col.alias(index.name or "row"), columns._col.alias(columns.name or "col")
+    frame, (col,) = index._resolve(columns)  # raises unless aligned
+    sdf = frame._sdf.select(
+        index._col.alias(index.name or "row"), col.alias(columns.name or "col")
     )
     rname, cname = sdf.columns
     values = _collect_dictionary(sdf, F.col(cname), f"crosstab({cname!r})")

@@ -17,15 +17,26 @@ core/index.py:189-287).
 
 from __future__ import annotations
 
+import math
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame as SparkDF
 from pyspark.sql.window import Window
 
 from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type, to_spark_type
-from legate_pandas_spark.frontend.scan import WindowStats, _seq, ewm_columns, window_columns
+from legate_pandas_spark.frontend.ordered import OrderedOps
+from legate_pandas_spark.frontend.scan import _seq
 from legate_pandas_spark.frontend.series import Series
 
 ROW_ORDER = "__row_order__"
+
+
+def row_order(sdf: SparkDF) -> SparkDF:
+    """``sdf`` with a partition-stable row-order key (unchanged if it has
+    one) — also the step that pins a derived frame's row order."""
+    if ROW_ORDER in sdf.columns:
+        return sdf
+    return sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id())
 
 
 def _qcol(name: str):
@@ -74,12 +85,18 @@ def _caller_env(env: dict, depth: int) -> dict:
     return merged
 
 
-class DataFrame:
+class DataFrame(OrderedOps):
     def __init__(self, data, index: tuple[str, ...] = (), spark=None):
         """Accepts a Spark DataFrame (internal), a pandas DataFrame, or a dict
         of columns — the reference's tests construct frames as
         ``lp.DataFrame(pandas_df)`` (e.g. tests/pandas/df_create.py), so the
         drop-in surface must too."""
+        # lineage of a derived frame (``_with_step``): the parent frame, the
+        # parent plan it was built on, and the steps applied since; and how
+        # often the parent's columns had been overwritten in place by then
+        # (a parent counts its own: ``_overwrite``)
+        self._parent, self._base, self._steps = None, None, ()
+        self._overwrites = 0
         # columns PROVABLY free of nulls (set only where the facade itself
         # guarantees it: groupby dropna key outputs, and propagated through
         # merges/renames). merge() uses this to compile a plain equi-join
@@ -180,9 +197,94 @@ class DataFrame:
     def _ordered_sdf(self) -> SparkDF:
         """Attach a partition-stable row-order key if not present (virtual
         RangeIndex materialization — narrow op, no shuffle)."""
-        if ROW_ORDER in self._sdf.columns:
-            return self._sdf
-        return self._sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id())
+        return row_order(self._sdf)
+
+    # ---------------------------------------------------------------- lineage
+    def _with_step(self, step) -> "DataFrame":
+        """Derived frame: this frame's plan plus what ``step`` (sdf -> sdf,
+        row-preserving) appends — hidden columns, or the row-order key. A
+        Series' ordered ops return Series on derived frames, so the frame
+        a Series came from is never rewritten."""
+        parent, base, steps, overwrites = self._lineage()
+        out = self._replace(step(self._sdf))
+        out._nonnull_cols = self._nonnull_cols
+        out._parent, out._base, out._steps = parent, base, steps + (step,)
+        out._overwrites = overwrites
+        return out
+
+    def _lineage(self):
+        """(parent frame, the parent's plan this frame was built on, steps
+        applied since, the parent's overwrite count then); a frame that was
+        not derived is its own parent."""
+        if self._parent is None:
+            return self, self._sdf, (), self._overwrites
+        return self._parent, self._base, self._steps, self._overwrites
+
+    def _rejoin(self, stale: "DataFrame") -> "DataFrame":
+        """Derived frame: this plan plus the hidden columns that ``stale``, a
+        frame derived from an earlier plan of the same parent, added — joined
+        on the row-order key, which both plans carry from that parent."""
+        _, base, _, _ = stale._lineage()
+        have = set(base.columns) | set(self._sdf.columns)
+        extra = row_order(stale._sdf)
+        extra = extra.select(ROW_ORDER, *[c for c in extra.columns if c not in have])
+        return self._with_step(lambda sdf: row_order(sdf).join(extra, ROW_ORDER, "left"))
+
+    def _overwrite(self, sdf: SparkDF) -> None:
+        """Reassign this frame's plan in place with existing columns
+        overwritten (or dropped): steps derived from an earlier plan read
+        those columns by name, so ``_resolve`` no longer re-applies them."""
+        self._sdf = sdf
+        self._overwrites += 1
+
+    def _resolve(self, other: "DataFrame") -> "DataFrame":
+        """The frame that both this frame's and ``other``'s columns read
+        from: their parent's plan plus the ordered union of both sides'
+        steps — the wider side itself when it holds every step, so
+        ``df.a + df.b.shift()`` adds no join to shift's. A side built on an
+        earlier plan of the parent (reassigned since by ``__setitem__``)
+        re-applies its steps to the current one, or — if the parent
+        overwrote columns since, which a re-applied step would read — joins
+        its hidden columns back (``_rejoin``). Frames of different parents
+        raise: binary ops are aligned-only, like the reference (README.md:
+        208-218; core/index.py:87-102 raises on unaligned partitions)."""
+        if other is self or other._sdf is self._sdf:
+            return self
+        pa, ba, sa, ga = self._lineage()
+        pb, bb, sb, gb = other._lineage()
+        if ba is bb:
+            if set(sb) <= set(sa):
+                return self
+            if set(sa) <= set(sb):
+                return other
+            out, done = self, set(sa)
+        elif pa is pb:
+            out, done = (self, set(sa)) if ba is pa._sdf else (pa, set())
+            for side, base, steps, gen in ((self, ba, sa, ga), (other, bb, sb, gb)):
+                if base is not pa._sdf and gen != pa._overwrites:
+                    out, done = out._rejoin(side), done | set(steps)
+        else:
+            raise ValueError(
+                "binary ops require Series from the same frame (aligned); "
+                "merge/join the frames first (reference README.md:208-218)"
+            )
+        for step in dict.fromkeys(sa + sb):
+            if step not in done:
+                out = out._with_step(step)
+        return out
+
+    def _read(self, s: Series) -> "DataFrame":
+        """The frame a frame-side read (mask, assignment, where/mask) takes
+        Series ``s`` from: ``_resolve``'s, or this frame itself for a
+        step-free Series of another frame — a projection or copy of this
+        one, which pandas aligns by index — whose columns Spark resolves by
+        name."""
+        try:
+            return self._resolve(s._frame)
+        except ValueError:
+            if s._frame._steps:
+                raise
+            return self
 
     # ------------------------------------------------------------ projection
     def __getitem__(self, key):
@@ -200,7 +302,7 @@ class DataFrame:
             out._nonnull_cols = self._nonnull_cols & set(keep + key)
             return out
         if isinstance(key, Series):
-            out = self._replace(self._sdf.filter(key._col))
+            out = self._replace(self._read(key)._sdf.filter(key._col))
             # row filtering cannot introduce nulls; and the surviving rows
             # had the mask TRUE, so the mask's null-rejection proof applies
             # (df[df.k > 0] proves k non-null -> merge plain-equality path)
@@ -223,7 +325,7 @@ class DataFrame:
                 sdf = sdf.withColumn(t, src)
             for target, t in zip(name, tmp):
                 sdf = sdf.withColumn(target, F.col(t))
-            self._sdf = sdf.drop(*tmp)
+            self._overwrite(sdf.drop(*tmp))
             self._nonnull_cols = self._nonnull_cols - set(name)
             return
         if isinstance(value, Series):
@@ -233,7 +335,7 @@ class DataFrame:
                     "no zone metadata — store naive wall time via "
                     "dt.tz_localize(None) or naive UTC via dt.tz_convert(None)"
                 )
-            self._sdf = self._sdf.withColumn(name, value._col)
+            sdf = self._read(value)._sdf.withColumn(name, value._col)
             if value._cat is not None:
                 self._cat_meta[name] = value._cat
             else:
@@ -241,7 +343,11 @@ class DataFrame:
         else:
             if hasattr(value, "item") and not isinstance(value, (str, bytes)):
                 value = value.item()  # numpy typed scalars (reference df_fill)
-            self._sdf = self._sdf.withColumn(name, F.lit(value))
+            sdf = self._sdf.withColumn(name, F.lit(value))
+        if name in self._sdf.columns:
+            self._overwrite(sdf)
+        else:
+            self._sdf = sdf
         self._nonnull_cols = self._nonnull_cols - {name}
 
     def __getattr__(self, name: str):
@@ -256,12 +362,9 @@ class DataFrame:
     def assign(self, **kwargs) -> "DataFrame":
         """Add columns from Series, scalars, or callables taking the frame
         (pandas assign; callables see earlier assignments, left-to-right)."""
-        out = self._replace(self._sdf)
+        out = self.copy()
         for name, value in kwargs.items():
-            if callable(value) and not isinstance(value, Series):
-                value = value(out)
-            col = value._col if isinstance(value, Series) else F.lit(value)
-            out._sdf = out._sdf.withColumn(name, col)
+            out[name] = value(out) if callable(value) and not isinstance(value, Series) else value
         return out
 
     def drop(self, labels=None, columns=None, index=None, axis=0, level=None) -> "DataFrame":
@@ -803,29 +906,51 @@ class DataFrame:
         other: scalar, Series (row-wise broadcast, axis=0), or aligned
         DataFrame (cell-wise)."""
         if isinstance(cond, Series):
-            cond_exprs = {c: cond._col for c in self.columns}
-        elif isinstance(cond, DataFrame):
+            return self._keep_where(self._read(cond), lambda c: cond._col, other)
+        if isinstance(cond, DataFrame):
             ce = self._aligned_exprs(cond)
             # cells with no cond column or null cond are False (pandas)
-            cond_exprs = {
-                c: F.coalesce(ce[c], F.lit(False)) if c in ce else F.lit(False)
-                for c in self.columns
-            }
-        else:
-            raise TypeError(f"unsupported cond type: {type(cond)!r}")
+            return self._keep_where(
+                self,
+                lambda c: F.coalesce(ce[c], F.lit(False)) if c in ce else F.lit(False),
+                other,
+            )
+        raise TypeError(f"unsupported cond type: {type(cond)!r}")
+
+    def mask(self, cond, other=None, axis=None) -> "DataFrame":
+        """Replace cells where cond holds (inverse of where); null cond cells
+        are kept (pandas: mask only replaces where cond is True)."""
+        if isinstance(cond, Series):
+            return self._keep_where(
+                self._read(cond), lambda c: ~F.coalesce(cond._col, F.lit(False)), other
+            )
+        if isinstance(cond, DataFrame):
+            ce = self._aligned_exprs(cond)
+            return self._keep_where(
+                self,
+                lambda c: ~F.coalesce(ce[c], F.lit(False)) if c in ce else F.lit(True),
+                other,
+            )
+        raise TypeError(f"unsupported cond type: {type(cond)!r}")
+
+    def _keep_where(self, base: "DataFrame", keep_cell, other) -> "DataFrame":
+        """Each value column's cells where ``keep_cell(column)`` holds, else
+        `other`, selected from ``base`` (this frame, or the frame a Series
+        cond is read from); a Series `other` is read the same way."""
         if isinstance(other, DataFrame):
             oe = self._aligned_exprs(other)
-            other_exprs = {c: oe.get(c, F.lit(None)) for c in self.columns}
+            repl = lambda c: oe.get(c, F.lit(None))  # noqa: E731
         elif isinstance(other, Series):
-            other_exprs = {c: other._col for c in self.columns}
+            base = base._read(other)
+            repl = lambda c: other._col  # noqa: E731
         else:
-            other_exprs = {c: F.lit(other) for c in self.columns}
-        keep = [c for c in self._sdf.columns if c in self._index or (c.startswith("__") and c.endswith("__"))]
+            repl = lambda c: F.lit(other)  # noqa: E731
+        keep = [c for c in base._sdf.columns if c in self._index or (c.startswith("__") and c.endswith("__"))]
         sel = [F.col(c) for c in keep] + [
-            F.when(cond_exprs[c], F.col(c)).otherwise(other_exprs[c]).alias(c)
+            F.when(keep_cell(c), F.col(c)).otherwise(repl(c)).alias(c)
             for c in self.columns
         ]
-        out = self._replace(self._sdf.select(*sel))
+        out = self._replace(base._sdf.select(*sel))
         # provenance (round-9): kept cells preserve values, replaced cells
         # become `other` — a NON-NULL scalar replacement can never introduce
         # a null, so existing column proofs survive. Frame/Series others and
@@ -835,42 +960,6 @@ class DataFrame:
                 out._sdf.columns
             )
         return out
-
-    def mask(self, cond, other=None, axis=None) -> "DataFrame":
-        """Replace cells where cond holds (inverse of where); null cond cells
-        are kept (pandas: mask only replaces where cond is True)."""
-        if isinstance(cond, Series):
-            # NA cond must KEEP the original value (pandas mask replaces only
-            # where cond is True) — a bare ~cond would turn null into null and
-            # fall into the replacement branch
-            inv = cond._wrap(~F.coalesce(cond._col, F.lit(False)))
-        elif isinstance(cond, DataFrame):
-            ce = self._aligned_exprs(cond)
-            inv_exprs = {
-                c: ~F.coalesce(ce[c], F.lit(False)) if c in ce else F.lit(True)
-                for c in self.columns
-            }
-            if isinstance(other, DataFrame):
-                oe = self._aligned_exprs(other)
-                other_exprs = {c: oe.get(c, F.lit(None)) for c in self.columns}
-            elif isinstance(other, Series):
-                other_exprs = {c: other._col for c in self.columns}
-            else:
-                other_exprs = {c: F.lit(other) for c in self.columns}
-            keep = [c for c in self._sdf.columns if c in self._index or (c.startswith("__") and c.endswith("__"))]
-            sel = [F.col(c) for c in keep] + [
-                F.when(inv_exprs[c], F.col(c)).otherwise(other_exprs[c]).alias(c)
-                for c in self.columns
-            ]
-            out = self._replace(self._sdf.select(*sel))
-            if _nonnull_scalar(other):  # same provenance rule as where()
-                out._nonnull_cols = frozenset(self._nonnull_cols) & set(
-                    out._sdf.columns
-                )
-            return out
-        else:
-            raise TypeError(f"unsupported cond type: {type(cond)!r}")
-        return self.where(inv, other, axis=axis)
 
     # ------------------------------------------------------------ sorting
     def sort_values(self, by, ascending=True, na_position: str = "last") -> "DataFrame":
@@ -941,17 +1030,20 @@ class DataFrame:
     def insert(self, loc: int, column: str, value) -> None:
         from legate_pandas_spark.frontend.series import Series
 
-        col = value._col if isinstance(value, Series) else F.lit(value)
+        if isinstance(value, Series):
+            base, col = self._read(value), value._col
+        else:
+            base, col = self, F.lit(value)
         order = self.columns
         order.insert(loc, column)
-        sdf = self._sdf.withColumn(column, col)
+        sdf = base._sdf.withColumn(column, col)
         keep = [c for c in sdf.columns if c not in order]
         self._sdf = sdf.select(*(keep + order))
         self._nonnull_cols = self._nonnull_cols - {column}
 
     def pop(self, column: str):
-        s = self[column]
-        self._sdf = self._sdf.drop(column)
+        s = self.copy()[column]  # reads the plan that still has the column
+        self._overwrite(self._sdf.drop(column))
         self._nonnull_cols = self._nonnull_cols - {column}
         return s
 
@@ -1174,139 +1266,33 @@ class DataFrame:
 
     append = concat_rows
 
-    # ------------------------------------------------------------ cumulative
-    def _cum(self, kind: str) -> "DataFrame":
-        """Global cumulative scan via the TWO-PHASE DISTRIBUTED design
-        (reference core/column.py:644-687): partition-local scan (window
-        PARTITIONED by the ingest-partition id) + a broadcast exclusive-scan
-        carry — one tiny phase-1 aggregate covers every column, and no
-        unpartitioned window appears anywhere (plan-audited in
-        tests/test_plans.py)."""
-        from legate_pandas_spark.frontend.scan import cum_columns
-
-        sdf = self._ordered_sdf()
-        targets = {
-            f"__cum_{c}__": F.col(c)
-            for c, t in self._sdf.dtypes
-            if c not in self._index and c != ROW_ORDER and is_numeric_spark_type(t)
-        }
-        if not targets:
-            return self._replace(sdf)
-        out_sdf = cum_columns(sdf, targets, kind)
-        sel = [
-            F.col(f"__cum_{c}__").alias(c) if f"__cum_{c}__" in targets else F.col(c)
-            for c in sdf.columns
-        ]
-        return self._replace(out_sdf.select(*sel))
-
-    def cumsum(self) -> "DataFrame":
-        return self._cum("sum")
-
-    def cummax(self) -> "DataFrame":
-        return self._cum("max")
-
-    def cummin(self) -> "DataFrame":
-        return self._cum("min")
-
-    def cumprod(self) -> "DataFrame":
-        # exp∘cumsum∘log magnitude with sign-parity and zero tracking (SURVEY
-        # §2.6 PROD scan without a UDAF), distributed via the two-phase carry
-        return self._cum("prod")
-
-    def interpolate(self, method: str = "linear") -> "DataFrame":
-        """Linear interpolation of nulls by row position for every numeric
-        column (pandas default: leading nulls stay null, trailing nulls carry
-        forward). ONE forward and ONE backward carry pass cover ALL columns
-        (scan.fill_columns batches specs into a single phase-1 aggregate each
-        way); positions come from partition-offset arithmetic. No
-        unpartitioned window."""
-        from legate_pandas_spark.frontend.indexing import _attach_positions
-        from legate_pandas_spark.frontend.scan import _seq, fill_columns
-
-        if method != "linear":
-            raise NotImplementedError("only method='linear'")
+    # ------------------------------------------------------------ ordered ops
+    def _scan(self, kernel, numeric: bool = True, finish=None, keys=()) -> "DataFrame":
+        """Run an ordered op's column kernel (``ordered.OrderedOps``) over
+        every value column — numeric ones unless ``numeric`` is False; not
+        the index, hidden columns or the group ``keys`` — and put each
+        result, shaped by ``finish(result, source)``, in its source column's
+        place."""
+        dtypes = dict(self._sdf.dtypes)
         targets = [
             c
-            for c, t in self._sdf.dtypes
-            if c not in self._index and c != ROW_ORDER and is_numeric_spark_type(t)
+            for c in self.columns
+            if c not in keys and (not numeric or is_numeric_spark_type(dtypes[c]))
         ]
         if not targets:
             return self._replace(self._ordered_sdf())
         uniq = next(_seq)
-        POS = f"__fip_{uniq}__"
-        fresh = ROW_ORDER not in self._sdf.columns
-        sdf, _ = _attach_positions(self._ordered_sdf(), fresh, pos_name=POS)
-        fwd, bwd, names = {}, {}, {}
-        for i, c in enumerate(targets):
-            d = F.col(c).cast("double")
-            pv, pp = f"__fipv_{uniq}_{i}__", f"__fipp_{uniq}_{i}__"
-            nv, np_ = f"__finv_{uniq}_{i}__", f"__finp_{uniq}_{i}__"
-            pos_if = F.when(d.isNotNull(), F.col(POS))
-            fwd[pv], fwd[pp] = d, pos_if
-            bwd[nv], bwd[np_] = d, pos_if
-            names[c] = (pv, pp, nv, np_)
-        sdf = fill_columns(sdf, fwd, forward=True)
-        sdf = fill_columns(sdf, bwd, forward=False)
-        pos = F.col(POS)
-        sel = []
-        for c in sdf.columns:
-            if c in names:
-                pv, pp, nv, np_ = names[c]
-                d = F.col(c).cast("double")
-                sel.append(
-                    F.when(d.isNotNull(), d)
-                    .when(F.col(pv).isNull(), F.lit(None).cast("double"))
-                    .when(F.col(nv).isNull(), F.col(pv))
-                    .otherwise(
-                        F.col(pv)
-                        + (F.col(nv) - F.col(pv))
-                        * (pos - F.col(pp))
-                        / (F.col(np_) - F.col(pp))
-                    )
-                    .alias(c)
-                )
-            elif c == POS or any(c in t for t in names.values()):
-                continue
-            else:
-                sel.append(F.col(c))
-        return self._replace(sdf.select(*sel))
-
-    def rank(self, method: str = "min", ascending: bool = True,
-             pct: bool = False, axis: int = 0) -> "DataFrame":
-        """Per-column global value rank (pandas DataFrame.rank, numeric
-        columns). Each column runs the two-phase range-bucketed rank
-        (scan.rank_column — splitter boundaries + per-bucket count carries;
-        no unpartitioned window); columns are independent rank problems, so
-        each pays its own bucket shuffle.
-
-        ``axis=1`` ranks within each row across the numeric columns — a pure
-        array expression (no shuffle, no window at all)."""
-        from legate_pandas_spark.frontend.scan import _seq, rank_column
-
-        if axis in (1, "columns"):
-            return self._rank_rowwise(method, ascending, pct)
-        sdf = self._ordered_sdf()
-        targets = [
-            c
-            for c, t in self._sdf.dtypes
-            if c not in self._index and c != ROW_ORDER and is_numeric_spark_type(t)
+        outs = {f"__v_{uniq}_{i}__": c for i, c in enumerate(targets)}
+        res = kernel(self._sdf, {o: _qcol(c) for o, c in outs.items()})
+        back = {c: F.col(o) for o, c in outs.items()}
+        sel = [
+            (finish(back[c], _qcol(c)) if finish else back[c]).alias(c)
+            if c in back
+            else _qcol(c)
+            for c in res.columns
+            if c not in outs
         ]
-        outs = {}
-        for c in targets:
-            out = f"__frank_{next(_seq)}_{c}__"
-            sdf = rank_column(
-                sdf, out, F.col(c), method=method, ascending=ascending, pct=pct
-            )
-            outs[c] = out
-        sel = []
-        for c in sdf.columns:
-            if c in outs:
-                sel.append(F.col(outs[c]).alias(c))
-            elif c in set(outs.values()):
-                continue
-            else:
-                sel.append(F.col(c))
-        return self._replace(sdf.select(*sel))
+        return self._replace(res.select(*sel))
 
     def _rank_rowwise(self, method: str, ascending: bool, pct: bool) -> "DataFrame":
         targets = [
@@ -1361,35 +1347,40 @@ class DataFrame:
         return self._replace(self._sdf.select(*sel))
 
     def idxmax(self):
-        """Per-column index label of the max (pandas idxmax, axis=0) — ONE
-        aggregate of max_by(label, col) pairs; a stored index supplies labels,
-        a virtual RangeIndex uses partition-offset positions. Returns a
-        pandas Series indexed by column names (driver-side action)."""
-        return self._idx_reduce(F.max_by)
+        """Per-column index label of the first maximum (pandas idxmax,
+        axis=0, skipna) — a pandas Series indexed by column name."""
+        return self._idx_reduce(descending=True)
 
     def idxmin(self):
-        return self._idx_reduce(F.min_by)
+        return self._idx_reduce(descending=False)
 
-    def _idx_reduce(self, picker):
+    def _idx_reduce(self, descending: bool):
+        """ONE aggregate of max_by(label, (value, -row order)) per numeric
+        column (min_by of (value, row order) for the minimum), so ties go to
+        the first row, like pandas; null values are skipped. A stored index
+        supplies labels, a virtual RangeIndex partition-offset positions."""
         import pandas as pd
 
         from legate_pandas_spark.frontend.indexing import _attach_positions
 
-        targets = [
-            c
-            for c, t in self._sdf.dtypes
-            if c not in self._index and c != ROW_ORDER and is_numeric_spark_type(t)
-        ]
+        dtypes = dict(self._sdf.dtypes)
+        targets = [c for c in self.columns if is_numeric_spark_type(dtypes[c])]
+        fresh = ROW_ORDER not in self._sdf.columns
+        sdf = self._ordered_sdf()
         if self._index:
-            sdf, label = self._sdf, F.col(self._index[0])
+            label = F.col(self._index[0])
         else:
-            fresh = ROW_ORDER not in self._sdf.columns
-            sdf, _ = _attach_positions(self._ordered_sdf(), fresh)
+            sdf, _ = _attach_positions(sdf, fresh)
             label = F.col("__pos__")
+        tie = -F.col(ROW_ORDER) if descending else F.col(ROW_ORDER)
+        pick = F.max_by if descending else F.min_by
         row = sdf.agg(
-            *[picker(label, F.col(c)).alias(c) for c in targets]
+            *[
+                pick(label, F.when(_qcol(c).isNotNull(), F.struct(_qcol(c), tie))).alias(c)
+                for c in targets
+            ]
         ).collect()[0]
-        return pd.Series({c: row[c] for c in targets})
+        return pd.Series({c: row[c] for c in targets}, dtype=object)
 
     def _map_numeric(self, fn) -> "DataFrame":
         """Apply a column expression to every numeric column (projection-only).
@@ -1466,151 +1457,6 @@ class DataFrame:
     @property
     def T(self) -> "DataFrame":
         return self.transpose()
-
-    def _shifted(self, periods: int, numeric_only: bool = True):
-        """(ordered sdf, {col: shifted-col-name}) for the target columns —
-        ONE global-position equi-join delivers all lags (scan.shift_columns:
-        partition-offset positions, hash join on the unique position key, no
-        window of any kind). ``numeric_only=False`` shifts every non-index
-        column (shift is type-agnostic); diff/pct_change keep numeric-only
-        (pandas raises on non-numeric there)."""
-        from legate_pandas_spark.frontend.scan import shift_columns
-
-        fresh = ROW_ORDER not in self._sdf.columns
-        sdf = self._ordered_sdf()
-        targets = {
-            f"__lag_{c}__": F.col(c)
-            for c, t in self._sdf.dtypes
-            if c not in self._index
-            and c != ROW_ORDER
-            and (not numeric_only or is_numeric_spark_type(t))
-        }
-        out_sdf = shift_columns(sdf, targets, periods, fresh) if targets else sdf
-        return sdf, out_sdf, {
-            c: f"__lag_{c}__" for c in self._sdf.columns if f"__lag_{c}__" in targets
-        }
-
-    @staticmethod
-    def _shift_fill_expr(col_name: str, col_type: str, fill, mark, lag,
-                         strict: bool = False):
-        """Typed fill for one shifted column: the fill literal is cast to the
-        column's type family instead of leaning on Spark's CASE-WHEN coercion
-        (which raises on numeric-fill-into-timestamp and silently promotes
-        string columns to hold '0.0'). A float fill into an integer column
-        widens the column to double (pandas upcast). Incompatible
-        fill/column pairings: frame-wide shift SKIPS the column (its vacated
-        slots stay null — pandas' mixed object column has no Spark
-        representation); Series-level shift (``strict``) raises TypeError."""
-        import datetime as _dt
-
-        int_types = ("tinyint", "smallint", "int", "bigint")
-        if isinstance(fill, bool):
-            fam = "bool"
-        elif isinstance(fill, (int, float)):
-            fam = "num"
-        elif isinstance(fill, str):
-            fam = "str"
-        elif isinstance(fill, (_dt.datetime, _dt.date)):
-            fam = "ts"
-        else:
-            fam = "other"
-        target = None
-        if col_type == "boolean":
-            ok = fam == "bool"
-        elif is_numeric_spark_type(col_type):
-            ok = fam == "num"
-            if ok and isinstance(fill, float) and col_type in int_types:
-                target = "double"
-        elif col_type in ("string",):
-            ok = fam == "str"
-        elif col_type.startswith("timestamp") or col_type == "date":
-            ok = fam == "ts"
-        else:
-            ok = False
-        if not ok:
-            if strict:
-                raise TypeError(
-                    f"shift: fill_value {fill!r} is incompatible with column "
-                    f"{col_name!r} of type {col_type} (pandas would produce a "
-                    "mixed object column, which has no Spark representation)"
-                )
-            return F.col(lag)  # frame-wide fill: skip this column, nulls stay
-        target = target or col_type
-        return F.when(
-            F.col(mark).isNull(), F.lit(fill).cast(target)
-        ).otherwise(F.col(lag).cast(target))
-
-    def shift(self, periods: int = 1, fill_value=None) -> "DataFrame":
-        """Shift EVERY column by ``periods`` rows (pandas shift — type
-        agnostic: strings/dates shift alongside numerics, keeping rows
-        aligned). ``fill_value`` fills only the VACATED slots — the donor
-        row-order key doubles as the vacancy marker, so genuinely shifted-in
-        nulls stay null — and is cast per column (see _shift_fill_expr)."""
-        if fill_value is not None:
-            from legate_pandas_spark.frontend.scan import _seq, shift_columns
-
-            fresh = ROW_ORDER not in self._sdf.columns
-            sdf = self._ordered_sdf()
-            mark = f"__shmark_{next(_seq)}__"
-            targets = {
-                f"__lag_{c}__": F.col(c)
-                for c in self._sdf.columns
-                if c not in self._index and c != ROW_ORDER
-            }
-            targets[mark] = F.lit(True)
-            out_sdf = shift_columns(sdf, targets, periods, fresh)
-            dtypes = dict(self._sdf.dtypes)
-            sel = []
-            for c in sdf.columns:
-                lag = f"__lag_{c}__"
-                if lag in targets:
-                    sel.append(
-                        self._shift_fill_expr(
-                            c, dtypes[c], fill_value, mark, lag
-                        ).alias(c)
-                    )
-                else:
-                    sel.append(F.col(c))
-            return self._replace(out_sdf.select(*sel))
-        sdf, out_sdf, lagged = self._shifted(periods, numeric_only=False)
-        sel = [
-            F.col(lagged[c]).alias(c) if c in lagged else F.col(c)
-            for c in sdf.columns
-        ]
-        return self._replace(out_sdf.select(*sel))
-
-    def diff(self, periods: int = 1) -> "DataFrame":
-        """Row difference vs ``periods`` rows back (pandas diff)."""
-        sdf, out_sdf, lagged = self._shifted(periods)
-        sel = [
-            (F.col(c) - F.col(lagged[c])).alias(c) if c in lagged else F.col(c)
-            for c in sdf.columns
-        ]
-        return self._replace(out_sdf.select(*sel))
-
-    def pct_change(self, periods: int = 1) -> "DataFrame":
-        """Fractional change vs ``periods`` rows back for every numeric column
-        (global-position equi-join — partition-parallel, window-free; the
-        keyed path is groupby(...).pct_change())."""
-        sdf, out_sdf, lagged = self._shifted(periods)
-        sel = []
-        for c in sdf.columns:
-            if c in lagged:
-                prev = F.col(lagged[c]).cast("double")
-                sel.append(((F.col(c).cast("double") - prev) / prev).alias(c))
-            else:
-                sel.append(F.col(c))
-        return self._replace(out_sdf.select(*sel))
-
-    def ewm(self, alpha: float = None, com=None, span=None, halflife=None) -> "Ewm":
-        """Exponentially weighted accessor (alpha/com/span/halflife, pandas
-        parameter resolution). The recurrence is linear, so it distributes
-        exactly: partition-local pandas ewm + geometric-decay carries
-        (scan.ewm_columns) — two Arrow passes, both partition-parallel;
-        no single sequential group."""
-        from legate_pandas_spark.frontend.dtypes import resolve_ewm_alpha
-
-        return Ewm(self, resolve_ewm_alpha(alpha, com, span, halflife))
 
     def quantile(self, q=0.5):
         """Exact interpolated per-column quantile → pandas Series (scalar q)
@@ -1855,71 +1701,50 @@ class DataFrame:
         return self._reduce_frame(F.countDistinct, numeric_only=False)
 
     def skew(self):
-        """Sample-adjusted Fisher-Pearson skewness per numeric column — the
-        pandas statistic, NOT Spark's population `F.skewness`: pandas applies
-        the g1·sqrt(n(n-1))/(n-2) correction. Computed from one aggregate pass
-        of raw moments (count/mean/m2/m3 are algebraic, partial-aggregatable)."""
-        import math
-
-        import pandas as pd
-
-        stats = self._moment_stats()
-        out = {}
-        for c, (n, m2, m3, _) in stats.items():
-            if n < 3 or m2 == 0:
-                out[c] = float("nan")
-                continue
-            g1 = m3 / m2**1.5
-            out[c] = g1 * math.sqrt(n * (n - 1)) / (n - 2)
-        return pd.Series(out)
+        """Bias-corrected sample skewness per numeric column (pandas skew):
+        Spark's one-pass population g1 = m3/m2^1.5 (numerically stable
+        central-moment updates, never raw power sums) times the exact factor
+        sqrt(n(n-1))/(n-2)."""
+        return self._moment(
+            F.skewness, 3, lambda g, n: g * math.sqrt(n * (n - 1)) / (n - 2)
+        )
 
     def kurt(self):
-        """Sample-adjusted excess kurtosis (pandas G2), from the same one-pass
-        raw-moment aggregate as skew."""
-        import pandas as pd
-
-        stats = self._moment_stats()
-        out = {}
-        for c, (n, m2, _, m4) in stats.items():
-            if n < 4 or m2 == 0:
-                out[c] = float("nan")
-                continue
-            g2 = m4 / m2**2 - 3.0
-            out[c] = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
-        return pd.Series(out)
+        """Bias-corrected excess kurtosis (pandas kurt): Spark's population
+        excess g2 = m4/m2² − 3 through the exact G2 identity
+        ((n+1)·g2 + 6)·(n−1)/((n−2)(n−3))."""
+        return self._moment(
+            F.kurtosis, 4, lambda g, n: ((n + 1) * g + 6.0) * (n - 1) / ((n - 2) * (n - 3))
+        )
 
     kurtosis = kurt
 
-    def _moment_stats(self) -> dict:
-        """One aggregate pass → {col: (n, m2, m3, m4)} central moments
-        (biased, /n), assembled from power sums so everything partial-aggregates."""
-        aggs, names = [], []
-        for c, t in self._sdf.dtypes:
-            if c in self._index or c == ROW_ORDER or not is_numeric_spark_type(t):
-                continue
-            x = F.col(c).cast("double")
-            aggs += [
-                F.count(x).alias(f"{c}__n"),
-                F.sum(x).alias(f"{c}__s1"),
-                F.sum(x * x).alias(f"{c}__s2"),
-                F.sum(x * x * x).alias(f"{c}__s3"),
-                F.sum(x * x * x * x).alias(f"{c}__s4"),
-            ]
-            names.append(c)
+    def _moment(self, stat, min_n: int, correct):
+        """One aggregate pass of ``stat``, count and variance per numeric
+        column, bias-corrected by ``correct(g, n)``: NaN below ``min_n``
+        observations, 0.0 for a constant column (Spark's 0/0 is null), like
+        pandas."""
+        import pandas as pd
+
+        dtypes = dict(self._sdf.dtypes)
+        cols = [c for c in self.columns if is_numeric_spark_type(dtypes[c])]
+        if not cols:
+            return pd.Series(dtype="float64")
+        aggs = []
+        for i, c in enumerate(cols):
+            x = _qcol(c)
+            aggs += [stat(x).alias(f"g{i}"), F.count(x).alias(f"n{i}"), F.var_samp(x).alias(f"v{i}")]
         row = self._sdf.agg(*aggs).collect()[0]
         out = {}
-        for c in names:
-            n = row[f"{c}__n"]
-            if not n:
-                out[c] = (0, 0.0, 0.0, 0.0)
-                continue
-            s1, s2, s3, s4 = (float(row[f"{c}__s{i}"]) for i in (1, 2, 3, 4))
-            mu = s1 / n
-            m2 = s2 / n - mu**2
-            m3 = s3 / n - 3 * mu * s2 / n + 2 * mu**3
-            m4 = s4 / n - 4 * mu * s3 / n + 6 * mu**2 * s2 / n - 3 * mu**4
-            out[c] = (n, m2, m3, m4)
-        return out
+        for i, c in enumerate(cols):
+            g, n, v = row[f"g{i}"], row[f"n{i}"], row[f"v{i}"]
+            if n < min_n:
+                out[c] = float("nan")
+            elif g is None:
+                out[c] = 0.0 if (v or 0.0) == 0.0 else float("nan")
+            else:
+                out[c] = correct(g, n)
+        return pd.Series(out, dtype="float64")
 
     def corr(self, method: str = "pearson"):
         """Pairwise Pearson correlation matrix of numeric columns → pandas
@@ -1951,35 +1776,6 @@ class DataFrame:
                 mat.loc[a, b] = v
                 mat.loc[b, a] = v
         return mat
-
-    def ffill(self) -> "DataFrame":
-        """Forward-fill nulls in global row order (pandas ffill) — two-phase
-        distributed: partition-local directional fill + the nearest preceding
-        partition's edge non-null value as a broadcast carry (reference scan
-        design, core/column.py:644-687). The keyed path is
-        ``groupby(keys).ffill()``."""
-        return self._fill_directional(forward=True)
-
-    def bfill(self) -> "DataFrame":
-        return self._fill_directional(forward=False)
-
-    def _fill_directional(self, forward: bool) -> "DataFrame":
-        from legate_pandas_spark.frontend.scan import fill_columns
-
-        sdf = self._ordered_sdf()
-        targets = {
-            f"__fill_{c}__": F.col(c)
-            for c in sdf.columns
-            if c not in self._index and not (c.startswith("__") and c.endswith("__"))
-        }
-        if not targets:
-            return self._replace(sdf)
-        out_sdf = fill_columns(sdf, targets, forward=forward)
-        sel = [
-            F.col(f"__fill_{c}__").alias(c) if f"__fill_{c}__" in targets else F.col(c)
-            for c in sdf.columns
-        ]
-        return self._replace(out_sdf.select(*sel))
 
     def take(self, positions) -> "DataFrame":
         """Rows at the given positions in row order (pandas take) — the same
@@ -2165,7 +1961,7 @@ class DataFrame:
             (F.coalesce(oe[c], F.col(c)) if c in oe else F.col(c)).alias(c)
             for c in self.columns
         ]
-        self._sdf = self._sdf.select(*sel)
+        self._overwrite(self._sdf.select(*sel))
         self._nonnull_cols = frozenset()
 
     def align(self, other: "DataFrame", join: str = "outer"):
@@ -2545,7 +2341,7 @@ class DataFrame:
         is out of scope, same contract as rolling corr/cov."""
         from legate_pandas_spark.frontend.series import Series
 
-        if not isinstance(other, Series) or other._frame is not self:
+        if not isinstance(other, Series):
             raise ValueError("corrwith requires a Series of the same frame")
         import pandas as pd
 
@@ -2556,7 +2352,7 @@ class DataFrame:
                 continue
             aggs.append(F.corr(F.col(c), other._col).alias(c))
             names.append(c)
-        row = self._sdf.agg(*aggs).collect()[0]
+        row = self._resolve(other._frame)._sdf.agg(*aggs).collect()[0]
         return pd.Series({c: row[c] for c in names})
 
     def at_time(self, time_str: str) -> "DataFrame":
@@ -2688,12 +2484,6 @@ class DataFrame:
     def notnull(self) -> "DataFrame":
         return self.notna()
 
-    def pad(self) -> "DataFrame":
-        return self.ffill()
-
-    def backfill(self) -> "DataFrame":
-        return self.bfill()
-
     def product(self):
         return self.prod()
 
@@ -2710,17 +2500,6 @@ class DataFrame:
         """Time-bucket resampling (pandas resample → groupBy time window).
         freq: pandas-style offset ('1H', '15min', '1D')."""
         return Resampler(self, freq, on)
-
-    def rolling(self, window: int, min_periods: int | None = None):
-        """Rolling window object over the frame's row order (pandas
-        df.rolling(n)); ``groupby(...).rolling(n)`` is the same object per
-        group. min_periods follows pandas: defaults to the window size
-        (leading rows yield null); pass 1 for partial windows."""
-        return Rolling(self, window, min_periods)
-
-    def expanding(self, min_periods: int = 1):
-        """Expanding (cumulative) window object (pandas df.expanding())."""
-        return Expanding(self, min_periods)
 
     def replace(self, to_replace, value=None) -> "DataFrame":
         """Value replacement (scalar→scalar or dict) across data columns."""
@@ -3027,15 +2806,37 @@ class DataFrame:
 
     # ------------------------------------------------------------ equality
     def equals(self, other: "DataFrame") -> bool:
-        """Exact equality incl. schema (reference EQUALS task tree,
-        core/table.py:963-981) — symmetric exceptAll emptiness check."""
-        if [c for c in self.columns] != [c for c in other.columns]:
+        """Null-safe equality of every cell in row order, with matching
+        columns and dtypes (pandas equals; reference EQUALS,
+        core/table.py:963-981). Frames of one plan are equal outright;
+        others are zipped by position (partition-offset arithmetic, no
+        global sort) and compared in one aggregate."""
+        from legate_pandas_spark.frontend.indexing import _attach_positions, _row_count
+
+        cols = self.columns
+        if cols != other.columns:
             return False
-        a = self._sdf.select(*self.columns)
-        b = other._sdf.select(*other.columns)
-        if dict(a.dtypes) != dict(b.dtypes):
+        if other._sdf is self._sdf:
+            return True
+
+        def positioned(df, tag):
+            fresh = ROW_ORDER not in df._sdf.columns
+            sdf = df._ordered_sdf().select(
+                F.col(ROW_ORDER), *[_qcol(c).alias(f"__{tag}{i}__") for i, c in enumerate(cols)]
+            )
+            with_pos, offsets = _attach_positions(sdf, fresh)
+            return with_pos.drop(ROW_ORDER), _row_count(offsets)
+
+        (a, na), (b, nb) = positioned(self, "a"), positioned(other, "b")
+        if na != nb or [t for _, t in a.dtypes] != [t for _, t in b.dtypes]:
             return False
-        return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+        if not cols:
+            return True
+        same = F.lit(True)
+        for i in range(len(cols)):
+            same = same & F.col(f"__a{i}__").eqNullSafe(F.col(f"__b{i}__"))
+        row = a.join(b, "__pos__", "inner").agg(F.min(same.cast("int")).alias("eq")).collect()[0]
+        return row["eq"] != 0  # vacuously true on empty
 
     # ------------------------------------------------------------ export
     def persist(self, blocking: bool = False) -> "DataFrame":
@@ -3301,111 +3102,6 @@ class Resampler:
 
     def min(self):
         return self._agg(F.min)
-
-
-def _per_value_column(df: DataFrame, keys: list, kernel) -> DataFrame:
-    """Run a column-appending scan kernel over every numeric value column of
-    ``df`` (not the index, the group ``keys`` or the row order) and put each
-    output in its source column's place. ``kernel(sdf, outs)`` appends one
-    column per ``outs`` entry (out name -> source column name)."""
-    sdf = df._sdf
-    dtypes = dict(sdf.dtypes)
-    value_cols = [
-        c
-        for c in sdf.columns
-        if c != ROW_ORDER
-        and c not in df._index
-        and c not in keys
-        and is_numeric_spark_type(dtypes[c])
-    ]
-    if not value_cols:
-        return DataFrame(df._ordered_sdf(), df._index)
-    uniq = next(_seq)
-    outs = {f"__win_{uniq}_{i}__": c for i, c in enumerate(value_cols)}
-    res = kernel(sdf, outs)
-    back = {c: o for o, c in outs.items()}
-    sel = [
-        F.col(back[c]).alias(c) if c in back else _qcol(c)
-        for c in res.columns
-        if c not in outs
-    ]
-    return DataFrame(res.select(*sel), df._index)
-
-
-class Ewm:
-    """Exponentially weighted window over every numeric value column —
-    EXACT two-phase distributed recurrence (``scan.ewm_columns``), per group
-    of ``keys`` (``groupby(...).ewm``: key columns are not values) or over
-    the whole frame."""
-
-    def __init__(self, df: DataFrame, alpha: float, keys: list = ()):
-        self._df = df
-        self._alpha = alpha
-        self._keys = list(keys)
-
-    def mean(self) -> DataFrame:
-        return self._stat("mean")
-
-    def var(self) -> DataFrame:
-        """Exact distributed ewm variance (pandas bias=False)."""
-        return self._stat("var")
-
-    def std(self) -> DataFrame:
-        return self._stat("std")
-
-    def _stat(self, stat: str) -> DataFrame:
-        return _per_value_column(
-            self._df,
-            self._keys,
-            lambda sdf, outs: ewm_columns(sdf, self._keys, outs, self._alpha, stat),
-        )
-
-
-class Rolling(WindowStats):
-    """pandas rolling window of ``window`` rows (``Expanding``: every row so
-    far) over every numeric value column, per group of ``keys``
-    (``groupby(...).rolling``: key columns are not values) or over the whole
-    frame in row order — ``scan.window_columns``. ``min_periods`` defaults
-    to the window size."""
-
-    def __init__(
-        self, df: DataFrame, window, min_periods: int | None = None, keys: list = ()
-    ):
-        self._df = df
-        self._window = window
-        self._mp = window if min_periods is None else min_periods
-        self._keys = list(keys)
-
-    def _stat(self, stat: str, arg=None) -> DataFrame:
-        def kernel(sdf, outs):
-            cols = {o: _qcol(c) for o, c in outs.items()}
-            return window_columns(sdf, self._keys, cols, self._window, self._mp, stat, arg)
-
-        return _per_value_column(self._df, self._keys, kernel)
-
-    def corr(self, a: str, b: str) -> DataFrame:
-        """Pearson correlation of columns ``a`` and ``b`` over the window,
-        appended as ``<a>_<b>_corr`` (pairwise-complete rows; min_periods
-        counts pairwise observations)."""
-        return self._pairwise(a, b, "corr")
-
-    def cov(self, a: str, b: str) -> DataFrame:
-        """Sample covariance (ddof=1), appended as ``<a>_<b>_cov``."""
-        return self._pairwise(a, b, "cov")
-
-    def _pairwise(self, a: str, b: str, stat: str) -> DataFrame:
-        cols = {f"{a}_{b}_{stat}": (_qcol(a), _qcol(b))}
-        out = window_columns(self._df._sdf, self._keys, cols, self._window, self._mp, stat)
-        return DataFrame(out, self._df._index)
-
-
-class Expanding(Rolling):
-    """pandas expanding window: a rolling window over every preceding row
-    (without keys: running partials plus the carry of all preceding
-    partitions, not an unbounded global window)."""
-
-    def __init__(self, df: DataFrame, min_periods: int = 1, keys: list = ()):
-        super().__init__(df, None, min_periods, keys)
 
 
 def concat(objs, axis: int = 0) -> DataFrame:

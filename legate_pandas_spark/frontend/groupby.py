@@ -13,6 +13,8 @@ strategies (hash shuffle, core/groupby.py:201-231; radix tree, :159-199).
 
 from __future__ import annotations
 
+import functools
+
 import pyspark.sql.functions as F
 
 from legate_pandas_spark.frontend.dtypes import is_numeric_spark_type
@@ -57,6 +59,11 @@ def _with_identity(op, expr):
 _NUMERIC_ONLY = {"sum", "mean", "avg", "var", "std", "prod", "product"}
 
 
+def _notnull(keys) -> "F.Column":
+    """True on rows where no group key is null."""
+    return functools.reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
+
+
 class GroupBy:
     def __init__(
         self,
@@ -73,19 +80,26 @@ class GroupBy:
         # (reference cudf null_policy::EXCLUDE, src/groupby/groupby_reduce_gpu.cc:76-77);
         # Spark's groupBy would emit a null group — filter first.
         if dropna:
-            cond = None
-            for k in keys:
-                c = F.col(k).isNotNull()
-                cond = c if cond is None else (cond & c)
-            if cond is not None:
-                from legate_pandas_spark.frontend.frame import DataFrame
+            from legate_pandas_spark.frontend.frame import DataFrame
 
-                df = DataFrame(df._sdf.filter(cond), df._index)
+            df = DataFrame(df._sdf.filter(_notnull(keys)), df._index)
         self._df = df
         self._keys = keys
         self._as_index = as_index
         self._sort = sort
         self._dropna = dropna
+
+    def _aligned(self, expr, name: str):
+        """``expr`` as a Series on the caller's frame, null where a group key
+        is null (pandas' excluded groups). The frame is derived, pinned to
+        its row order: the window shuffles, so exports and positional ops
+        restore the order from the pinned key."""
+        from legate_pandas_spark.frontend.frame import row_order
+        from legate_pandas_spark.frontend.series import Series
+
+        return Series(
+            self._src._with_step(row_order), F.when(_notnull(self._keys), expr), name
+        )
 
     def _finish(self, sdf):
         from legate_pandas_spark.frontend.frame import DataFrame
@@ -267,18 +281,10 @@ class GroupBy:
         from pyspark.sql.window import Window
 
         from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.series import Series
 
-        self._src._sdf = self._src._ordered_sdf()
         w = Window.partitionBy(*self._keys).orderBy(F.asc(ROW_ORDER))
         expr = (F.row_number().over(w) - 1).cast("long")
-        notnull = None
-        for k in self._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        if notnull is not None:
-            expr = F.when(notnull, expr)
-        return Series(self._src, expr, "cumcount")
+        return self._aligned(expr, "cumcount")
 
     def nth(self, n: int) -> "DataFrame":
         """The n-th row of each group in row order (pandas groupby.nth;
@@ -338,14 +344,14 @@ class GroupBy:
     def rolling(self, window: int, min_periods: int | None = None):
         """pandas groupby.rolling: the frame-level Rolling object over a
         window PARTITIONED by the group keys — parallel per group."""
-        from legate_pandas_spark.frontend.frame import Rolling
+        from legate_pandas_spark.frontend.ordered import Rolling
 
         return Rolling(self._df, window, min_periods, self._keys)
 
     def expanding(self, min_periods: int = 1):
-        from legate_pandas_spark.frontend.frame import Expanding
+        from legate_pandas_spark.frontend.ordered import Rolling
 
-        return Expanding(self._df, min_periods, self._keys)
+        return Rolling(self._df, None, min_periods, self._keys)
 
     def _over(self, fn, numeric: bool = False):
         from pyspark.sql.window import Window
@@ -480,10 +486,7 @@ class GroupBy:
         # dropped, they get null output — so window over the pre-dropna frame
         # (_src) and mask the expression on key-notnull
         sdf = self._src._ordered_sdf()
-        notnull = None
-        for k in self._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
+        notnull = _notnull(self._keys)
         dtypes = dict(sdf.dtypes)
         sel = []
         for c in sdf.columns:
@@ -495,9 +498,7 @@ class GroupBy:
                 continue
             else:
                 expr = _with_identity(op, fn(F.col(c)).over(w))
-                if notnull is not None:
-                    expr = F.when(notnull, expr)
-                sel.append(expr.alias(c))
+                sel.append(F.when(notnull, expr).alias(c))
         return DataFrame(sdf.select(*sel), self._src._index)
 
     def _transform_callable(self, func) -> "DataFrame":
@@ -524,11 +525,7 @@ class GroupBy:
             for c in self._src.columns
             if c not in self._keys and is_numeric_spark_type(dtypes[c])
         ]
-        notnull = None
-        for k in self._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        filtered = src_sdf.filter(notnull) if notnull is not None else src_sdf
+        filtered = src_sdf.filter(_notnull(self._keys))
 
         def _col_result(series: pd.Series, pdf_len: int):
             r = func(series)
@@ -691,7 +688,7 @@ class GroupBy:
         still parallelizes (the reference has no ewm; nearest is the two-phase
         scan machinery, core/column.py:644-687)."""
         from legate_pandas_spark.frontend.dtypes import resolve_ewm_alpha
-        from legate_pandas_spark.frontend.frame import Ewm
+        from legate_pandas_spark.frontend.ordered import Ewm
 
         return Ewm(
             self._df, resolve_ewm_alpha(alpha, com, span, halflife), self._keys
@@ -717,22 +714,11 @@ class SeriesGroupBy:
     def transform(self, op: str):
         from pyspark.sql.window import Window
 
-        from legate_pandas_spark.frontend.series import Series
-
         gb = self._gb
         fn = _AGG_FNS[op]
-        # the window shuffles — pin the caller's row order first so exports
-        # and positional ops restore it
-        gb._src._sdf = gb._src._ordered_sdf()
         w = Window.partitionBy(*gb._keys)
         expr = _with_identity(op, fn(F.col(self._col)).over(w))
-        notnull = None
-        for k in gb._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        if notnull is not None:
-            expr = F.when(notnull, expr)
-        return Series(gb._src, expr, self._col)
+        return gb._aligned(expr, self._col)
 
     def agg(self, op: str):
         return self._gb.agg({self._col: op})
@@ -764,10 +750,7 @@ class SeriesGroupBy:
         """Rank within each group (pandas groupby.rank) — partitioned window."""
         from pyspark.sql.window import Window
 
-        from legate_pandas_spark.frontend.series import Series
-
         gb = self._gb
-        gb._src._sdf = gb._src._ordered_sdf()
         # nulls LAST in rank order (Spark asc defaults to nulls-first, which
         # would inflate every real rank by the null count; pandas excludes them)
         order = (
@@ -787,58 +770,25 @@ class SeriesGroupBy:
         else:
             expr = fns[method]().over(w).cast("double")
         expr = F.when(F.col(self._col).isNotNull(), expr)
-        notnull = None
-        for k in gb._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        if notnull is not None:
-            expr = F.when(notnull, expr)
-        return Series(gb._src, expr, self._col)
+        return gb._aligned(expr, self._col)
 
     def cumsum(self):
         """Per-group running total aligned to the caller's frame."""
-        from pyspark.sql.window import Window
-
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.series import Series
-
-        gb = self._gb
-        gb._src._sdf = gb._src._ordered_sdf()
-        w = (
-            Window.partitionBy(*gb._keys)
-            .orderBy(F.asc(ROW_ORDER))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        expr = F.sum(F.col(self._col)).over(w)
-        notnull = None
-        for k in gb._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        if notnull is not None:
-            expr = F.when(notnull, expr)
-        return Series(gb._src, expr, self._col)
+        return self._cum(F.sum)
 
     def _cum(self, fn):
         from pyspark.sql.window import Window
 
         from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.series import Series
 
         gb = self._gb
-        gb._src._sdf = gb._src._ordered_sdf()
         w = (
             Window.partitionBy(*gb._keys)
             .orderBy(F.asc(ROW_ORDER))
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         expr = fn(F.col(self._col)).over(w)
-        notnull = None
-        for k in gb._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        if notnull is not None:
-            expr = F.when(notnull, expr)
-        return Series(gb._src, F.when(F.col(self._col).isNotNull(), expr), self._col)
+        return gb._aligned(F.when(F.col(self._col).isNotNull(), expr), self._col)
 
     def cummax(self):
         """Per-group running max (pandas groupby.cummax; group-key-partitioned
@@ -854,19 +804,11 @@ class SeriesGroupBy:
         from pyspark.sql.window import Window
 
         from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.series import Series
 
         gb = self._gb
-        gb._src._sdf = gb._src._ordered_sdf()
         w = Window.partitionBy(*gb._keys).orderBy(F.asc(ROW_ORDER))
         expr = F.col(self._col) - F.lag(F.col(self._col), periods).over(w)
-        notnull = None
-        for k in gb._keys:
-            c = F.col(k).isNotNull()
-            notnull = c if notnull is None else (notnull & c)
-        if notnull is not None:
-            expr = F.when(notnull, expr)
-        return Series(gb._src, expr, self._col)
+        return gb._aligned(expr, self._col)
 
     def idxmax(self):
         """Per-group index label (stored index) or global position (virtual

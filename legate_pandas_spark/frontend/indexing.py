@@ -252,13 +252,17 @@ class LocIndexer:
         if not (isinstance(key, tuple) and len(key) == 2):
             raise NotImplementedError("loc assignment requires df.loc[rows, column] = value")
         rows, col = key
+        frame = self._df
         if isinstance(rows, Series):
-            cond = rows._col
+            frame, cond = frame._read(rows), rows._col
         else:  # scalar index label
             cond = F.col(self._index_col()) == F.lit(rows)
-        val = value._col if isinstance(value, Series) else F.lit(value)
+        if isinstance(value, Series):
+            frame, val = frame._read(value), value._col
+        else:
+            val = F.lit(value)
         base = F.col(col) if col in self._df._sdf.columns else F.lit(None)
-        self._df._sdf = self._df._sdf.withColumn(col, F.when(cond, val).otherwise(base))
+        self._df._overwrite(frame._sdf.withColumn(col, F.when(cond, val).otherwise(base)))
         self._df._nonnull_cols = self._df._nonnull_cols - {col}
 
 
@@ -371,16 +375,20 @@ class AtIndexer:
             with_pos, offsets = _attach_positions(sdf, fresh)
             if row < 0:
                 row = _row_count(offsets) + row
-            df._sdf = with_pos.withColumn(
-                name, F.when(F.col("__pos__") == row, F.lit(value)).otherwise(F.col(name))
-            ).drop("__pos__")
+            df._overwrite(
+                with_pos.withColumn(
+                    name, F.when(F.col("__pos__") == row, F.lit(value)).otherwise(F.col(name))
+                ).drop("__pos__")
+            )
             df._nonnull_cols = df._nonnull_cols - {name}
         else:
             name = col
             idx = df._index[0] if df._index else None
             if idx is None:
                 raise ValueError("at requires a stored index (set_index first)")
-            df._sdf = df._sdf.withColumn(
-                name, F.when(F.col(idx) == F.lit(row), F.lit(value)).otherwise(F.col(name))
+            df._overwrite(
+                df._sdf.withColumn(
+                    name, F.when(F.col(idx) == F.lit(row), F.lit(value)).otherwise(F.col(name))
+                )
             )
             df._nonnull_cols = df._nonnull_cols - {name}

@@ -130,6 +130,7 @@ def cum_columns(sdf, cols: dict, kind: str):
     the running value skips them but the null cell stays null). One phase-1
     aggregate covers every column.
     """
+    sdf, _ = _ordered(sdf)
     uniq = next(_seq)
     specs, parts = {}, {}
     for i, (out, c) in enumerate(cols.items()):
@@ -196,6 +197,7 @@ def fill_columns(sdf, cols: dict, forward: bool = True):
     nearest preceding/following partition's edge non-null value as carry)."""
     from legate_pandas_spark.frontend.frame import ROW_ORDER
 
+    sdf, _ = _ordered(sdf)
     uniq = next(_seq)
     specs = {}
     keys = {}
@@ -218,6 +220,38 @@ def fill_columns(sdf, cols: dict, forward: bool = True):
         for out, (c, k) in keys.items()
     ]
     return out_sdf.select(*sel, *exprs).drop(*[k for _, k in keys.values()])
+
+
+def interpolate_columns(sdf, cols: dict):
+    """Append linear interpolations of nulls by row position (pandas
+    default: values equally spaced, leading nulls stay null, trailing nulls
+    carry the last valid value forward), as doubles.
+
+    Positions come from partition-offset arithmetic (``_attach_positions``);
+    ONE forward and ONE backward carry pass (``fill_columns``) deliver every
+    column's bracketing non-null (value, position) pairs, and the blend is a
+    pure expression. No unpartitioned window."""
+    sdf, fresh = _ordered(sdf)
+    uniq = next(_seq)
+    pos = f"__ip_{uniq}__"
+    sdf, _ = _attach_positions(sdf, fresh, pos_name=pos)
+    fwd, bwd, exprs = {}, {}, []
+    for i, (out, c) in enumerate(cols.items()):
+        d = c.cast("double")
+        names = [f"__i{t}_{uniq}_{i}__" for t in ("pv", "pp", "nv", "np")]
+        at = F.when(d.isNotNull(), F.col(pos))
+        fwd[names[0]], fwd[names[1]] = d, at
+        bwd[names[2]], bwd[names[3]] = d, at
+        pv, pp, nv, np_ = map(F.col, names)
+        exprs.append(
+            F.when(d.isNotNull(), d)
+            .when(pv.isNull(), F.lit(None).cast("double"))
+            .when(nv.isNull(), pv)
+            .otherwise(pv + (nv - pv) * (F.col(pos) - pp) / (np_ - pp))
+            .alias(out)
+        )
+    sdf = fill_columns(fill_columns(sdf, fwd, forward=True), bwd, forward=False)
+    return sdf.select("*", *exprs).drop(pos, *fwd, *bwd)
 
 
 def _rank_boundaries(sdf, c, n_bounds: int = 63):
@@ -280,7 +314,7 @@ def rank_column(
     """
     from legate_pandas_spark.frontend.frame import ROW_ORDER
 
-    sdf = _stabilize(sdf)
+    sdf = _stabilize(_ordered(sdf)[0])
     bounds = _rank_boundaries(sdf, c)
     bucket = bucket_of(bounds, c)
     uniq = next(_seq)
@@ -499,6 +533,22 @@ def _ordered(sdf):
     return sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id()), True
 
 
+def _dotless(sdf, keys):
+    """(``sdf`` with each dotted column renamed to a positional safe name,
+    ``keys`` renamed alike, a function renaming an output back). A pandas
+    stage (``applyInPandas``) resolves every input column with ``df[name]``,
+    which reads ``a.b`` as field ``b`` of a struct ``a``."""
+    to = {c: f"__py_{i}__" for i, c in enumerate(sdf.columns) if "." in c}
+    if not to:
+        return sdf, list(keys), lambda out: out
+    back = {v: c for c, v in to.items()}
+    return (
+        sdf.toDF(*[to.get(c, c) for c in sdf.columns]),
+        [to.get(k, k) for k in keys],
+        lambda out: out.toDF(*[back.get(c, c) for c in out.columns]),
+    )
+
+
 def _window_stat(stat: str, src, arg, run, comoment):
     """(min_periods gate count, value) of one window statistic, written once
     over two primitives of the row's frame: ``run(partial, combine)``, the
@@ -600,7 +650,7 @@ def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: 
         func, raw = arg
         uniq = next(_seq)
         srcs = {f"__was_{uniq}_{i}__": c.cast("double") for i, c in enumerate(cols.values())}
-        work = sdf.select("*", *[c.alias(s) for s, c in srcs.items()])
+        work, by, restore = _dotless(sdf.select("*", *[c.alias(s) for s, c in srcs.items()]), by)
         schema = T.StructType(
             work.schema.fields + [T.StructField(o, T.DoubleType()) for o in cols]
         )
@@ -618,7 +668,7 @@ def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: 
                 pdf[o] = frame.apply(func, raw=raw)
             return pdf
 
-        out = work.groupBy(*by).applyInPandas(fn, schema).drop(*srcs)
+        out = restore(work.groupBy(*by).applyInPandas(fn, schema)).drop(*srcs)
     else:
         carries = {}
         if w is not None:
@@ -651,48 +701,6 @@ def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: 
     if helpers:  # the ghosts gave their left context
         out = out.filter(~F.col(helpers[2])).drop(*helpers)
     return out
-
-
-class WindowStats:
-    """The pandas statistics of a rolling or expanding window object — one
-    surface for the frame (``frame.Rolling``/``Expanding``) and Series
-    (``series.SeriesWindow``) accessors; each runs ``window_columns``
-    through its own ``_stat(stat, arg)``."""
-
-    def sum(self):
-        return self._stat("sum")
-
-    def mean(self):
-        return self._stat("mean")
-
-    def max(self):
-        return self._stat("max")
-
-    def min(self):
-        return self._stat("min")
-
-    def count(self):
-        return self._stat("count")
-
-    def std(self, ddof: int = 1):
-        return self._stat("std", ddof)
-
-    def var(self, ddof: int = 1):
-        return self._stat("var", ddof)
-
-    def median(self):
-        return self._stat("quantile", 0.5)
-
-    def quantile(self, q: float):
-        """Exact interpolated quantile (pandas interpolation='linear') of
-        the sorted frame list — rolling only: the list is k-sized."""
-        return self._stat("quantile", q)
-
-    def apply(self, func, raw: bool = False):
-        """Arbitrary Python window function (pandas rolling.apply): pandas
-        computes it over each group, or each ingest partition plus its k-1
-        ghost rows, as one Arrow batch — partition-parallel."""
-        return self._stat("apply", (func, raw))
 
 
 def shift_columns(sdf, cols: dict, periods: int, fresh: bool):
@@ -868,8 +876,8 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
     the same combine runs on the driver over the ≤ num_partitions collected
     states (measured cheaper than the in-plan form for one global group).
 
-    ``cols`` maps out_name -> source column NAME; outputs are doubles. A
-    frame without a row-order key gets one here.
+    ``cols`` maps out_name -> source Column (or column name); outputs are
+    doubles. A frame without a row-order key gets one here.
     """
     import numpy as np
     import pandas as pd
@@ -882,14 +890,18 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
     b = 1.0 - alpha
     uniq = next(_seq)
     PID, DEC = f"__ewp_{uniq}__", f"__ewd_{uniq}__"
+    named = {f"__ews_{uniq}_{i}__": F.col(c) if isinstance(c, str) else c for i, c in enumerate(cols.values())}
+    srcs = list(named)
+    cols = dict(zip(cols, srcs))
     # Both phases group the same exchange by partition id. Its explicit
     # partition count keeps AQE from coalescing these few-byte, Python-heavy
     # groups into one task (measured: the serial phases cost more than the
     # parallel ones at 200k rows on 4 cores and at 1M rows on 8 partitions).
-    work = sdf.withColumn(PID, _pid()).repartition(
-        sdf.sparkSession.sparkContext.defaultParallelism, PID
+    work, keys, restore = _dotless(
+        sdf.select("*", *[c.alias(s) for s, c in named.items()], _pid().alias(PID)),
+        keys,
     )
-    srcs = list(dict.fromkeys(cols.values()))
+    work = work.repartition(sdf.sparkSession.sparkContext.defaultParallelism, PID)
     state = {
         s: [f"__ew{m}_{uniq}_{i}__" for m in letters] for i, s in enumerate(srcs)
     }
@@ -958,4 +970,4 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
             lambda rows: phase2(rows.assign(**carry[rows[PID].iloc[0]])),
             out_schema,
         )
-    return out.drop(PID)
+    return restore(out).drop(PID, *srcs)

@@ -1,13 +1,19 @@
-"""Series facade: a named column expression bound to a parent frame's lineage.
+"""Series facade: a named column expression bound to a frame's lineage.
 
 Mirrors the reference's ``Series`` frontend (frontend/series.py) where every
 element-wise op immediately dispatched a Legion task; here each op composes a
 Catalyst expression, so chains of scalar ops fuse into one whole-stage-codegen
 span — zero per-op overhead.
 
-Alignment contract: binary ops between two Series require them to share lineage
-(same parent frame), matching the reference's aligned-only support
-(README.md:208-218; core/index.py:87-102 raises on unaligned partitions).
+Lineage rule: a Series never rewrites the frame it came from. An ordered op
+(``ordered.OrderedOps``) returns a Series on a derived frame — the parent's
+plan plus one hidden column, recording the parent and the steps applied since
+(``DataFrame._with_step``). Every read of a Series against another frame or
+Series goes through ``DataFrame._resolve``: operands of one parent meet on
+the parent's plan plus the ordered union of both sides' steps, with no join;
+operands of different parents raise, matching the reference's aligned-only
+support (README.md:208-218; core/index.py:87-102 raises on unaligned
+partitions).
 """
 
 from __future__ import annotations
@@ -23,12 +29,15 @@ from legate_pandas_spark.frontend.dtypes import (
     to_spark_type,
     truediv,
 )
-from legate_pandas_spark.frontend.scan import WindowStats, _seq, window_columns
+from legate_pandas_spark.frontend.ordered import OrderedOps
+from legate_pandas_spark.frontend.scan import _seq
 
 
-class Series:
+class Series(OrderedOps):
+    ndim = 1
+
     def __init__(self, frame, col: Column = None, name: str = None):
-        """Internal form: (parent frame, column expr, name). Convenience form
+        """Internal form: (frame, column expr, name). Convenience form
         (reference sr_create): ``Series(list_or_pandas_series, name=...)``."""
         if col is None and not hasattr(frame, "_sdf"):
             import pandas as pd
@@ -40,7 +49,7 @@ class Series:
             pdf = pd.DataFrame({name: data})
             parent = from_pandas(pdf)
             frame, col = parent, F.col(name)
-        self._frame = frame  # parent DataFrame facade (lineage anchor)
+        self._frame = frame  # the frame this column reads from (its lineage)
         self._col = col
         self.name = name
         self._cat = None  # CatMeta when this column carries a categorical dtype
@@ -61,25 +70,49 @@ class Series:
         self._tz: str | None = None
 
     # -- plumbing ----------------------------------------------------------
-    def _other_col(self, other):
-        if isinstance(other, Series):
-            if other._frame is not None and self._frame is not None and other._frame._sdf is not self._frame._sdf:
-                raise ValueError(
-                    "binary ops require Series from the same frame (aligned); "
-                    "merge/join the frames first (reference README.md:208-218)"
-                )
-            return other._col
-        return F.lit(other)
+    def _resolve(self, *others):
+        """(frame, columns): each of ``others`` read against this Series — a
+        Series' column on the frame holding both lineages
+        (``DataFrame._resolve``, which raises on an unrelated frame), any
+        other value a literal."""
+        frame, cols = self._frame, []
+        for o in others:
+            if isinstance(o, Series):
+                frame = frame._resolve(o._frame)
+                cols.append(o._col)
+            else:
+                cols.append(F.lit(o))
+        return frame, cols
 
     def _wrap(
-        self, col: Column, name: str | None = None, *, strict=None, proof=None
+        self, col: Column, name: str | None = None, *, frame=None, strict=None,
+        proof=None,
     ) -> "Series":
-        out = Series(self._frame, col, name or self.name)
+        out = Series(self._frame if frame is None else frame, col, name or self.name)
         if strict is not None:
             out._strict_cols = frozenset(strict)
         if proof is not None:
             out._nonnull_if_true = frozenset(proof)
         return out
+
+    def _binop(self, other, fn, *, strict=None, proof=None) -> "Series":
+        """``fn(this column, other)`` on the frame both operands read from."""
+        frame, (o,) = self._resolve(other)
+        return self._wrap(fn(self._col, o), frame=frame, strict=strict, proof=proof)
+
+    def _scan(self, kernel, numeric: bool = True, finish=None, keys=(), other=None):
+        """This Series' ordered op (``ordered.OrderedOps``): ``kernel``
+        appends its result — over this column, or the (this, ``other``)
+        column pair of a window corr/cov — as one hidden column of a derived
+        frame, and ``finish(result, source)`` shapes it."""
+        frame, src = self._frame, self._col
+        if other is not None:
+            frame, (o,) = self._resolve(other)
+            src = (src, o)
+        out = f"__s_{next(_seq)}__"
+        derived = frame._with_step(lambda sdf: kernel(sdf, {out: src}))
+        res = F.col(out)
+        return self._wrap(res if finish is None else finish(res, self._col), frame=derived)
 
     @staticmethod
     def _strict_of(other) -> frozenset:
@@ -99,59 +132,53 @@ class Series:
         """pandas method-form binop: ``fill_value`` substitutes for a missing
         value in EITHER operand; both-missing stays null (pandas contract).
         Pure expression — no extra plan nodes beyond the op itself."""
-        a, b = self._col, self._other_col(other)
         if fill_value is None:
-            return self._wrap(op(a, b))
-        fa = F.coalesce(a, F.lit(fill_value))
-        fb = F.coalesce(b, F.lit(fill_value))
-        return self._wrap(F.when(~(a.isNull() & b.isNull()), op(fa, fb)))
+            return self._binop(other, op)
+        fv = F.lit(fill_value)
+        return self._binop(
+            other,
+            lambda a, b: F.when(
+                ~(a.isNull() & b.isNull()), op(F.coalesce(a, fv), F.coalesce(b, fv))
+            ),
+        )
 
     # -- arithmetic (pandas promotion rules) -------------------------------
+    def _arith(self, other, fn):
+        return self._binop(other, fn, strict=self._strict_cols | self._strict_of(other))
+
     def __add__(self, other):
-        return self._wrap(
-            self._col + self._other_col(other),
-            strict=self._strict_cols | self._strict_of(other),
-        )
+        return self._arith(other, lambda a, b: a + b)
 
     __radd__ = __add__
 
     def __sub__(self, other):
-        return self._wrap(
-            self._col - self._other_col(other),
-            strict=self._strict_cols | self._strict_of(other),
-        )
+        return self._arith(other, lambda a, b: a - b)
 
     def __rsub__(self, other):
-        return self._wrap(
-            self._other_col(other) - self._col,
-            strict=self._strict_cols | self._strict_of(other),
-        )
+        return self._arith(other, lambda a, b: b - a)
 
     def __mul__(self, other):
-        return self._wrap(
-            self._col * self._other_col(other),
-            strict=self._strict_cols | self._strict_of(other),
-        )
+        return self._arith(other, lambda a, b: a * b)
 
     __rmul__ = __mul__
 
     def __truediv__(self, other):
-        return self._wrap(truediv(self._col, self._other_col(other)))
+        return self._binop(other, truediv)
 
     def __rtruediv__(self, other):
-        return self._wrap(truediv(self._other_col(other), self._col))
+        return self._binop(other, lambda a, b: truediv(b, a))
 
     def __floordiv__(self, other):
-        return self._wrap(floordiv(self._col, self._other_col(other)))
+        return self._binop(other, floordiv)
 
     def __mod__(self, other):
-        return self._wrap(floormod(self._col, self._other_col(other)))
+        return self._binop(other, floormod)
 
     def __rmod__(self, other):
-        return self._wrap(floormod(self._other_col(other), self._col))
+        return self._binop(other, lambda a, b: floormod(b, a))
 
     def __pow__(self, other):
-        return self._wrap(F.pow(self._col, self._other_col(other)))
+        return self._binop(other, F.pow)
 
     def __neg__(self):
         return self._wrap(-self._col, strict=self._strict_cols)
@@ -169,64 +196,50 @@ class Series:
         return self._wrap(F.floor(self._col))
 
     # -- comparisons: null-compare-false, non-nullable result --------------
-    def __eq__(self, other):  # type: ignore[override]
-        return self._wrap(
-            null_compare_false(self._col == self._other_col(other)),
+    def _compare(self, other, fn):
+        return self._binop(
+            other,
+            lambda a, b: null_compare_false(fn(a, b)),
             proof=self._strict_cols | self._strict_of(other),
         )
+
+    def __eq__(self, other):  # type: ignore[override]
+        return self._compare(other, lambda a, b: a == b)
 
     def __ne__(self, other):  # type: ignore[override]
         # pandas: NaN != x is TRUE (the one comparison where missing values
         # pass), matching query()'s total-atom compilation — null operands
         # coalesce to TRUE, so no non-null proof can be emitted (a kept row
         # may have a null operand).
-        return self._wrap(
-            F.coalesce(self._col != self._other_col(other), F.lit(True)),
-        )
+        return self._binop(other, lambda a, b: F.coalesce(a != b, F.lit(True)))
 
     def __lt__(self, other):
-        return self._wrap(
-            null_compare_false(self._col < self._other_col(other)),
-            proof=self._strict_cols | self._strict_of(other),
-        )
+        return self._compare(other, lambda a, b: a < b)
 
     def __le__(self, other):
-        return self._wrap(
-            null_compare_false(self._col <= self._other_col(other)),
-            proof=self._strict_cols | self._strict_of(other),
-        )
+        return self._compare(other, lambda a, b: a <= b)
 
     def __gt__(self, other):
-        return self._wrap(
-            null_compare_false(self._col > self._other_col(other)),
-            proof=self._strict_cols | self._strict_of(other),
-        )
+        return self._compare(other, lambda a, b: a > b)
 
     def __ge__(self, other):
-        return self._wrap(
-            null_compare_false(self._col >= self._other_col(other)),
-            proof=self._strict_cols | self._strict_of(other),
-        )
+        return self._compare(other, lambda a, b: a >= b)
 
     # -- boolean / bitwise --------------------------------------------------
     def __and__(self, other):
         # conjunction true => both operands true => both proofs apply
-        return self._wrap(
-            self._col & self._other_col(other),
-            proof=self._proof_of(self) | self._proof_of(other),
+        return self._binop(
+            other, lambda a, b: a & b, proof=self._proof_of(self) | self._proof_of(other)
         )
 
     def __or__(self, other):
         # disjunction true => at least one true => only the shared proof holds
-        return self._wrap(
-            self._col | self._other_col(other),
-            proof=self._proof_of(self) & self._proof_of(other),
+        return self._binop(
+            other, lambda a, b: a | b, proof=self._proof_of(self) & self._proof_of(other)
         )
 
     def __xor__(self, other):
-        return self._wrap(
-            F.expr("1=0") if False else (self._col.cast("boolean") != self._other_col(other).cast("boolean"))
-        )
+        return self._binop(other, lambda a, b: a.cast("boolean") != b.cast("boolean"))
 
     def __invert__(self):
         # ~x true => x false (non-null) => x's strict sources are non-null;
@@ -316,9 +329,7 @@ class Series:
         if repeats == 0:
             # sequence(0, -1) would emit [0, -1] (default step -1) and
             # duplicate every element; pandas returns an empty Series.
-            from legate_pandas_spark.frontend.frame import DataFrame as _DF
-
-            return _DF(sdf.filter(F.lit(False)), ())[name]
+            return DataFrame(sdf.filter(F.lit(False)), ())[name]
         rep = sdf.select(
             F.col(ROW_ORDER),
             name,
@@ -334,10 +345,14 @@ class Series:
         """Boolean-mask selection (``sr[sr > 0]``) or positional/label lookup
         via the one-column frame (reference sr_indexing)."""
         if isinstance(key, Series):  # boolean mask
-            name = self.name or "0"
-            frame = self.to_frame(name)
-            filtered = frame._replace(frame._sdf.filter(key._col))
-            return filtered[name]
+            frame, (mask,) = self._resolve(key)
+            out = self._wrap(
+                self._col,
+                frame=frame._replace(frame._sdf.filter(mask)),
+                strict=self._strict_cols,
+            )
+            out._cat = self._cat
+            return out
         if isinstance(key, slice):
             return self.iloc[key]
         return self.loc[key]
@@ -403,15 +418,13 @@ class Series:
 
     def where(self, cond, other=None):
         """Keep values where cond is True, else replace with other (pandas)."""
-        cond_col = cond._col if isinstance(cond, Series) else F.lit(cond)
-        other_col = self._other_col(other) if other is not None else F.lit(None)
-        return self._wrap(F.when(cond_col, self._col).otherwise(other_col))
+        frame, (c, o) = self._resolve(cond, other)
+        return self._wrap(F.when(c, self._col).otherwise(o), frame=frame)
 
     def mask(self, cond, other=None):
         """Replace values where cond is True (inverse of where)."""
-        cond_col = cond._col if isinstance(cond, Series) else F.lit(cond)
-        other_col = self._other_col(other) if other is not None else F.lit(None)
-        return self._wrap(F.when(cond_col, other_col).otherwise(self._col))
+        frame, (c, o) = self._resolve(cond, other)
+        return self._wrap(F.when(c, o).otherwise(self._col), frame=frame)
 
     def clip(self, lower=None, upper=None):
         # nulls stay null (pandas): Spark's greatest/least SKIP nulls and
@@ -425,178 +438,6 @@ class Series:
         if lower is not None or upper is not None:
             col = F.when(src.isNull(), F.lit(None)).otherwise(col)
         return self._wrap(col)
-
-    # -- ordered ops (two-phase distributed scan over the row-order key) -----
-    def _cum(self, kind: str):
-        """Global cumulative scan — the reference's two-phase carry design
-        (core/column.py:644-687): partition-local scan + broadcast carry,
-        no unpartitioned window (scan.cum_columns). The output lands in a
-        dunder column on the parent frame; the Series wraps it by name."""
-        from legate_pandas_spark.frontend.scan import _seq, cum_columns
-
-        out = f"__scum_{next(_seq)}__"
-        self._frame._sdf = cum_columns(
-            self._frame._ordered_sdf(), {out: self._col}, kind
-        )
-        return self._wrap(F.col(out))
-
-    def cumsum(self):
-        return self._cum("sum")
-
-    def cummax(self):
-        return self._cum("max")
-
-    def cummin(self):
-        return self._cum("min")
-
-    def cumprod(self):
-        """Cumulative product via exp∘cumsum∘log magnitude with sign-parity and
-        zero tracking (SURVEY §2.6's PROD scan without a UDAF), distributed via
-        the two-phase carry. Nulls are skipped (pandas skipna) but stay null at
-        their own position."""
-        return self._cum("prod")
-
-    def rolling(self, window: int, min_periods: int | None = None):
-        """Series rolling window (pandas s.rolling(k).mean() idiom) — the
-        kernel of frame-level Rolling (scan.window_columns)."""
-        return SeriesWindow(self, window, min_periods)
-
-    def ewm(self, alpha: float = None, com=None, span=None, halflife=None):
-        """Series exponentially weighted accessor (alpha/com/span/halflife,
-        pandas parameter resolution) — the exact two-phase distributed
-        recurrence (scan.ewm_columns)."""
-        from legate_pandas_spark.frontend.dtypes import resolve_ewm_alpha
-
-        return SeriesEwm(self, resolve_ewm_alpha(alpha, com, span, halflife))
-
-    def expanding(self, min_periods: int = 1):
-        """Series expanding window — two-phase running carry, no
-        unpartitioned window."""
-        return SeriesWindow(self, None, min_periods)
-
-    def _fill(self, forward: bool):
-        from legate_pandas_spark.frontend.scan import _seq, fill_columns
-
-        out = f"__sfill_{next(_seq)}__"
-        self._frame._sdf = fill_columns(
-            self._frame._ordered_sdf(), {out: self._col}, forward=forward
-        )
-        return self._wrap(F.col(out))
-
-    def ffill(self):
-        """Forward-fill nulls in row order — two-phase: partition-local fill +
-        nearest preceding partition's edge value as broadcast carry (the keyed
-        path is groupby(...).ffill())."""
-        return self._fill(forward=True)
-
-    def bfill(self):
-        return self._fill(forward=False)
-
-    def rank(self, method: str = "min", ascending: bool = True, pct: bool = False,
-             na_option: str = "keep"):
-        """Rank values: 'min' = SQL rank, 'max' = last-peer rank, 'dense',
-        'first'=row_number, 'average' = pandas default; ``pct`` normalizes by
-        the valid count (dense: by the distinct count, like pandas).
-        ``na_option``: 'keep' (nulls rank null), 'top', 'bottom'.
-
-        Distributed two-phase rank (scan.rank_column): splitter boundaries
-        bucket the value range (the reference's sample-sort histogram,
-        core/sort.py:113-174), local rank runs per bucket, and a broadcast
-        carry of per-bucket counts lifts it to the global rank — no
-        unpartitioned window."""
-        from legate_pandas_spark.frontend.scan import _seq, rank_column
-
-        out = f"__rank_{next(_seq)}__"
-        self._frame._sdf = rank_column(
-            self._frame._ordered_sdf(), out, self._col,
-            method=method, ascending=ascending, pct=pct, na_option=na_option,
-        )
-        return self._wrap(F.col(out))
-
-    def shift(self, periods: int = 1, fill_value=None):
-        """Shift by ``periods`` rows — a global-position equi-join on the
-        partition-offset position key (scan.shift_columns), never a global
-        window: the only data movement is a hash join on a unique long.
-        ``fill_value`` replaces the vacated slots (pandas)."""
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.scan import _seq, shift_columns
-
-        uniq = next(_seq)
-        out = f"__sshift_{uniq}__"
-        fresh = ROW_ORDER not in self._frame._sdf.columns
-        cols = {out: self._col}
-        mark = None
-        col_type = None
-        if fill_value is not None:
-            # fill ONLY vacated slots (donor-row miss), never nulls that were
-            # genuinely shifted in — a marker column distinguishes the two
-            mark = f"__sshiftm_{uniq}__"
-            cols[mark] = F.lit(True)
-            col_type = self._frame._sdf.select(self._col.alias(out)).dtypes[0][1]
-        self._frame._sdf = shift_columns(
-            self._frame._ordered_sdf(), cols, periods, fresh
-        )
-        expr = F.col(out)
-        if mark is not None:
-            from legate_pandas_spark.frontend.frame import DataFrame as _DF
-
-            expr = _DF._shift_fill_expr(
-                self.name or out, col_type, fill_value, mark, out, strict=True
-            )
-        return self._wrap(expr)
-
-    def diff(self, periods: int = 1):
-        shifted = self.shift(periods)
-        return self._wrap(self._col - shifted._col)
-
-    def pct_change(self, periods: int = 1):
-        """Fractional change vs the value ``periods`` rows back (global row
-        order — the partitioned scale path is groupby(...).pct_change())."""
-        prev = self.shift(periods)._col.cast("double")
-        return self._wrap((self._col.cast("double") - prev) / prev)
-
-    def interpolate(self, method: str = "linear"):
-        """Linear interpolation of nulls by row position (pandas default:
-        values equally spaced, leading nulls stay null, trailing nulls carry
-        the last valid value forward).
-
-        Two-phase distributed (reference scan, core/column.py:644-687): global
-        positions come from partition-offset arithmetic, then ONE forward and
-        ONE backward carry pass (scan.fill_columns) deliver the bracketing
-        non-null (value, position) pairs; the linear blend is a pure
-        expression. No unpartitioned window."""
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.indexing import _attach_positions
-        from legate_pandas_spark.frontend.scan import _seq, fill_columns
-
-        if method != "linear":
-            raise NotImplementedError("only method='linear'")
-        uniq = next(_seq)
-        POS = f"__ipos_{uniq}__"
-        fresh = ROW_ORDER not in self._frame._sdf.columns
-        sdf, _ = _attach_positions(
-            self._frame._ordered_sdf(), fresh, pos_name=POS
-        )
-        col = self._col.cast("double")
-        pos_if_valid = F.when(col.isNotNull(), F.col(POS))
-        pv, pp = f"__ipv_{uniq}__", f"__ipp_{uniq}__"
-        nv, np_ = f"__inv_{uniq}__", f"__inp_{uniq}__"
-        sdf = fill_columns(sdf, {pv: col, pp: pos_if_valid}, forward=True)
-        sdf = fill_columns(sdf, {nv: col, np_: pos_if_valid}, forward=False)
-        self._frame._sdf = sdf  # POS/carry helpers stay hidden (__*__ names)
-        pos = F.col(POS)
-        out = (
-            F.when(col.isNotNull(), col)
-            .when(F.col(pv).isNull(), F.lit(None).cast("double"))
-            .when(F.col(nv).isNull(), F.col(pv))
-            .otherwise(
-                F.col(pv)
-                + (F.col(nv) - F.col(pv))
-                * (pos - F.col(pp))
-                / (F.col(np_) - F.col(pp))
-            )
-        )
-        return self._wrap(out)
 
     def apply(self, func, dtype="double"):
         """Arrow-vectorized pandas UDF over this column (the Series-level
@@ -688,13 +529,13 @@ class Series:
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
 
-        a, b = self._col, self._other_col(other)
+        a, (frame, (b,)) = self._col, self._resolve(other)
         # pandas fill_value substitutes only INDEX-MISALIGNED holes, never
         # NaN values; same-frame alignment has no such holes, so it is
         # accepted for signature parity and never applied (NaN values pass
         # through to func exactly like pandas)
         probe = (
-            self._frame._sdf.select(a.alias("__ca__"), b.alias("__cb__"))
+            frame._sdf.select(a.alias("__ca__"), b.alias("__cb__"))
             .limit(100)
             .toPandas()
         )
@@ -718,7 +559,7 @@ class Series:
                 )
                 return out.astype("object").astype("string")
 
-        return self._wrap(_comb(a, b))
+        return self._wrap(_comb(a, b), frame=frame)
 
     def replace(self, to_replace, value=None):
         """pandas Series.replace: exact-match substitution, unmatched values
@@ -756,14 +597,12 @@ class Series:
     def to_list(self) -> list:
         return self.to_pandas().tolist()
 
-    def tolist(self) -> list:
-        return self.to_list()
+    tolist = to_list
 
     def combine_first(self, other):
         """pandas Series.combine_first: self's values, holes filled from
         other (same-frame Series or scalar) — one coalesce expression."""
-        other_col = other._col if isinstance(other, Series) else F.lit(other)
-        return self._wrap(F.coalesce(self._col, other_col))
+        return self._binop(other, F.coalesce)
 
     @property
     def hasnans(self) -> bool:
@@ -952,44 +791,19 @@ class Series:
     def product(self):
         return self.prod()
 
-    def skew(self):
-        """Bias-corrected sample skewness (pandas Series.skew): Spark's
-        one-pass population g1 = m3/m2^1.5 (numerically stable central-moment
-        updates, never raw power sums) adjusted driver-side by the exact
-        algebraic factor sqrt(n(n-1))/(n-2). NaN for n < 3, like pandas."""
-        import math
+    def _via_frame(self, method: str, *args, **kwargs):
+        """This column's entry of its one-column frame's ``method`` — the
+        frame twin that gives the pandas result."""
+        name = self.name or "0"
+        return getattr(self.to_frame(name), method)(*args, **kwargs)[name]
 
-        row = self._frame._sdf.select(
-            F.skewness(self._col).alias("g1"),
-            F.count(self._col).alias("n"),
-            F.var_samp(self._col).alias("v"),
-        ).collect()[0]
-        g1, n = row["g1"], row["n"]
-        if n < 3:
-            return float("nan")
-        if g1 is None:
-            # zero variance: Spark's g1 is null (0/0); pandas returns 0.0
-            return 0.0 if (row["v"] or 0.0) == 0.0 else float("nan")
-        return g1 * math.sqrt(n * (n - 1)) / (n - 2)
+    def skew(self):
+        return self._via_frame("skew")
 
     def kurt(self):
-        """Bias-corrected excess kurtosis (pandas Series.kurt): Spark's
-        population excess g2 = m4/m2² − 3 adjusted by the exact G2 identity
-        ((n+1)·g2 + 6)·(n−1)/((n−2)(n−3)). NaN for n < 4, like pandas."""
-        row = self._frame._sdf.select(
-            F.kurtosis(self._col).alias("g2"),
-            F.count(self._col).alias("n"),
-            F.var_samp(self._col).alias("v"),
-        ).collect()[0]
-        g2, n = row["g2"], row["n"]
-        if n < 4:
-            return float("nan")
-        if g2 is None:
-            return 0.0 if (row["v"] or 0.0) == 0.0 else float("nan")
-        return ((n + 1) * g2 + 6.0) * (n - 1) / ((n - 2) * (n - 3))
+        return self._via_frame("kurt")
 
-    def kurtosis(self):
-        return self.kurt()
+    kurtosis = kurt
 
     def any(self):
         return bool(self._reduce(F.max(self._col.cast("boolean").cast("int"))))
@@ -1013,13 +827,13 @@ class Series:
         Distributed shape: the dictionary is a distinct aggregate ranked by
         min(row-order) through the sample-sort row number
         (``scan.ordered_row_number`` — no single-partition window even for a
-        web-scale dictionary), then joined back onto the parent frame (plain
-        equi-join; AQE broadcasts it when small). Only the uniques LIST is
-        collected — that is the pandas return contract. The reference's
-        nearest analog is the categorical dictionary (core/column.py:831-911),
-        which it replicates wholesale."""
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.scan import _seq, ordered_row_number
+        web-scale dictionary), then joined onto a derived frame of the
+        parent's rows (plain equi-join; AQE broadcasts it when small). Only
+        the uniques LIST is collected — that is the pandas return contract.
+        The reference's nearest analog is the categorical dictionary
+        (core/column.py:831-911), which it replicates wholesale."""
+        from legate_pandas_spark.frontend.frame import ROW_ORDER, row_order
+        from legate_pandas_spark.frontend.scan import ordered_row_number
 
         uniq = next(_seq)
         val, mo, code = (
@@ -1027,19 +841,19 @@ class Series:
             f"__fz_mo_{uniq}__",
             f"__fz_code_{uniq}__",
         )
-        frame = self._frame
-        frame._sdf = frame._ordered_sdf()
+        frame = self._frame._with_step(row_order)
+        src = self._col
         base = frame._sdf.select(
-            self._col.alias(val), F.col(ROW_ORDER).alias(mo)
+            src.alias(val), F.col(ROW_ORDER).alias(mo)
         ).filter(F.col(val).isNotNull())
         dic = base.groupBy(val).agg(F.min(mo).alias(mo))
         order = [F.asc(val)] if sort else [F.asc(mo)]
         dic = ordered_row_number(dic, order, code).select(val, code)
         uniques = [r[val] for r in dic.orderBy(code).collect()]
-        frame._sdf = frame._sdf.join(
-            dic, self._col == F.col(val), "left"
-        ).drop(val)
-        codes = self._wrap(F.coalesce(F.col(code), F.lit(-1)).cast("long"))
+        frame = frame._with_step(
+            lambda sdf: sdf.join(dic, src == F.col(val), "left").drop(val)
+        )
+        codes = self._wrap(F.coalesce(F.col(code), F.lit(-1)).cast("long"), frame=frame)
         return codes, uniques
 
     def quantile(self, q=0.5):
@@ -1071,48 +885,6 @@ class Series:
             .collect()
         )
         return pd.Series([r["v"] for r in rows], name=self.name)
-
-    def _idx_reduce(self, descending: bool):
-        if not self._frame._index:
-            # virtual RangeIndex: the "label" IS the global position — compute
-            # it with the partition-offset arithmetic, then TakeOrdered picks
-            # the argmax row (first occurrence wins ties, like pandas)
-            from legate_pandas_spark.frontend.frame import ROW_ORDER
-            from legate_pandas_spark.frontend.indexing import _attach_positions
-            from legate_pandas_spark.frontend.scan import _seq
-
-            pos = f"__idxr_{next(_seq)}__"
-            fresh = ROW_ORDER not in self._frame._sdf.columns
-            with_pos, _ = _attach_positions(
-                self._frame._ordered_sdf(), fresh, pos_name=pos
-            )
-            order = self._col.desc() if descending else self._col.asc()
-            row = (
-                with_pos.filter(self._col.isNotNull())
-                .orderBy(order, F.asc(pos))
-                .select(pos)
-                .limit(1)
-                .collect()
-            )
-            return int(row[0][0]) if row else None
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-        idx = self._frame._index[0]
-        order = self._col.desc() if descending else self._col.asc()
-        # pandas skips NaN and returns the FIRST occurrence among ties
-        tiebreak = (
-            F.asc(ROW_ORDER)
-            if ROW_ORDER in self._frame._sdf.columns
-            else F.asc(idx)
-        )
-        row = (
-            self._frame._sdf.filter(self._col.isNotNull())
-            .orderBy(order, tiebreak)
-            .select(idx)
-            .limit(1)
-            .collect()
-        )
-        return row[0][0] if row else None
 
     def first_valid_index(self):
         """Index label (or position on a virtual RangeIndex) of the first
@@ -1147,11 +919,10 @@ class Series:
         return int(v) if label == pos else v
 
     def idxmax(self):
-        """Index label of the maximum (TakeOrderedAndProject — no global sort)."""
-        return self._idx_reduce(descending=True)
+        return self._via_frame("idxmax")
 
     def idxmin(self):
-        return self._idx_reduce(descending=False)
+        return self._via_frame("idxmin")
 
     def to_frame(self, name: str | None = None):
         """One-column DataFrame from this Series (pandas to_frame)."""
@@ -1181,61 +952,38 @@ class Series:
         return frame.duplicated(subset=[name], keep=keep)
 
     def drop_duplicates(self, keep: str | bool = "first") -> "Series":
-        """Distinct values in first-occurrence order semantics (exported via
-        the one-column frame's dedup machinery — row_number per value)."""
-        frame = self.to_frame(self.name or "0")
-        return frame.drop_duplicates(keep=keep)[self.name or "0"]
+        return self._via_frame("drop_duplicates", keep=keep)
 
     def sample(self, frac: float, seed: int | None = None) -> "Series":
-        frame = self.to_frame(self.name or "0").sample(frac, seed=seed)
-        return frame[self.name or "0"]
+        return self._via_frame("sample", frac, seed=seed)
 
     def agg(self, ops):
-        """Multiple reductions in ONE aggregate pass (pandas Series.agg)."""
-        import pandas as pd
-
-        from legate_pandas_spark.frontend.groupby import _AGG_FNS, _with_identity
-
-        if isinstance(ops, str):
-            ops = [ops]
-        exprs = [
-            _with_identity(op, _AGG_FNS[op](self._col)).alias(op) for op in ops
-        ]
-        row = self._frame._sdf.agg(*exprs).collect()[0]
-        out = pd.Series({op: row[op] for op in ops})
-        return out if len(ops) > 1 else out.iloc[0]
+        """Reductions in ONE aggregate pass (pandas Series.agg); a single
+        op gives a scalar."""
+        out = self._via_frame("agg", {self.name or "0": ops})
+        return out if len(out) > 1 else out.iloc[0]
 
     aggregate = agg  # pandas alias
 
+    def _pair_reduce(self, other, fn):
+        """``fn(x, y)`` aggregated over this Series and an aligned one, as
+        doubles — one distributed aggregate, scalar to the driver."""
+        frame, (o,) = self._resolve(other)
+        return frame._sdf.agg(fn(self._col.cast("double"), o.cast("double"))).collect()[0][0]
+
     def dot(self, other: "Series") -> float:
-        """pandas Series.dot for aligned (same-frame) series: Σ a·b — one
-        distributed aggregate, scalar to the driver."""
-        return self._frame._sdf.agg(
-            F.sum(self._col.cast("double") * self._other_col(other).cast("double"))
-        ).collect()[0][0]
+        """pandas Series.dot for aligned (same-frame) series: Σ a·b."""
+        return self._pair_reduce(other, lambda a, b: F.sum(a * b))
 
     def corr(self, other: "Series") -> float:
-        return self._frame._sdf.agg(
-            F.corr(self._col.cast("double"), self._other_col(other).cast("double"))
-        ).collect()[0][0]
+        return self._pair_reduce(other, F.corr)
 
     def cov(self, other: "Series", ddof: int = 1) -> float:
-        fn = F.covar_samp if ddof == 1 else F.covar_pop
-        return self._frame._sdf.agg(
-            fn(self._col.cast("double"), self._other_col(other).cast("double"))
-        ).collect()[0][0]
+        return self._pair_reduce(other, F.covar_samp if ddof == 1 else F.covar_pop)
 
     def autocorr(self, lag: int = 1) -> float:
-        """Correlation with the lag-shifted self (pandas autocorr) — one window
-        + one aggregate."""
-        shifted = self.shift(lag)
-        # project the window expression BEFORE aggregating (window exprs are
-        # illegal directly inside an aggregate)
-        proj = self._frame._sdf.select(
-            self._col.cast("double").alias("__a__"),
-            shifted._col.cast("double").alias("__b__"),
-        )
-        return proj.agg(F.corr(F.col("__a__"), F.col("__b__"))).collect()[0][0]
+        """Correlation with the lag-shifted self (pandas autocorr)."""
+        return self.corr(self.shift(lag))
 
     def item(self):
         """The single value of a length-1 Series (pandas item)."""
@@ -1251,13 +999,7 @@ class Series:
         ]
 
     def dropna(self):
-        from legate_pandas_spark.frontend.frame import DataFrame
-
-        name = self.name or "value"
-        out = DataFrame(
-            self._frame._sdf.select(self._col.alias(name)).filter(F.col(name).isNotNull())
-        )
-        return out[name]
+        return self._via_frame("dropna")
 
     def sort_values(self, ascending: bool = True, ignore_index: bool = False):
         from legate_pandas_spark.frontend.frame import DataFrame
@@ -1279,20 +1021,13 @@ class Series:
         return s
 
     def head(self, n: int = 5):
-        from legate_pandas_spark.frontend.frame import DataFrame
-
-        name = self.name or "value"
-        out = DataFrame(self._frame._sdf.select(self._col.alias(name)).limit(n))
-        return out[name]
+        return self._via_frame("head", n)
 
     def nlargest(self, n: int):
         return self.sort_values(ascending=False).head(n)
 
     def nsmallest(self, n: int):
         return self.sort_values(ascending=True).head(n)
-
-    def tolist(self) -> list:
-        return list(self.to_pandas())
 
     # -- round-8 breadth ----------------------------------------------------
     def median(self):
@@ -1310,33 +1045,18 @@ class Series:
         return func(self, *args, **kwargs)
 
     def tail(self, n: int = 5):
-        """Last n values (pandas tail) — per-partition tail + driver trim of
-        ≤ num_partitions·n rows, never a global sort (the mirror of head's
-        CollectLimit)."""
-        from legate_pandas_spark.frontend.frame import DataFrame, ROW_ORDER
-
-        name = self.name or "value"
-        sdf = self._frame._ordered_sdf().select(
-            F.col(ROW_ORDER), self._col.alias(name)
-        )
-        out = DataFrame(
-            sdf.orderBy(F.desc(ROW_ORDER)).limit(n).orderBy(F.asc(ROW_ORDER)).select(name)
-        )
-        return out[name]
+        return self._via_frame("tail", n)
 
     def case_when(self, caselist) -> "Series":
         """pandas 2.2 Series.case_when: [(condition, replacement), ...] —
         compiles to one Catalyst CASE WHEN chain (whole-stage codegen, zero
         extra plan nodes). Conditions are boolean Series of the same frame;
         unmatched rows keep this Series' value, like pandas."""
-        expr = None
-        for cond, repl in reversed(list(caselist)):
-            c = cond._col if isinstance(cond, Series) else cond
-            r = repl._col if isinstance(repl, Series) else F.lit(repl)
-            expr = F.when(c, r).otherwise(
-                expr if expr is not None else self._col
-            )
-        return self._wrap(expr if expr is not None else self._col)
+        frame, cols = self._resolve(*[x for pair in caselist for x in pair])
+        expr = self._col
+        for c, r in reversed(list(zip(cols[::2], cols[1::2]))):
+            expr = F.when(c, r).otherwise(expr)
+        return self._wrap(expr, frame=frame)
 
     @property
     def is_monotonic_increasing(self) -> bool:
@@ -1416,22 +1136,7 @@ class Series:
         return int(row[0][0]) if row else -1
 
     def describe(self):
-        """pandas Series.describe for numeric series — count/mean/std/min/
-        quartiles/max in ONE distributed aggregate (exact percentiles; the
-        100 TB swap is approx_percentile, same trade as quantile)."""
-        import pandas as pd
-
-        row = self._frame._sdf.select(
-            F.count(self._col).alias("count"),
-            F.avg(self._col).alias("mean"),
-            F.stddev_samp(self._col).alias("std"),
-            F.min(self._col).alias("min"),
-            F.percentile(self._col, F.lit(0.25)).alias("25%"),
-            F.percentile(self._col, F.lit(0.5)).alias("50%"),
-            F.percentile(self._col, F.lit(0.75)).alias("75%"),
-            F.max(self._col).alias("max"),
-        ).collect()[0]
-        return pd.Series(row.asDict(), name=self.name)
+        return self._via_frame("describe").rename(self.name)
 
     def to_dict(self) -> dict:
         return self.to_pandas().to_dict()
@@ -1441,16 +1146,13 @@ class Series:
 
     # delegations through the one-column frame (index machinery lives there)
     def take(self, positions) -> "Series":
-        name = self.name or "0"
-        return self.to_frame(name).take(positions)[name]
+        return self._via_frame("take", positions)
 
     def truncate(self, before=None, after=None) -> "Series":
-        name = self.name or "0"
-        return self.to_frame(name).truncate(before=before, after=after)[name]
+        return self._via_frame("truncate", before=before, after=after)
 
     def sort_index(self, ascending: bool = True) -> "Series":
-        name = self.name or "0"
-        return self.to_frame(name).sort_index(ascending=ascending)[name]
+        return self._via_frame("sort_index", ascending=ascending)
 
     def reset_index(self, drop: bool = False):
         """drop=True → Series on a fresh RangeIndex; drop=False → DataFrame
@@ -1557,9 +1259,8 @@ class Series:
         return self // other, self % other
 
     def __rdivmod__(self, other):
-        o = self._other_col(other)
-        return self._wrap(floordiv(o, self._col)), self._wrap(
-            floormod(o, self._col)
+        return self._binop(other, lambda a, b: floordiv(b, a)), self._binop(
+            other, lambda a, b: floormod(b, a)
         )
 
     def divmod(self, other):
@@ -1629,12 +1330,10 @@ class Series:
         return rows[0][name] if rows else float("nan")
 
     def at_time(self, time) -> "Series":
-        name = self.name or "0"
-        return self.to_frame(name).at_time(time)[name]
+        return self._via_frame("at_time", time)
 
     def between_time(self, start, end) -> "Series":
-        name = self.name or "0"
-        return self.to_frame(name).between_time(start, end)[name]
+        return self._via_frame("between_time", start, end)
 
     # pandas method-form aliases
     def multiply(self, other, fill_value=None):
@@ -1645,12 +1344,6 @@ class Series:
 
     def subtract(self, other, fill_value=None):
         return self.sub(other, fill_value=fill_value)
-
-    def pad(self):
-        return self.ffill()
-
-    def backfill(self):
-        return self.bfill()
 
     def transpose(self) -> "Series":
         return self
@@ -1664,12 +1357,14 @@ class Series:
         column of the same frame (name or aligned Series)."""
         from legate_pandas_spark.frontend.frame import DataFrame
 
+        frame, key_name = self._frame, by
         if isinstance(by, Series):
-            key_col, key_name = by._col, by.name or "key"
+            frame, (key_col,) = self._resolve(by)
+            key_name = by.name or "key"
         else:
-            key_col, key_name = F.col(by), by
+            key_col = F.col(by)
         base = DataFrame(
-            self._frame._sdf.select(
+            frame._sdf.select(
                 key_col.alias(key_name), self._col.alias(self.name or "value")
             )
         )
@@ -1698,39 +1393,12 @@ class Series:
         return DataFrame(out.orderBy(F.desc("proportion" if normalize else "count")))
 
     def equals(self, other) -> bool:
-        """Element-wise null-safe equality (reference EQUALS,
-        core/table.py:963-981; tests/interop/sr_from_numpy.py). Same-frame
-        series compare in one aggregate; cross-frame series are positionally
-        zipped via partition-offset arithmetic (no global sort)."""
+        """Null-safe equality in row order with a matching dtype (pandas
+        equals) — the one-column frames' ``equals``."""
         if not isinstance(other, Series):
             other = Series(other)
-        if self._frame is other._frame or self._frame._sdf is other._frame._sdf:
-            row = (
-                self._frame._sdf.agg(
-                    F.min(self._col.eqNullSafe(other._col).cast("int")).alias("eq")
-                ).collect()[0]
-            )
-            return row["eq"] != 0  # vacuously true on empty
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-        from legate_pandas_spark.frontend.indexing import _attach_positions, _row_count
-
-        def _positioned(s, alias):
-            sdf = s._frame._sdf.select(s._col.alias(alias))
-            sdf = sdf.withColumn(ROW_ORDER, F.monotonically_increasing_id())
-            with_pos, offsets = _attach_positions(sdf, fresh=True)
-            return with_pos.drop(ROW_ORDER), _row_count(offsets)
-
-        a, na = _positioned(self, "__a__")
-        b, nb = _positioned(other, "__b__")
-        if na != nb:
-            return False
-        if dict(a.dtypes)["__a__"] != dict(b.dtypes)["__b__"]:
-            return False  # pandas equals requires matching element dtype
-        joined = a.join(b, "__pos__", "inner")
-        row = joined.agg(
-            F.min(F.col("__a__").eqNullSafe(F.col("__b__")).cast("int")).alias("eq")
-        ).collect()[0]
-        return row["eq"] != 0
+        name = self.name or "0"
+        return self.to_frame(name).equals(other.to_frame(name))
 
     def to_numpy(self):
         return self.to_pandas().to_numpy()
@@ -1839,70 +1507,3 @@ class _SeriesScalarIndexer:
         if not vals:
             raise KeyError(key)
         return vals[0]
-
-
-class SeriesWindow(WindowStats):
-    """Rolling (``window`` rows) or expanding (``window`` None) accessor over
-    the parent frame's row order — the frame's window kernel
-    (``scan.window_columns``) on this Series. Each statistic appends a
-    hidden column to the parent frame and wraps it."""
-
-    def __init__(self, s: "Series", window, min_periods: int | None = None):
-        self._s = s
-        self._window = window
-        self._mp = window if min_periods is None else min_periods
-
-    def _stat(self, stat: str, arg=None, other: "Series" = None) -> "Series":
-        s = self._s
-        src = s._col
-        if other is not None:
-            if other._frame is not s._frame:
-                raise ValueError(f"window {stat} requires Series from the same frame")
-            src = (s._col, other._col)
-        out = f"__swin_{next(_seq)}__"
-        s._frame._sdf = window_columns(
-            s._frame._sdf, [], {out: src}, self._window, self._mp, stat, arg
-        )
-        return s._wrap(F.col(out))
-
-    def corr(self, other: "Series") -> "Series":
-        """Pearson correlation against another Series of the SAME frame
-        (pandas s.rolling(k).corr(other)): pairwise-complete rows only, and
-        min_periods counts pairwise observations."""
-        return self._stat("corr", other=other)
-
-    def cov(self, other: "Series") -> "Series":
-        """Sample covariance (ddof=1) against another Series of the same
-        frame (pandas s.rolling(k).cov(other))."""
-        return self._stat("cov", other=other)
-
-
-class SeriesEwm:
-    """Exponentially weighted accessor over the parent frame's row order —
-    exact two-phase distributed recurrence (scan.ewm_columns)."""
-
-    def __init__(self, s: "Series", alpha: float):
-        self._s = s
-        self._alpha = alpha
-
-    def mean(self) -> "Series":
-        return self._via("mean")
-
-    def var(self) -> "Series":
-        """Exact distributed ewm variance (pandas bias=False)."""
-        return self._via("var")
-
-    def std(self) -> "Series":
-        return self._via("std")
-
-    def _via(self, stat: str) -> "Series":
-        from legate_pandas_spark.frontend.scan import _seq, ewm_columns
-
-        s = self._s
-        uniq = next(_seq)
-        # always the Series' own expression: a derived Series (s * 10,
-        # s.cumsum()) keeps the name of the stored column it came from
-        src, out = f"__ewsrc_{uniq}__", f"__sewm_{uniq}__"
-        sdf = s._frame._ordered_sdf().withColumn(src, s._col)
-        s._frame._sdf = ewm_columns(sdf, [], {out: src}, self._alpha, stat).drop(src)
-        return s._wrap(F.col(out))

@@ -582,7 +582,7 @@ def pd_global_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pandas idiom: mask + GLOBAL Series.interpolate — driver-pins the
     round-4 two-phase interpolation (positions from partition-offset
     arithmetic, bracketing (value, pos) pairs from one forward and one
-    backward carry pass; frontend/series.py). The oracle spells the identical
+    backward carry pass; scan.interpolate_columns). The oracle spells the identical
     blend with DuckDB ignore-nulls windows."""
     ords = _read(spark, sf_dir, "orders")
     sub = ords[ords["o_orderkey"] <= 4000][["o_orderkey", "o_totalprice"]]
