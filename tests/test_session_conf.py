@@ -1,7 +1,7 @@
 """The session conf table and the driver contract on an untuned session.
 
 ``session._CONF`` is the only conf table: ``get_spark`` applies all of it,
-``ensure_runtime_conf`` the runtime-modifiable part of it. Operator code has
+``ensure_runtime_conf`` its ``spark.sql.*`` part. Operator code has
 no env-selected variants, and the session reads only ``SPARK_GRAFT_CPUS``.
 A ``get_spark`` session records no Python call sites; errors keep their class.
 """
@@ -38,6 +38,35 @@ def test_ensure_runtime_conf_on_untuned_session(spark, sf_dir):
         ns.sparkContext.defaultParallelism
     )
     assert dict(load_table(ns, sf_dir, "events").dtypes)["ts"] == "timestamp"
+
+
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_ensure_runtime_conf_sets_checkpoint_manager(spark, tmp_path):
+    """Spark registers no entry for the checkpoint manager key, so
+    ``isModifiable`` is False for it; ``ensure_runtime_conf`` still applies
+    it, and the session's streaming checkpoints then use the FileSystem
+    manager."""
+    from legate_pandas_spark.session import _CONF, ensure_runtime_conf
+
+    def manager(session):
+        jvm = session._jvm
+        hadoop = session._jsparkSession.sessionState().newHadoopConf()
+        path = jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri())
+        cfm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+        return cfm.create(path, hadoop).getClass().getSimpleName()
+
+    ns = spark.newSession()
+    ns.conf.unset(CHECKPOINT_MANAGER)
+    assert ns.conf.get(CHECKPOINT_MANAGER, None) is None
+    assert not ns.conf.isModifiable(CHECKPOINT_MANAGER)
+    assert manager(ns) == "FileContextBasedCheckpointFileManager"
+
+    ensure_runtime_conf(ns)
+
+    assert ns.conf.get(CHECKPOINT_MANAGER) == _CONF[CHECKPOINT_MANAGER]
+    assert manager(ns) == "FileSystemBasedCheckpointFileManager"
 
 
 DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"

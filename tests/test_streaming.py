@@ -411,6 +411,118 @@ def test_corpus_dedup_stream_restart_matches_batch_twin(spark, sf_dir, tmp_path)
     assert len(got) == len(want)  # no digest re-emitted after the restart
 
 
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_files(ckpt):
+    import os
+
+    return {
+        os.path.relpath(os.path.join(root, f), ckpt)
+        for root, _, files in os.walk(ckpt)
+        for f in files
+    }
+
+
+def test_file_context_checkpoint_restarts_under_session_manager(spark, sf_dir, tmp_path):
+    """A dedup checkpoint written by Spark's default FileContext manager
+    restarts under the session's FileSystem manager: both managers lay out the
+    same offsets/commits WAL, file-source log, state deltas and checksum
+    files, so the restarted query holds the batch twin's digests, each once."""
+    import re
+
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    from legate_pandas_spark.session import _CONF
+    from legate_pandas_spark.streaming import corpus_dedup_stream, stream_documents
+    from legate_pandas_spark.streaming.documents import DOCUMENTS_SCHEMA
+
+    assert spark.conf.get(CHECKPOINT_MANAGER) == _CONF[CHECKPOINT_MANAGER]
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
+    shards = [docs.iloc[i::5] for i in range(5)]
+    k = 2
+    seen = pd.concat(shards[:k])
+    redo = seen.iloc[::3].assign(doc_id=seen["doc_id"].iloc[::3] + 10**9)
+    after = [shards[k], redo, pd.concat(shards[k + 1 :])]
+    in_dir, out_dir, ckpt = tmp_path / "in", str(tmp_path / "out"), str(tmp_path / "ckpt")
+    in_dir.mkdir()
+
+    def start():
+        return (
+            corpus_dedup_stream(stream_documents(spark, str(in_dir)))
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .start()
+        )
+
+    # the manager is read when the query starts
+    spark.conf.set(CHECKPOINT_MANAGER, FILE_CONTEXT_MANAGER)
+    try:
+        q = start()
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER, _CONF[CHECKPOINT_MANAGER])
+    try:
+        _feed_one_file_per_trigger(q, str(in_dir), shards[:k])
+    finally:
+        q.stop()
+    written = _checkpoint_files(ckpt)
+    shapes = {re.sub(r"\d+", "N", f) for f in written}
+    assert {
+        "offsets/N",
+        "commits/N",
+        "sources/N/N",
+        "state/N/N/N.delta",
+        "state/N/N/N.delta.crc",
+    } <= shapes, shapes
+    q = start()
+    try:
+        _feed_one_file_per_trigger(q, str(in_dir), after, start=k)
+    finally:
+        q.stop()
+    rewritten = _checkpoint_files(ckpt)
+    assert written < rewritten
+    assert {re.sub(r"\d+", "N", f) for f in rewritten - written} <= shapes
+    got = spark.read.parquet(out_dir).select("digest").toPandas()["digest"]
+    batch = spark.read.schema(DOCUMENTS_SCHEMA).parquet(str(in_dir))
+    want = {r[0] for r in batch.select(F.md5("text")).distinct().collect()}
+    assert len(redo) > 0 and batch.count() == len(docs) + len(redo)
+    assert set(got) == want
+    assert len(got) == len(want)  # no digest re-emitted after the restart
+
+
+def test_checkpoint_manager_refuses_second_writer(spark, tmp_path):
+    """The WAL writes each batch's entry with ``createAtomic(path,
+    overwriteIfPossible=false)``; a second writer of the same entry must fail
+    and leave the first writer's bytes in place."""
+    from py4j.protocol import Py4JJavaError
+
+    from legate_pandas_spark.session import _CONF
+
+    jvm = spark._jvm
+    hadoop = spark._jsparkSession.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri())
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(root, hadoop)
+    assert manager.getClass().getName() == _CONF[CHECKPOINT_MANAGER]
+    entry = jvm.org.apache.hadoop.fs.Path(root, "0")
+
+    def write(data):
+        out = manager.createAtomic(entry, False)
+        out.write(bytearray(data))
+        out.close()
+
+    write(b"first writer")
+    with pytest.raises(Py4JJavaError, match="FileAlreadyExists"):
+        write(b"second writer")
+    assert (tmp_path / "0").read_bytes() == b"first writer"
+
+
 def test_windowed_distinct_users_matches_batch(spark, sf_dir, events_dir):
     """Streaming HLL distinct-user counts must equal the same batch
     aggregation (sketch merge is commutative, so batch vs available-now
