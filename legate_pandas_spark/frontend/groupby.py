@@ -34,6 +34,7 @@ _AGG_FNS = {
     "any": lambda c: F.bool_or(c.cast("boolean")),
     "all": lambda c: F.bool_and(c.cast("boolean")),
     "nunique": F.countDistinct,
+    "median": F.median,
     "first": F.first,
     "last": F.last,
 }
@@ -56,7 +57,7 @@ def _with_identity(op, expr):
     iv = _AGG_EMPTY_IDENTITY.get(op) if isinstance(op, str) else None
     return F.coalesce(expr, F.lit(iv)) if iv is not None else expr
 
-_NUMERIC_ONLY = {"sum", "mean", "avg", "var", "std", "prod", "product"}
+_NUMERIC_ONLY = {"sum", "mean", "avg", "var", "std", "prod", "product", "median"}
 
 
 def _notnull(keys) -> "F.Column":
@@ -250,15 +251,7 @@ class GroupBy:
         """Exact median per group (pandas). F.median is a per-group sort
         internally; at 100 TB prefer agg({col: 'approx_median'}) semantics via
         percentile_approx — kept exact here for pandas/oracle parity."""
-        dtypes = dict(self._df._sdf.dtypes)
-        exprs = [
-            F.median(F.col(c)).alias(c)
-            for c in self._df.columns
-            if c not in self._keys and is_numeric_spark_type(dtypes[c])
-        ]
-        if not exprs:
-            raise ValueError("no numeric columns for median")
-        return self._finish(self._df._sdf.groupBy(*self._keys).agg(*exprs))
+        return self._apply_named("median")
 
     def _positional_agg(self, first: bool) -> "DataFrame":
         from legate_pandas_spark.frontend.frame import ROW_ORDER
@@ -274,57 +267,45 @@ class GroupBy:
             exprs.append(pick(F.col(c), order).alias(c))
         return self._finish(sdf.groupBy(*self._keys).agg(*exprs))
 
-    def cumcount(self):
-        """0-based position of each row within its group (pandas
-        groupby.cumcount) — row_number window partitioned by the keys (parallel
-        per group, never a global window)."""
+    def _window(self, *frame, ascending: bool = True):
+        """The keyed row-order window (partitioned by the group keys —
+        parallel per group, never a global window), framed by ``frame``'s
+        rowsBetween bounds when given."""
         from pyspark.sql.window import Window
 
         from legate_pandas_spark.frontend.frame import ROW_ORDER
 
-        w = Window.partitionBy(*self._keys).orderBy(F.asc(ROW_ORDER))
-        expr = (F.row_number().over(w) - 1).cast("long")
+        order = F.asc(ROW_ORDER) if ascending else F.desc(ROW_ORDER)
+        w = Window.partitionBy(*self._keys).orderBy(order)
+        return w.rowsBetween(*frame) if frame else w
+
+    def cumcount(self):
+        """0-based position of each row within its group (pandas
+        groupby.cumcount)."""
+        expr = (F.row_number().over(self._window()) - 1).cast("long")
         return self._aligned(expr, "cumcount")
 
     def nth(self, n: int) -> "DataFrame":
         """The n-th row of each group in row order (pandas groupby.nth;
-        negative n counts from the end). One partitioned row_number window +
-        filter."""
-        from pyspark.sql.window import Window
-
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
-
-        sdf = self._df._ordered_sdf()
-        asc = n >= 0
-        target = n + 1 if asc else -n
-        order = F.asc(ROW_ORDER) if asc else F.desc(ROW_ORDER)
-        w = Window.partitionBy(*self._keys).orderBy(order)
-        out = (
-            sdf.withColumn("__nth__", F.row_number().over(w))
-            .filter(F.col("__nth__") == target)
-            .drop("__nth__")
-        )
-        return DataFrame(out, self._df._index)
+        negative n counts from the end)."""
+        return self._rows(lambda rn: rn == (n + 1 if n >= 0 else -n), n >= 0)
 
     def head(self, n: int = 5) -> "DataFrame":
-        """First n rows of each group (pandas groupby.head) — partitioned
-        row_number, parallel per group."""
-        return self._group_limit(n, first=True)
+        """First n rows of each group (pandas groupby.head)."""
+        return self._rows(lambda rn: rn <= n, True)
 
     def tail(self, n: int = 5) -> "DataFrame":
-        return self._group_limit(n, first=False)
+        return self._rows(lambda rn: rn <= n, False)
 
-    def _group_limit(self, n: int, first: bool) -> "DataFrame":
-        from pyspark.sql.window import Window
+    def _rows(self, keep, first: bool) -> "DataFrame":
+        """The rows whose keyed row_number (from the front, or the back)
+        passes ``keep`` — one partitioned window and a filter."""
+        from legate_pandas_spark.frontend.frame import DataFrame
 
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
-
-        sdf = self._df._ordered_sdf()
-        order = F.asc(ROW_ORDER) if first else F.desc(ROW_ORDER)
-        w = Window.partitionBy(*self._keys).orderBy(order)
         out = (
-            sdf.withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") <= n)
+            self._df._ordered_sdf()
+            .withColumn("__rn__", F.row_number().over(self._window(ascending=first)))
+            .filter(keep(F.col("__rn__")))
             .drop("__rn__")
         )
         return DataFrame(out, self._df._index)
@@ -353,22 +334,24 @@ class GroupBy:
 
         return Rolling(self._df, None, min_periods, self._keys)
 
-    def _over(self, fn, numeric: bool = False):
-        from pyspark.sql.window import Window
-
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
+    def _over(self, fn, numeric: bool = False, frame=()):
+        """``fn(column, keyed window)`` over every value column — the one
+        body of the per-row group ops (shift, diff, pct_change, cum*,
+        ffill/bfill). Keys, index columns and the row-order key pass through
+        unchanged (pandas moves values, not labels), and so do non-numeric
+        columns when ``numeric``."""
+        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame, _qcol
 
         sdf = self._df._ordered_sdf()
-        w = Window.partitionBy(*self._keys).orderBy(F.asc(ROW_ORDER))
+        w = self._window(*frame)
+        fixed = {*self._keys, *self._df._index, ROW_ORDER}
         dtypes = dict(sdf.dtypes)
-        sel = []
-        for c in sdf.columns:
-            if c in self._keys or c == ROW_ORDER:
-                sel.append(F.col(c))
-            elif not numeric or is_numeric_spark_type(dtypes[c]):
-                sel.append(fn(F.col(c), w).alias(c))
-            else:
-                sel.append(F.col(c))
+        sel = [
+            _qcol(c)
+            if c in fixed or (numeric and not is_numeric_spark_type(dtypes[c]))
+            else fn(_qcol(c), w).alias(c)
+            for c in sdf.columns
+        ]
         return DataFrame(sdf.select(*sel), self._df._index)
 
     # distributed cumulative ops: partitioned by group keys → scale path
@@ -445,33 +428,21 @@ class GroupBy:
         return self._cum(F.min)
 
     def _cum(self, fn):
+        """Running ``fn`` per group; null cells stay null (pandas skipna)."""
         from pyspark.sql.window import Window
 
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
-
-        sdf = self._df._ordered_sdf()
-        w = (
-            Window.partitionBy(*self._keys)
-            .orderBy(F.asc(ROW_ORDER))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        return self._over(
+            lambda c, w: F.when(c.isNotNull(), fn(c).over(w)),
+            numeric=True,
+            frame=(Window.unboundedPreceding, Window.currentRow),
         )
-        dtypes = dict(sdf.dtypes)
-        sel = []
-        for c in sdf.columns:
-            if c in self._keys or c == ROW_ORDER:
-                sel.append(F.col(c))
-            elif is_numeric_spark_type(dtypes[c]):
-                sel.append(fn(F.col(c)).over(w).alias(c))
-            else:
-                sel.append(F.col(c))
-        return DataFrame(sdf.select(*sel), self._df._index)
 
     # -------------------------------------------------- transform / filter / apply
     def transform(self, op: str):
         """pandas groupby.transform: broadcast a per-group aggregate back onto
         every row. String ops compile to an UNBOUNDED window partitioned by the
         group keys — pure Catalyst, no UDF, parallel per group (the scale path;
-        a callable would force the applyInPandas hop, use ``apply`` for that).
+        a callable takes the grouped pandas map, ``_transform_callable``).
         Result keeps the caller's row order and index; key columns are dropped
         (pandas contract)."""
         from pyspark.sql.window import Window
@@ -501,22 +472,40 @@ class GroupBy:
                 sel.append(F.when(notnull, expr).alias(c))
         return DataFrame(sdf.select(*sel), self._src._index)
 
+    def _sample_group(self, cols, op: str):
+        """A pandas sample of the first group's ``cols`` — the group whose
+        ``func`` output a grouped map infers its schema from
+        (schema must be group-invariant — Spark's own applyInPandas
+        contract). The sample is bounded: dtype inference does not need the
+        whole group, and a skewed key could otherwise OOM the driver."""
+        from legate_pandas_spark.frontend.frame import _qcol
+
+        sdf = self._df._ordered_sdf()
+        first = sdf.select(*[_qcol(k) for k in self._keys]).limit(1).collect()
+        if not first:
+            raise ValueError(f"{op} on empty frame")
+        cond = functools.reduce(
+            lambda a, b: a & b,
+            [_qcol(k).eqNullSafe(F.lit(first[0][k])) for k in self._keys],
+        )
+        sample = sdf.filter(cond).select(*[_qcol(c) for c in cols])
+        return sample.limit(10_000).toPandas()
+
     def _transform_callable(self, func) -> "DataFrame":
         """transform with a Python callable — the one shape built-ins can't
-        express, so it takes the Arrow-batched grouped-map hop (applyInPandas;
+        express, so it takes the grouped pandas map (``scan.grouped_map``;
         the string-op overload stays pure Catalyst). func sees each group's
         column as a pandas Series and must return a same-length array-like or
         a scalar (broadcast to the group, pandas transform semantics).
 
-        Scale: one shuffle on the group keys; each group is one Arrow batch.
-        Output dtypes are inferred by running func once on a sample group
-        driver-side (schema must be group-invariant — Spark's own
-        applyInPandas contract). Null-key rows come back as same-shape nulls
-        via a left join on the unique row-order key."""
+        Scale: one shuffle on hash buckets of the group keys; Python runs
+        once per bucket. Output dtypes are inferred by running func on a
+        sample group driver-side (``_sample_group``). Null-key rows come back
+        as same-shape nulls via a left join on the unique row-order key."""
         import numpy as np
-        import pandas as pd
 
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
+        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame, _qcol
+        from legate_pandas_spark.frontend.scan import grouped_map
 
         src_sdf = self._src._ordered_sdf()
         dtypes = dict(src_sdf.dtypes)
@@ -525,44 +514,20 @@ class GroupBy:
             for c in self._src.columns
             if c not in self._keys and is_numeric_spark_type(dtypes[c])
         ]
-        filtered = src_sdf.filter(_notnull(self._keys))
 
-        def _col_result(series: pd.Series, pdf_len: int):
-            r = func(series)
-            if np.isscalar(r) or r is None:
-                return [r] * pdf_len
-            return getattr(r, "values", r)
-
-        first = filtered.select(*self._keys).limit(1).collect()
-        if not first:
-            raise ValueError("transform on empty frame")
-        k0 = first[0]
-        cond = None
-        for k in self._keys:
-            c = F.col(k) == F.lit(k0[k])
-            cond = c if cond is None else (cond & c)
-        # bound the driver-side sample: output DTYPE inference doesn't need
-        # the whole group, and a skewed key could otherwise OOM the driver
-        sample = (
-            filtered.filter(cond).select(ROW_ORDER, *vis).limit(10_000).toPandas()
-        )
-        proto = pd.DataFrame({ROW_ORDER: sample[ROW_ORDER]})
-        for c in vis:
-            proto[c] = _col_result(sample[c], len(sample))
-        spark = src_sdf.sparkSession
-        schema = spark.createDataFrame(proto.head(1)).schema
-
-        def wrapper(pdf):
+        def per_group(pdf):
             out = pdf[[ROW_ORDER]].copy()
             for c in vis:
-                out[c] = _col_result(pdf[c], len(pdf))
+                r = func(pdf[c])
+                scalar = np.isscalar(r) or r is None
+                out[c] = [r] * len(pdf) if scalar else getattr(r, "values", r)
             return out
 
-        res = (
-            filtered.select(ROW_ORDER, *self._keys, *vis)
-            .groupBy(*self._keys)
-            .applyInPandas(wrapper, schema=schema)
-        )
+        sample = self._sample_group([ROW_ORDER, *vis], "transform")
+        schema = src_sdf.sparkSession.createDataFrame(per_group(sample).head(1)).schema
+        cols = [_qcol(c) for c in (ROW_ORDER, *self._keys, *vis)]
+        rows = src_sdf.filter(_notnull(self._keys)).select(*cols)
+        res = grouped_map(rows, self._keys, per_group, schema)
         base = src_sdf.select(
             *[F.col(c) for c in src_sdf.columns if c == ROW_ORDER or c in self._src._index]
         )
@@ -580,22 +545,13 @@ class GroupBy:
     def _fill(self, forward: bool) -> "DataFrame":
         from pyspark.sql.window import Window
 
-        from legate_pandas_spark.frontend.frame import ROW_ORDER, DataFrame
-
-        sdf = self._df._ordered_sdf()
-        base = Window.partitionBy(*self._keys).orderBy(F.asc(ROW_ORDER))
-        if forward:
-            w = base.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        else:
-            w = base.rowsBetween(Window.currentRow, Window.unboundedFollowing)
         pick = F.last if forward else F.first
-        sel = []
-        for c in sdf.columns:
-            if c in self._keys or c == ROW_ORDER or c in self._df._index:
-                sel.append(F.col(c))
-            else:
-                sel.append(pick(F.col(c), ignorenulls=True).over(w).alias(c))
-        return DataFrame(sdf.select(*sel), self._df._index)
+        frame = (
+            (Window.unboundedPreceding, Window.currentRow)
+            if forward
+            else (Window.currentRow, Window.unboundedFollowing)
+        )
+        return self._over(lambda c, w: pick(c, ignorenulls=True).over(w), frame=frame)
 
     def pct_change(self, periods: int = 1):
         """Per-group fractional change vs the previous row (pandas
@@ -616,67 +572,52 @@ class GroupBy:
     def filter(self, func):
         """pandas groupby.filter: keep the ROWS of groups where ``func(group
         subframe) -> bool``. The predicate is arbitrary Python, so this is the
-        Arrow-batched applyInPandas path (one Python hop per group); prefer
-        ``transform`` + boolean mask when the predicate is an aggregate
-        comparison."""
+        grouped pandas map (``scan.grouped_map``: one Python call per hash
+        bucket, ``func`` once per group); prefer ``transform`` + boolean mask
+        when the predicate is an aggregate comparison."""
         from legate_pandas_spark.frontend.frame import DataFrame
+        from legate_pandas_spark.frontend.scan import grouped_map
 
         sdf = self._df._ordered_sdf()
         vis = self._visible(sdf.columns)
 
-        def wrapper(pdf):
+        def keep(pdf):
             return pdf if bool(func(pdf[vis])) else pdf.iloc[0:0]
 
-        out = sdf.groupBy(*self._keys).applyInPandas(wrapper, schema=sdf.schema)
+        out = grouped_map(sdf, self._keys, keep, sdf.schema)
         return DataFrame(out, self._df._index)
 
     def apply(self, func):
-        """pandas groupby.apply for DataFrame-returning ``func``: grouped-map
-        applyInPandas. The output schema is inferred by running ``func`` on ONE
-        sample group driver-side (schema must be group-invariant — same
-        contract as Spark's own applyInPandas). Result is indexed by the group
-        keys."""
+        """pandas groupby.apply for DataFrame-returning ``func``: the grouped
+        pandas map (``scan.grouped_map``). The output schema is inferred by
+        running ``func`` on one sample group driver-side
+        (``_sample_group``). Result is indexed by the group keys."""
         import pandas as pd
 
         from legate_pandas_spark.frontend.frame import DataFrame
+        from legate_pandas_spark.frontend.scan import grouped_map
 
         sdf = self._df._ordered_sdf()
         vis = self._visible(sdf.columns)
-        first = sdf.select(*self._keys).limit(1).collect()
-        if not first:
-            raise ValueError("apply on empty frame")
-        k0 = first[0]
-        cond = None
-        for k in self._keys:
-            c = F.col(k) == F.lit(k0[k])
-            cond = c if cond is None else (cond & c)
-        # bounded sample — schema inference only; a skewed (dominant) group
-        # must not be collected whole to the driver
-        sample = sdf.filter(cond).select(*vis).limit(10_000).toPandas()
-        out0 = func(sample)
-        if not isinstance(out0, pd.DataFrame):
-            raise NotImplementedError(
-                "GroupBy.apply supports DataFrame-returning func; "
-                "use agg/transform for scalar reductions"
-            )
-        spark = sdf.sparkSession
-        proto = out0.head(1).copy()
-        for k in self._keys:
-            if k not in proto.columns:
-                proto.insert(0, k, [k0[k]] * len(proto))
-        schema = spark.createDataFrame(proto).schema
         keys = list(self._keys)
 
-        def wrapper(key, pdf):
-            out = func(pdf[vis].reset_index(drop=True))
+        def per_group(pdf):
+            out = func(pdf[vis])
+            if not isinstance(out, pd.DataFrame):
+                raise NotImplementedError(
+                    "GroupBy.apply supports DataFrame-returning func; "
+                    "use agg/transform for scalar reductions"
+                )
             out = out.copy()
-            for k, v in zip(keys, key):
+            for k in keys:
                 if k not in out.columns:
-                    out.insert(0, k, [v] * len(out))
+                    out.insert(0, k, [pdf[k].iloc[0]] * len(out))
             return out
 
-        res = sdf.groupBy(*self._keys).applyInPandas(wrapper, schema=schema)
-        return DataFrame(res, tuple(self._keys) if self._as_index else ())
+        sample = self._sample_group(vis, "apply")
+        schema = sdf.sparkSession.createDataFrame(per_group(sample).head(1)).schema
+        res = grouped_map(sdf, keys, per_group, schema)
+        return DataFrame(res, tuple(keys) if self._as_index else ())
 
     def ewm(self, alpha: float = None, com=None, span=None, halflife=None):
         """Per-group exponentially weighted accessor (pandas groupby.ewm;
@@ -725,26 +666,23 @@ class SeriesGroupBy:
 
     aggregate = agg  # pandas alias
 
-    def _named(self, op: str):
-        return self._gb.agg({self._col: op})
-
     def sum(self):
-        return self._named("sum")
+        return self.agg("sum")
 
     def mean(self):
-        return self._named("mean")
+        return self.agg("mean")
 
     def min(self):
-        return self._named("min")
+        return self.agg("min")
 
     def max(self):
-        return self._named("max")
+        return self.agg("max")
 
     def count(self):
-        return self._named("count")
+        return self.agg("count")
 
     def nunique(self):
-        return self._named("nunique")
+        return self.agg("nunique")
 
     def rank(self, method: str = "min", ascending: bool = True):
         """Rank within each group (pandas groupby.rank) — partitioned window."""
@@ -779,16 +717,9 @@ class SeriesGroupBy:
     def _cum(self, fn):
         from pyspark.sql.window import Window
 
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-        gb = self._gb
-        w = (
-            Window.partitionBy(*gb._keys)
-            .orderBy(F.asc(ROW_ORDER))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+        w = self._gb._window(Window.unboundedPreceding, Window.currentRow)
         expr = fn(F.col(self._col)).over(w)
-        return gb._aligned(F.when(F.col(self._col).isNotNull(), expr), self._col)
+        return self._gb._aligned(F.when(F.col(self._col).isNotNull(), expr), self._col)
 
     def cummax(self):
         """Per-group running max (pandas groupby.cummax; group-key-partitioned
@@ -801,14 +732,8 @@ class SeriesGroupBy:
     def diff(self, periods: int = 1):
         """Per-group difference vs the value ``periods`` rows back
         (lag window partitioned by the group keys)."""
-        from pyspark.sql.window import Window
-
-        from legate_pandas_spark.frontend.frame import ROW_ORDER
-
-        gb = self._gb
-        w = Window.partitionBy(*gb._keys).orderBy(F.asc(ROW_ORDER))
-        expr = F.col(self._col) - F.lag(F.col(self._col), periods).over(w)
-        return gb._aligned(expr, self._col)
+        expr = F.col(self._col) - F.lag(F.col(self._col), periods).over(self._gb._window())
+        return self._gb._aligned(expr, self._col)
 
     def idxmax(self):
         """Per-group index label (stored index) or global position (virtual

@@ -549,6 +549,69 @@ def _dotless(sdf, keys):
     )
 
 
+def _bucket_count(sdf) -> int:
+    """max(defaultParallelism, ⌈size estimate / AQE advisory partition
+    size⌉), so one bucket's pandas frame stays near one advisory partition.
+    The estimate is the optimized plan's ``stats()`` (planning, no job); its
+    unknown-size mark, ``spark.sql.defaultSizeInBytes`` (local data), counts
+    as 0, not as the largest possible input."""
+    spark = sdf.sparkSession
+    conf = spark._jsparkSession.sessionState().conf()
+    size = sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    advisory = conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES())
+    known = size if size < conf.defaultSizeInBytes() else 0
+    return max(spark.sparkContext.defaultParallelism, -(-known // advisory))
+
+
+def grouped_map(sdf, keys: list, fn, schema):
+    """Apply ``fn`` to every group of ``keys`` in ``sdf`` — the one grouped
+    map between Spark and pandas. ``fn`` gets one group's pandas frame (all
+    of ``sdf``'s columns under their own names, a fresh RangeIndex) and
+    returns a frame of ``schema``'s columns, as in ``applyInPandas``.
+
+    Python runs once per hash bucket, not once per group: rows go to
+    ``pmod(xxhash64(keys), B)`` buckets (``_bucket_count``), so a group never
+    spans two, and each bucket calls ``fn`` once per group under one pandas
+    ``groupby``. A floating key also groups on its is-null flag, because
+    Arrow turns null and NaN alike into NaN while Spark keeps them apart. The
+    buckets are shuffled by one ``repartition(defaultParallelism, bucket)``,
+    which AQE does not coalesce into one Python-heavy task, and which the
+    ``groupBy`` reuses. Dotted names cross as ``_dotless`` safe names."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    uniq = next(_seq)
+    names, bucket = sdf.columns, f"__gm_bucket_{uniq}__"
+    work, by, _ = _dotless(sdf, keys)
+    flags = {
+        f"__gm_null_{uniq}_{i}__": F.col(b).isNull()
+        for i, (k, b) in enumerate(zip(keys, by))
+        if isinstance(sdf.schema[k].dataType, (T.FloatType, T.DoubleType))
+    }
+    work = work.select(
+        "*",
+        *[c.alias(f) for f, c in flags.items()],
+        F.pmod(F.xxhash64(*by), F.lit(_bucket_count(sdf))).alias(bucket),
+    )
+    columns, groups, empty = [*names, *flags, bucket], [*keys, *flags], schema.fieldNames()
+
+    def per_bucket(pdf):
+        pdf.columns = columns
+        parts = [
+            fn(g[names].reset_index(drop=True))
+            for _, g in pdf.groupby(groups, dropna=False, sort=False)
+        ]
+        parts = [p for p in parts if len(p)]
+        return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(columns=empty)
+
+    return (
+        work.repartition(sdf.sparkSession.sparkContext.defaultParallelism, bucket)
+        .groupBy(bucket)
+        .applyInPandas(per_bucket, schema)
+    )
+
+
 def _window_stat(stat: str, src, arg, run, comoment):
     """(min_periods gate count, value) of one window statistic, written once
     over two primitives of the row's frame: ``run(partial, combine)``, the
@@ -612,7 +675,7 @@ def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: 
       (co)moments come from running Σx, Σy, Σxy.
 
     ``apply`` runs pandas' own rolling/expanding apply on each group (keys)
-    or ghost-augmented partition as one Arrow batch. A frame without a
+    or ghost-augmented partition through ``grouped_map``. A frame without a
     row-order key gets one here."""
     from pyspark.sql import types as T
 
@@ -650,7 +713,7 @@ def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: 
         func, raw = arg
         uniq = next(_seq)
         srcs = {f"__was_{uniq}_{i}__": c.cast("double") for i, c in enumerate(cols.values())}
-        work, by, restore = _dotless(sdf.select("*", *[c.alias(s) for s, c in srcs.items()]), by)
+        work = sdf.select("*", *[c.alias(s) for s, c in srcs.items()])
         schema = T.StructType(
             work.schema.fields + [T.StructField(o, T.DoubleType()) for o in cols]
         )
@@ -668,7 +731,7 @@ def window_columns(sdf, keys: list, cols: dict, window, min_periods: int, stat: 
                 pdf[o] = frame.apply(func, raw=raw)
             return pdf
 
-        out = restore(work.groupBy(*by).applyInPandas(fn, schema)).drop(*srcs)
+        out = grouped_map(work, by, fn, schema).drop(*srcs)
     else:
         carries = {}
         if w is not None:
@@ -869,9 +932,9 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
     Phase 1 emits one end-state row per (partition, group); the combine
     takes their exclusive prefix in partition order, per group; phase 2
     merges each row's local state with its run's carry, decayed by
-    b^{row+1}. With keys, the combine runs in the plan (grouped on the keys,
-    ≤ num_partitions rows per group — one giant skewed group still
-    parallelizes) and phase 2 cogroups rows and carries by partition,
+    b^{row+1}. With keys, the combine runs in the plan, one ``grouped_map``
+    over the keys (≤ num_partitions rows per group — one giant skewed group
+    still parallelizes), and phase 2 cogroups rows and carries by partition,
     matching keys null-safely in pandas; nothing is collected. Without keys,
     the same combine runs on the driver over the ≤ num_partitions collected
     states (measured cheaper than the in-plan form for one global group).
@@ -956,7 +1019,7 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
 
     states = work.groupBy(PID).applyInPandas(phase1, state_schema)
     if keys:
-        carries = states.groupBy(*keys).applyInPandas(combine, state_schema)
+        carries = grouped_map(states, keys, combine, state_schema)
         out = work.groupBy(PID).cogroup(carries.groupBy(PID)).applyInPandas(
             lambda rows, c: phase2(
                 rows.merge(c.drop(columns=[PID, DEC]), on=keys, how="left")

@@ -2091,13 +2091,15 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped-map Pandas UDF (applyInPandas): per-user z-score normalization
-    computed in pandas per group, Arrow-batched — the §2.9 grouped-apply escape
-    hatch, hash-checked against the equivalent window SQL. Prefer the pure
-    window expression in production (the oracle IS that plan); this query
-    exists to exercise and verify the UDF path itself."""
+    """Grouped pandas map: per-user z-score normalization computed in pandas
+    per group (``scan.grouped_map``: one Python call per hash bucket of
+    users) — the §2.9 grouped-apply escape hatch, hash-checked against the
+    equivalent window SQL. Prefer the pure window expression in production
+    (the oracle IS that plan); this query exists to exercise and verify the
+    UDF path itself."""
     from pyspark.sql.types import DoubleType
 
+    from legate_pandas_spark.frontend.scan import grouped_map
     from legate_pandas_spark.sources.tables import load_table as _lt
 
     ev = _lt(spark, sf_dir, "events").select("event_id", "user_id", "value")
@@ -2117,7 +2119,7 @@ def grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"event_id": pdf["event_id"], "user_id": pdf["user_id"], "zscore": z.round(4)}
         )
 
-    return ev.groupBy("user_id").applyInPandas(zscore, schema)
+    return grouped_map(ev, ["user_id"], zscore, schema)
 
 
 @query(

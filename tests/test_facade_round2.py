@@ -265,3 +265,14 @@ def test_series_indexers(spark):
     li = ldf.set_index("k")["v"]
     assert li.loc[20] == 2.0
     assert li.at[30] == 3.0
+
+
+@pytest.mark.parametrize("op", ["shift", "diff", "cumsum", "cummax", "ffill", "bfill"])
+def test_groupby_row_ops_keep_index_and_null_cells(spark, op):
+    """Per-row group ops move values, not index labels, and a running
+    aggregate leaves a null cell null (pandas skipna)."""
+    pdf = _pdf().set_index("y")
+    ldf = lps.from_pandas(_pdf(), spark=spark).set_index("y")
+    got = getattr(ldf.groupby("g"), op)().to_pandas()["x"]
+    want = getattr(pdf.groupby("g"), op)()["x"]
+    pd.testing.assert_series_equal(got, want, check_dtype=False, check_index_type=False)

@@ -300,3 +300,25 @@ def test_ewm_mean_with_dotted_column(spark):
     got = ldf.groupby("k").ewm(alpha=0.5).mean().to_pandas()["a.b"]
     want = DOTTED.groupby("k")["a.b"].transform(lambda x: x.ewm(alpha=0.5).mean())
     pd.testing.assert_series_equal(_series(got), _series(want), check_names=False)
+
+
+GROUPED_MAPS = {
+    "filter": lambda g: g.filter(lambda f: f["a.b"].sum() > 11.5),
+    "apply": lambda g: g.apply(lambda f: pd.DataFrame({"a.b": [f["a.b"].sum()], "n": [len(f)]})),
+    "transform": lambda g: g.transform(lambda s: s - s.mean()),
+}
+
+
+@pytest.mark.parametrize("op", sorted(GROUPED_MAPS))
+def test_groupby_map_with_dotted_column(spark, op):
+    """Every grouped pandas map crosses to pandas under safe names, so a
+    dotted value column resolves as itself, not as a struct field."""
+    got = GROUPED_MAPS[op](lps.from_pandas(DOTTED, spark=spark).groupby("k")).to_pandas()
+    want = GROUPED_MAPS[op](DOTTED.groupby("k"))
+    if op == "apply":
+        got = got.reset_index().sort_values("k")
+        want = want.reset_index(level=0).sort_values("k")
+    cols = list(want.columns)
+    pd.testing.assert_frame_equal(
+        _series(got[cols]), _series(want), check_dtype=False
+    )
