@@ -552,16 +552,40 @@ def _dotless(sdf, keys):
 def _bucket_count(sdf) -> int:
     """max(defaultParallelism, ⌈size estimate / AQE advisory partition
     size⌉), so one bucket's pandas frame stays near one advisory partition.
-    The estimate is the optimized plan's ``stats()`` (planning, no job); its
-    unknown-size mark, ``spark.sql.defaultSizeInBytes`` (local data), counts
-    as 0, not as the largest possible input."""
+    The estimate is the optimized plan's ``stats()`` (planning, no job),
+    capped at the sum of its leaves' estimates: without CBO a join's estimate
+    is the product of its sides' (a 20k-row frame merged with a 97-row key
+    table gave thousands of buckets for 97 groups). The unknown-size mark,
+    ``spark.sql.defaultSizeInBytes`` (local data), counts as 0, not as the
+    largest possible input, at the root and at each leaf."""
     spark = sdf.sparkSession
     conf = spark._jsparkSession.sessionState().conf()
-    size = sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    plan = sdf._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
     sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
     advisory = conf.getConf(sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES())
-    known = size if size < conf.defaultSizeInBytes() else 0
-    return max(spark.sparkContext.defaultParallelism, -(-known // advisory))
+    unknown = conf.defaultSizeInBytes()
+
+    def known(node):
+        size = node.stats().sizeInBytes()
+        return size if size < unknown else 0
+
+    leaf_sum = sum(known(leaves.apply(i)) for i in range(leaves.size()))
+    size = min(known(plan), leaf_sum)
+    return max(spark.sparkContext.defaultParallelism, -(-size // advisory))
+
+
+def _null_flags(sdf, keys: list, prefix: str) -> dict:
+    """{flag name: is-null Column} for each floating key of ``sdf``. Arrow
+    turns null and NaN alike into NaN, while Spark keeps them two groups, so
+    a pandas ``groupby`` over these keys groups on their flags too."""
+    from pyspark.sql import types as T
+
+    return {
+        f"{prefix}_{i}__": F.col(k).isNull()
+        for i, k in enumerate(keys)
+        if isinstance(sdf.schema[k].dataType, (T.FloatType, T.DoubleType))
+    }
 
 
 def grouped_map(sdf, keys: list, fn, schema):
@@ -579,16 +603,11 @@ def grouped_map(sdf, keys: list, fn, schema):
     which AQE does not coalesce into one Python-heavy task, and which the
     ``groupBy`` reuses. Dotted names cross as ``_dotless`` safe names."""
     import pandas as pd
-    from pyspark.sql import types as T
 
     uniq = next(_seq)
     names, bucket = sdf.columns, f"__gm_bucket_{uniq}__"
     work, by, _ = _dotless(sdf, keys)
-    flags = {
-        f"__gm_null_{uniq}_{i}__": F.col(b).isNull()
-        for i, (k, b) in enumerate(zip(keys, by))
-        if isinstance(sdf.schema[k].dataType, (T.FloatType, T.DoubleType))
-    }
+    flags = _null_flags(work, by, f"__gm_null_{uniq}")
     work = work.select(
         "*",
         *[c.alias(f) for f, c in flags.items()],
@@ -964,6 +983,9 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
         sdf.select("*", *[c.alias(s) for s, c in named.items()], _pid().alias(PID)),
         keys,
     )
+    flags = _null_flags(work, keys, f"__ewnull_{uniq}")
+    work = work.select("*", *[c.alias(f) for f, c in flags.items()])
+    keys = [*keys, *flags]  # runs split on a floating key's is-null flag too
     work = work.repartition(sdf.sparkSession.sparkContext.defaultParallelism, PID)
     state = {
         s: [f"__ew{m}_{uniq}_{i}__" for m in letters] for i, s in enumerate(srcs)
@@ -1033,4 +1055,4 @@ def ewm_columns(sdf, keys: list, cols: dict, alpha: float, stat: str):
             lambda rows: phase2(rows.assign(**carry[rows[PID].iloc[0]])),
             out_schema,
         )
-    return restore(out).drop(PID, *srcs)
+    return restore(out).drop(PID, *srcs, *flags)
